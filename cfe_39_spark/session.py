@@ -9,6 +9,7 @@ spark-submit --conf values; nothing in the engine depends on local mode.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -19,8 +20,62 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 # GC-thrashes (and at batch sizes ~GB, OOMs) long before 32 cores are
 # busy, because every concurrent task buffers its shuffle + parquet
 # writer blocks in the same heap.  On a real cluster this is spark-submit
-# --executor-memory instead.
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+# --executor-memory instead.  The default is a quarter of the memory the
+# host has free (MemAvailable), between 1 GiB and 24 GiB: a fixed large
+# default cannot even be mapped on a small host with no swap.
+DRIVER_MEM_MIN_MB = 1024
+DRIVER_MEM_MAX_MB = 24 * 1024
+
+
+@functools.lru_cache(maxsize=1)
+def _mem_available_kib() -> int | None:
+    """``MemAvailable`` in KiB, or None where /proc/meminfo has no such line.
+    Read once per process, so the heap size and the pre-touch decision of
+    one session always agree."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
+
+
+def default_driver_mem(mem_available_kib: int | None) -> str:
+    """Driver heap for a host with ``mem_available_kib`` free: a quarter of
+    it, clamped to [1 GiB, 24 GiB]; the cap when the amount is unknown."""
+    if mem_available_kib is None:
+        return f"{DRIVER_MEM_MAX_MB}m"
+    mb = mem_available_kib // 1024 // 4
+    return f"{max(DRIVER_MEM_MIN_MB, min(DRIVER_MEM_MAX_MB, mb))}m"
+
+
+def _heap_mb(mem: str) -> int:
+    """A ``spark.driver.memory`` size (``512m``, ``4g``; no unit = MiB) in MiB."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if not m:
+        raise ValueError(f"bad JVM memory size {mem!r}")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024, "": 1}
+    return int(int(m.group(1)) * scale[m.group(2)])
+
+
+def pretouch_fits(mem: str, mem_available_kib: int | None) -> bool:
+    """Whether a heap of ``mem`` may be committed and pre-touched at JVM
+    start: only when it takes at most half the free memory, so the
+    pre-touch never pushes a swapless host into the OOM killer."""
+    if mem_available_kib is None:
+        return False
+    return _heap_mb(mem) <= mem_available_kib // 1024 // 2
+
+
+def driver_mem() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else sized to this host."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(
+        _mem_available_kib()
+    )
+
+
 # Parquet writer block size: the default 128 MB row-group buffer x 32
 # concurrent write tasks is 4 GB of heap just for writers; our bucketed
 # data files are ~16 MB anyway.  16 MB row groups also keep table scans
@@ -33,7 +88,7 @@ def engine_conf(builder: SparkSession.Builder, shuffle_partitions: int | None = 
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     return (
         builder.config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.driver.memory", DRIVER_MEM)
+        .config("spark.driver.memory", driver_mem())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.hadoop.parquet.block.size", PARQUET_BLOCK)
         # Arrow-batched Python <-> JVM transfer: required so pandas UDFs /
@@ -121,14 +176,17 @@ def _java_opts(master: str) -> str:
         return ""
     n = os.cpu_count() if m.group(1) == "*" else int(m.group(1))
     gc = max(2, min(n, 16))
+    opts = f"-XX:ParallelGCThreads={gc} -XX:ConcGCThreads={max(1, gc // 4)}"
     # -Xms=-Xmx + AlwaysPreTouch: this hypervisor backs guest pages
     # lazily at ~40µs/fault single-threaded (≈0.1 GB/s) but pre-touches in
     # parallel at ~9 GB/s, so faulting the whole heap once at startup
     # removes multi-second mid-run stalls whenever the heap would grow.
-    return (
-        f"-XX:ParallelGCThreads={gc} -XX:ConcGCThreads={max(1, gc // 4)} "
-        f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch"
-    )
+    # Only for a heap that fits: committing more than the host has free
+    # kills the JVM at start.
+    mem = driver_mem()
+    if pretouch_fits(mem, _mem_available_kib()):
+        opts += f" -Xms{mem} -XX:+AlwaysPreTouch"
+    return opts
 
 
 def _executor_java_opts(master: str) -> str:

@@ -38,8 +38,9 @@ table), as in the reference's one-consumer-group-per-output design.
 Scale notes (the 100 TB story):
   * Key-partitioned layout (O2): every data file belongs to exactly one of
     ``n_buckets`` hash buckets of ``doc_id`` (pmod(xxhash64(doc_id), B),
-    computed in Spark at write AND at merge planning — one hash function,
-    one source of truth).  MERGE touches only the buckets the batch hashes
+    computed in Spark at write AND at merge planning, and by its
+    driver-side twin ``bucket_of`` at lookup — one hash function, one
+    source of truth).  MERGE touches only the buckets the batch hashes
     to, so per-trigger cost is O(touched data), not O(table).
   * Manifest pruning (O3): per-file min/max doc_id lets the merge planner
     skip files inside a touched bucket whose key range cannot intersect the
@@ -165,6 +166,59 @@ class CommitConflictError(RuntimeError):
 def bucket_expr(doc_id_col: str, n_buckets: int):
     """The one true doc_id -> bucket function (computed JVM-side)."""
     return F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int (the reference
+    algorithm; Spark's ``XXH64.hashUnsafeBytes`` computes the same)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i : i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        k = _xxh_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h ^ k, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(doc_id: str, n_buckets: int) -> int:
+    """``bucket_expr``'s driver-side twin: Spark's ``xxhash64`` (seed 42,
+    over the UTF-8 bytes) read as a signed long, then ``pmod``.  Lets a
+    read plan its buckets without a Spark job; the two must never drift
+    (pinned by a property test against Spark)."""
+    h = _xxh64(doc_id.encode("utf-8"), 42)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def lww_resolve(df: DataFrame) -> DataFrame:
@@ -2251,7 +2305,15 @@ class SequenceTable:
         snapshot's latest schema — or an explicit ``user_schema`` (the merge
         pipeline passes the batch's *evolved* schema so old files are
         null-filled/cast on the fly; Iceberg-style read-side evolution —
-        old files are never rewritten)."""
+        old files are never rewritten).
+
+        Each schema-version group is read with the storage schema
+        registered for that version, so planning starts no Spark job (no
+        footer-inference pass).  A registered column a file lacks reads as
+        null: bookkeeping columns added after a file group was written
+        (e.g. ``_last_src_partition`` landed after v1 tables existed)
+        null-fill like any other read-side evolution, and downstream LWW
+        ordering coalesces the nulls to the legacy sentinel."""
         target = storage_schema(user_schema or self.user_schema(snap))
         if not files:
             return spark.createDataFrame([], target)
@@ -2263,16 +2325,11 @@ class SequenceTable:
         parts = []
         for ver, paths in sorted(by_ver.items()):
             plan = self._column_plan(snap, target, ver)
-            df = spark.read.parquet(*paths)
-            # intersect with the files' PHYSICAL columns: bookkeeping cols
-            # added after a file group was written (e.g. _last_src_partition
-            # landed after v1 tables existed) must null-fill like any other
-            # read-side schema evolution, not crash the select — downstream
-            # LWW ordering coalesces the nulls to the legacy sentinel
-            phys = set(df.columns)
+            stored_schema = storage_schema(_schema_from_json(snap["schemas"][str(ver)]))
+            df = spark.read.schema(stored_schema).parquet(*paths)
             cols = [
                 F.col(stored).cast(f.dataType).alias(f.name)
-                if stored is not None and stored in phys
+                if stored is not None
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for (_, stored), f in zip(plan, target.fields)
             ]
@@ -2398,8 +2455,10 @@ class SequenceTable:
         metadata only:
 
         1. **bucket pruning** — a key lives in exactly one bucket; the
-           bucket ids are computed with the SAME Spark hash the write path
-           uses (a K-row local job, so write/read hashing can never drift);
+           bucket ids are computed on the driver by ``bucket_of``, the
+           pure-Python twin of the write path's Spark hash (a property
+           test pins the two together, so write/read hashing cannot
+           drift);
         2. **min/max skipping** — within the kept buckets, a file is read
            only if some key falls inside its footer ``[min_doc_id,
            max_doc_id]`` range (files with no stats are kept — correctness
@@ -2417,14 +2476,8 @@ class SequenceTable:
                 [f.name for f in self.user_schema(snap).fields]
             )
         nb = snap["n_buckets"]
-        rows = spark.createDataFrame(
-            [(d,) for d in set(doc_ids)], "doc_id string"
-        ).select("doc_id", bucket_expr("doc_id", nb).alias("_b"))
-        key_bucket = {r["doc_id"]: r["_b"] for r in rows.collect()}
+        key_bucket = {d: bucket_of(d, nb) for d in set(doc_ids)}
         wanted = set(key_bucket.values())
-        by_bucket: dict[int, list[str]] = {}
-        for d, b in key_bucket.items():
-            by_bucket.setdefault(b, []).append(d)
         keep = []
         ids = sorted(key_bucket)
         # segment-level pruning first (bucket set + key range on the refs),
@@ -3397,6 +3450,46 @@ class BranchHandle(SequenceTable):
         # preserve the TTL envelope (max_age_s/created_at) across head moves
         b[self.branch_name] = dict(cur, sid=sid) if isinstance(cur, dict) else sid
         self._write_refs(dict(refs, branches=b))
+
+    def _walk_unmarked(
+        self, bid: str
+    ) -> "tuple[int | None, list[tuple[str, int]]]":
+        """The base walk, bounded by the fork: only snapshots CREATED ON
+        this branch (strictly above its fork) are the branch's to heal.
+        The fork and everything below it are history another line owns,
+        and an unmarked fork is not necessarily a crash window — a main
+        rollback deletes the markers of the span it rolls back, and that
+        span may hold this branch's fork.  Healing it from here would
+        resurrect batch ids the rollback forgot, so a redelivery to main
+        would no-op instead of applying.  An unmarked fork is therefore
+        healed only when main's own walk reaches it (main's crash-window
+        tip suffix); otherwise the walk stops there."""
+        fork = self._ref_fork(
+            self._read_refs().get("branches", {}).get(self.branch_name)
+        )
+        if fork is None:
+            return super()._walk_unmarked(bid)
+        found: int | None = None
+        unmarked: list[tuple[str, int]] = []
+        sid: int | None = self.latest_snapshot_id()
+        while sid is not None:
+            s = self.snapshot(sid)
+            if self._read_marker(s["batch_id"]) == s["snapshot_id"]:
+                break  # fully recorded; everything below is too
+            if sid == fork:
+                _, main_unmarked = SequenceTable(self.root)._walk_unmarked(bid)
+                main_sids = [s2 for _, s2 in main_unmarked]
+                if fork in main_sids:
+                    for b2, s2 in main_unmarked[main_sids.index(fork):]:
+                        unmarked.append((b2, s2))
+                        if b2 == bid:
+                            found = s2
+                break
+            unmarked.append((s["batch_id"], s["snapshot_id"]))
+            if s["batch_id"] == bid:
+                found = s["snapshot_id"]
+            sid = s["parent_id"]
+        return found, unmarked
 
     def _heal_markers(self, unmarked: list[tuple[str, int]]) -> None:
         # markers only: the batches log records MAIN pointer swaps, and a

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 from pyspark.sql import SparkSession
 
@@ -72,7 +73,7 @@ def run_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(log_dir)
     )
-    seen = {"n": 0}
+    seen = {"n": 0, "last": -1}
 
     def _apply(df, batch_id: int) -> None:
         res = apply_batch(spark, table, df, batch_id, lww_strategy=lww_strategy,
@@ -80,6 +81,7 @@ def run_stream(
                           quarantine_dir=quarantine_dir)
         write_lineage(table.root, res)
         seen["n"] += 1
+        seen["last"] = batch_id
         if stop_after_batches is not None and seen["n"] >= stop_after_batches:
             raise RuntimeError("simulated crash (stop_after_batches)")
 
@@ -105,6 +107,16 @@ def run_stream(
             # then stop cleanly (graceful — unlike the simulated crash)
             while q.isActive and seen["n"] < max_batches:
                 q.awaitTermination(0.2)
+            # foreachBatch returns before the trigger commits and reports
+            # its progress: stopping in that window loses the last
+            # trigger's progress event, so wait (bounded) for it first
+            deadline = time.monotonic() + 10.0
+            while (
+                q.isActive
+                and time.monotonic() < deadline
+                and getattr(q.lastProgress, "batchId", -1) < seen["last"]
+            ):
+                q.awaitTermination(0.1)
             if q.isActive:
                 q.stop()
             q.awaitTermination()
@@ -126,8 +138,6 @@ def _drain_metrics(table_root: str, n_batches: int, crashed: bool) -> None:
     complete metrics trail.  Best-effort on simulated crashes."""
     if n_batches == 0:
         return
-    import time
-
     d = metrics_dir(table_root)
     deadline = time.monotonic() + (2.0 if crashed else 10.0)
     while time.monotonic() < deadline:

@@ -3,9 +3,12 @@ min/max file skipping, answers identical to a full read."""
 
 import glob
 
+from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import functions as F
+
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
-from cfe_39_spark.sources.table import SequenceTable
+from cfe_39_spark.sources.table import SequenceTable, _xxh64, bucket_expr, bucket_of
 
 
 def _setup(spark, tmp_path, n_buckets=8):
@@ -158,3 +161,61 @@ def test_scan_range_mixed_specs(spark, tmp_path):
     }
     got = {r["doc_id"]: r.asDict() for r in t.scan_range(spark, lo, hi).collect()}
     assert got == exp
+
+
+# ---------------------------------------------------------------------- #
+# the driver-side bucket hash must equal the write path's Spark hash
+# ---------------------------------------------------------------------- #
+N_BUCKETS = (1, 4, 7, 1024)
+
+# UTF-8 byte lengths around every XXH64 branch: the 4-byte tail, the
+# 8-byte lanes and the 32-byte stripes (1-, 2-, 3- and 4-byte characters)
+_BOUNDARY_KEYS = [
+    "", "a", "abc", "abcd", "abcde", "a" * 7, "a" * 8, "a" * 9,
+    "a" * 31, "a" * 32, "a" * 33, "a" * 63, "a" * 64, "a" * 65,
+    "é", "é" * 2, "é" * 4, "é" * 16, "é" * 17, "中" * 11, "中文键" * 4,
+    "😀", "😀" * 8, "😀" * 9, "doc-000001", "\x00", "\x00" * 33,
+]
+
+
+def _assert_driver_hash_matches_spark(spark, keys):
+    df = spark.createDataFrame([(k,) for k in keys], "doc_id string")
+    rows = df.select(
+        "doc_id",
+        F.xxhash64("doc_id").alias("h"),
+        *[bucket_expr("doc_id", n).alias(f"b{n}") for n in N_BUCKETS],
+    ).collect()
+    for r in rows:
+        h = _xxh64(r["doc_id"].encode("utf-8"), 42)
+        assert h - (1 << 64) * (h >> 63) == r["h"], r["doc_id"]
+        for n in N_BUCKETS:
+            assert bucket_of(r["doc_id"], n) == r[f"b{n}"], (r["doc_id"], n)
+
+
+def test_bucket_of_matches_spark_at_xxh64_boundaries(spark):
+    _assert_driver_hash_matches_spark(spark, _BOUNDARY_KEYS)
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    keys=st.lists(
+        st.one_of(
+            st.text(max_size=80),
+            # ASCII keys whose byte length sweeps the 4/8/32-byte branches
+            st.text(alphabet="abcxyz0123-_", min_size=28, max_size=72),
+            # multi-byte-only keys: char count != byte length
+            st.text(alphabet="éß中文キー😀🚀", max_size=24),
+        ),
+        min_size=1,
+        max_size=50,
+    )
+)
+def test_bucket_of_matches_spark_property(spark, keys):
+    """``lookup`` plans its buckets with ``bucket_of`` on the driver while
+    every writer buckets with ``bucket_expr`` in Spark: the two must agree
+    on every key, or a lookup silently misses rows."""
+    _assert_driver_hash_matches_spark(spark, keys)
