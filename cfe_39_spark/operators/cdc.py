@@ -22,13 +22,15 @@ re-slicing, duplicate delivery, intra-batch shuffling and parallelism
 level — the properties the replay tests assert.
 
 Scale notes:
-  * Dedup (C1) and LWW (C2) reduce to a NARROW-COLUMN hash aggregation
-    (doc_id, event_time, offset only) + a broadcast join that fetches the
-    winning payloads without ever shuffling token arrays through the agg
-    (default 'bcast_join' strategy; 'max_by' single-agg and the spec's
-    'salted_window' C3 form stay selectable and property-equal).  The
-    narrow agg's map-side partial combine is the skew defusal: a hot
-    doc_id collapses to ~1 row per map task *before* the shuffle.
+  * Dedup (C1) and LWW (C2) are ONE hash aggregation,
+    ``max_by(struct(*cols), struct(event_time, offset, src_partition))``
+    (``lww_pick``, the same helper read-time ``lww_resolve`` uses).  Its
+    map-side partial combine is the skew defusal (C3): a hot doc_id
+    collapses to one row per map task *before* the shuffle, so no salting
+    pass is needed.  On a 4-core host (``local[2]``, 2k-4k-event triggers,
+    perfbench) a steady fused trigger runs 3 Spark jobs with this plan; the
+    narrow-agg + broadcast-join plan it replaced ran 5 and cost 13-14% more
+    work CPU per commit, on the Zipf-keyed workload as on the uniform one.
   * The MERGE join (C5) is key-unique on both sides by construction
     (post-LWW batch x one-row-per-key table slice), so no join skew exists
     to defuse; AQE broadcasts the batch side when it is small.
@@ -45,7 +47,7 @@ from dataclasses import dataclass, field
 
 import sys
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..functions.tokens import n_tok_expr, validate_tokens_arrow
 from ..schema import ALLOWED_WIDENINGS, BOOKKEEPING_COLS, CDC_META_COLS
@@ -57,6 +59,7 @@ from ..sources.table import (
     bucket_expr,
     changes_as_events,
     has_deltas,
+    lww_pick,
     lww_resolve,
 )
 
@@ -102,52 +105,7 @@ class ApplyResult:
     noop: bool = False
     wall_ms: int = 0
     per_partition: list[dict] = field(default_factory=list)
-    lww_strategy_used: str = ""
     events_quarantined: int = 0
-
-
-# Broadcast budget for the 'auto' LWW strategy: above this many distinct
-# keys per trigger, the (key -> winning pair) map is too big to broadcast
-# and 'auto' falls back to the single-agg max_by plan.  ~100 B/key JVM-side
-# => the default caps the broadcast near 200 MB.  Env-overridable so a
-# deployment can align it with spark.sql.autoBroadcastJoinThreshold.
-BCAST_KEY_BUDGET = int(os.environ.get("CFE39_BCAST_KEY_BUDGET", "2000000"))
-
-# 'auto' feedback for the fused one-job path: last observed distinct-key
-# count per table root (the fused path has no pre-plan stats job to measure
-# with, so trigger N+1 plans from trigger N's observation — trigger sizing
-# is stable under a maxOffsetsPerTrigger-style source, which is what makes
-# feedback control the right shape there).
-_LAST_DISTINCT_KEYS: dict[str, int] = {}
-
-# bounded parent-walk depth when seeding the feedback map from committed
-# lineage at process start (maintenance commits — compaction, DDL,
-# rollback — sit between apply commits and carry no distinct_keys)
-_SEED_WALK_DEPTH = 8
-
-
-def _seed_last_distinct_keys(table: SequenceTable) -> "int | None":
-    """Process-start seed for the fused path's 'auto' guard: the last
-    committed apply lineage's ``distinct_keys`` (a bounded walk from the
-    tip — maintenance commits in between carry none).  Before this seed
-    existed, a restarted stream's FIRST fused trigger defaulted to
-    bcast_join with zero information, so one mis-sized trigger could blow
-    the very broadcast the budget guard exists to prevent; with no
-    committed observation either (fresh table), the caller must fall back
-    to max_by — correct at any key count, never OOM."""
-    try:
-        sid: "int | None" = table.latest_snapshot_id()
-        for _ in range(_SEED_WALK_DEPTH):
-            if sid is None:
-                return None
-            s = table.snapshot(sid)
-            dk = (s.get("lineage") or {}).get("distinct_keys")
-            if dk is not None:
-                return int(dk)
-            sid = s["parent_id"]
-    except Exception:  # noqa: BLE001 — a seed probe must never fail an apply
-        return None
-    return None
 
 
 def _lex_gt(b_et, b_off, b_sp, t_et, t_off, t_sp):
@@ -168,99 +126,17 @@ def _lex_gt(b_et, b_off, b_sp, t_et, t_off, t_sp):
 # ------------------------------------------------------------------ #
 # C1 + C2 + C3: dedup -> last-writer-wins, skew-defused
 # ------------------------------------------------------------------ #
-def lww_winners(
-    events: DataFrame,
-    strategy: str = "bcast_join",
-    n_salts: int = 8,
-    keys_source: DataFrame | None = None,
-) -> DataFrame:
-    """Reduce a raw event batch to exactly one winning event per doc_id.
+def lww_winners(events: DataFrame) -> DataFrame:
+    """Reduce a raw event batch to exactly one winning event per doc_id:
+    the greatest ``(event_time, offset, src_partition)`` triple wins.
 
-    strategy='bcast_join' (default for wide payloads — the engine's hot
-    path): two-phase winner selection that never shuffles the token
-    payload through the aggregation.  Phase 1 computes each key's winning
-    ordering pair from a COLUMN-PRUNED scan (`doc_id`, `event_time`,
-    `offset` only — the token arrays never leave the parquet footer for
-    this job); phase 2 broadcast-joins the (key → winning pair) map back
-    against the full batch, so winner payloads flow scan → bucket write
-    with zero agg shuffle.  Measured: the max_by form moves the whole
-    batch payload (~1 KB/row) through one shuffle; this form moves 3
-    narrow columns plus one ~O(distinct keys) broadcast — on the 4M-event
-    bench log that is ~4 GB less memory-bus traffic per trigger, which is
-    exactly the non-scaling term on a bandwidth-shared host.  Broadcast
-    size is O(distinct keys in the batch) — bounded by trigger sizing
-    (maxOffsetsPerTrigger), NOT by table size; for narrow-payload/huge-
-    key-cardinality batches prefer 'max_by'.
-
-    strategy='max_by': single hash aggregation, max_by(struct(*),
-    (event_time, offset)).  Its map-side partial combine IS the skew
-    defusal: every map task reduces its slice of a hot key to one row
-    before the shuffle — the same mechanism as explicit salting with
-    salt = map-partition id, minus one extra shuffle.  Benchmarked 2.5x
-    faster than the window form on both uniform and hot-key logs.
-
-    strategy='salted_window' (the spec's explicit form, kept selectable
-    and property-tested): two-phase row_number — phase 1 partitions by
-    (doc_id, salt) so a hot key's events spread across ``n_salts`` tasks;
-    phase 2 ranks the <=n_salts survivors per key, a provably skew-free
-    window.
-
-    ``keys_source``: alternative relation to derive phase-1 keys from in
-    'bcast_join' mode (the fused apply path hangs its ``observe()`` here
-    so lineage metrics ride the narrow scan exactly once — attaching it
-    to ``events`` would double-count through the self-join).
-    """
-    # C1 (dedup by (doc_id, offset)) is subsumed: redelivered copies are
-    # identical rows and tie on the full (event_time, offset,
-    # src_partition) ordering key, so whichever copy the reduction keeps,
-    # the output row is the same — an explicit dropDuplicates would only
-    # add a full extra shuffle.  DIFFERENT events tying on (event_time,
-    # offset) across source partitions break by src_partition, so every
-    # strategy picks the same winner on every run.
-    cols = events.columns
-    if strategy == "bcast_join":
-        ks = keys_source if keys_source is not None else events
-        keys = (
-            ks.groupBy("doc_id")
-            .agg(F.max(F.struct("event_time", "offset", "src_partition")).alias("_k"))
-            .select(F.col("doc_id").alias("_kdoc"), "_k")
-        )
-        joined = events.join(
-            F.broadcast(keys),
-            (F.col("doc_id") == F.col("_kdoc"))
-            & (F.struct("event_time", "offset", "src_partition") == F.col("_k")),
-        ).select(cols)
-        # redelivered copies of the winning event tie exactly and both
-        # survive the join: collapse them (identical rows, so the kept
-        # copy is deterministic by value) — an O(winners) shuffle
-        return joined.dropDuplicates(["doc_id"])
-    if strategy == "max_by":
-        packed = F.max_by(F.struct(*cols), F.struct("event_time", "offset", "src_partition"))
-        return (
-            events.groupBy("doc_id")
-            .agg(packed.alias("_w"))
-            .select([F.col(f"_w.{c}").alias(c) for c in cols])
-        )
-    # salted two-phase window (C3): salt on (doc_id, offset) hash
-    salted = events.withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id", "offset"), F.lit(n_salts)).cast("int")
-    )
-    w1 = Window.partitionBy("doc_id", "_salt").orderBy(
-        F.col("event_time").desc(), F.col("offset").desc(), F.col("src_partition").desc()
-    )
-    phase1 = (
-        salted.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_salt")
-    )
-    w2 = Window.partitionBy("doc_id").orderBy(
-        F.col("event_time").desc(), F.col("offset").desc(), F.col("src_partition").desc()
-    )
-    return (
-        phase1.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    C1 (dedup by (doc_id, offset)) is subsumed: redelivered copies are
+    identical rows and tie on the full ordering triple, so whichever copy
+    the aggregation keeps, the output row is the same — an explicit
+    dropDuplicates would only add a shuffle.  DIFFERENT events tying on
+    (event_time, offset) across source partitions break by src_partition,
+    so the same winner is picked on every run."""
+    return lww_pick(events, "event_time", "offset", "src_partition")
 
 
 # ------------------------------------------------------------------ #
@@ -367,28 +243,13 @@ def apply_batch(
     table: SequenceTable,
     events: DataFrame,
     batch_id: str | int,
-    lww_strategy: str = "auto",
-    n_salts: int = 8,
     mode: str = "mor",
     compact_threshold: int | None = 16,
     known_partitions: list[int] | None = None,
-    bcast_key_budget: int | None = None,
     quarantine_dir: str | None = None,
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the table, exactly once.
-
-    ``lww_strategy='auto'`` (default) guards the bcast_join hot path's one
-    foot-gun — its broadcast is O(distinct keys in the batch), fine under
-    trigger sizing but fatal if a mis-sized trigger ships a huge unique-key
-    batch.  auto picks bcast_join while the measured distinct-key count is
-    within ``bcast_key_budget`` (default ``BCAST_KEY_BUDGET``) and falls
-    back to the single-agg max_by plan above it (property-equal — the
-    strategies are tested equivalent).  The measurement is free: the
-    unfused path piggybacks ``approx_count_distinct`` on the stats job it
-    already runs (per-partition sum = a safe upper bound); the fused
-    one-job path has no pre-plan job, so it plans trigger N+1 from trigger
-    N's observed count (first trigger: optimistic bcast_join).  The chosen
-    plan is reported as ``ApplyResult.lww_strategy_used``.
+    Winners per key come from ``lww_winners`` (one ``max_by`` aggregation).
 
     ``known_partitions``: the source's partition ids when the caller knows
     them (a Kafka consumer always does — topic partition count).  With the
@@ -439,32 +300,15 @@ def apply_batch(
     # ---- C7: reconcile schemas (metadata-only; no data rewrite) ----
     new_schema, changes = evolve_schema(table_schema, events.schema)
 
-    budget = BCAST_KEY_BUDGET if bcast_key_budget is None else bcast_key_budget
-
     if mode == "mor" and known_partitions is not None:
         # fused-stats fast path: lineage stats + batch schema_version are
         # observed DURING the delta-write scan — no separate stats job
-        strategy = lww_strategy
-        if strategy == "auto":
-            last = _LAST_DISTINCT_KEYS.get(table.root)
-            if last is None:
-                # process start / first trigger: seed from committed
-                # lineage; still nothing known (fresh table) -> max_by,
-                # the plan that is correct at ANY key count (the unfused
-                # path measures before deciding; the fused path must not
-                # gamble a broadcast on zero information)
-                last = _seed_last_distinct_keys(table)
-                if last is not None:
-                    _LAST_DISTINCT_KEYS[table.root] = last
-            strategy = "max_by" if last is None or last > budget else "bcast_join"
         parts_hint = sorted(set(known_partitions))
         obs_ev = Observation()
         events_obs = events.observe(
             obs_ev,
             F.max("schema_version").alias("sv"),
             F.count(F.lit(1)).alias("n_total"),
-            # feeds next trigger's 'auto' decision (observed, zero-job)
-            F.approx_count_distinct("doc_id").alias("dk"),
             *[
                 a
                 for p in parts_hint
@@ -479,18 +323,11 @@ def apply_batch(
                 )
             ],
         )
-        if strategy == "bcast_join":
-            # metrics ride the NARROW keys scan (executed exactly once as
-            # the broadcast build side); the payload side stays metrics-free
-            winners = lww_winners(events, strategy, n_salts,
-                                  keys_source=events_obs)
-        else:
-            winners = lww_winners(events_obs, strategy, n_salts)
         return _apply_mor(
-            spark, table, winners, bid, snap, new_schema, None, None,
-            None, t0, compact_threshold,
+            spark, table, lww_winners(events_obs), bid, snap, new_schema,
+            None, None, None, t0, compact_threshold,
             changes=changes, obs_ev=obs_ev, parts_hint=parts_hint, events=events,
-            strategy_used=strategy, quarantined=quarantined,
+            quarantined=quarantined,
         )
 
     # ---- C6: ONE column-pruned job for lineage stats + the batch's max
@@ -504,9 +341,6 @@ def apply_batch(
             F.max("offset").alias("max_offset"),
             F.count(F.lit(1)).alias("events_in"),
             F.max("schema_version").alias("sv"),
-            # rides the same column-pruned scan: per-partition distinct
-            # keys, summed below into an upper bound for the 'auto' guard
-            F.approx_count_distinct("doc_id").alias("dk"),
         )
         .collect()
     )
@@ -516,16 +350,8 @@ def apply_batch(
     sv, register = _register_version(snap, batch_sv, new_schema, changes)
     user_cols = [f.name for f in new_schema.fields]
 
-    strategy = lww_strategy
-    if strategy == "auto":
-        # per-partition sum over-counts keys seen on several partitions —
-        # a safe (conservative-toward-max_by) bound for a broadcast guard
-        dk_bound = int(sum(r["dk"] for r in prog))
-        _LAST_DISTINCT_KEYS[table.root] = dk_bound
-        strategy = "bcast_join" if dk_bound <= budget else "max_by"
-
     # ---- C1+C2+C3: one winner per key ----
-    winners = lww_winners(events, strategy, n_salts)
+    winners = lww_winners(events)
 
     if mode == "mor":
         # no persist: MOR consumes winners exactly once (the delta-write
@@ -533,8 +359,7 @@ def apply_batch(
         # a full token-payload copy would only add memory traffic
         return _apply_mor(
             spark, table, winners, bid, snap, new_schema, sv,
-            register, prog, t0, compact_threshold, strategy_used=strategy,
-            quarantined=quarantined,
+            register, prog, t0, compact_threshold, quarantined=quarantined,
         )
 
     # persisted: reused by the merge-planner collect, the C4 join and the
@@ -673,10 +498,6 @@ def apply_batch(
         "schema_changes": changes,
         "per_partition": per_partition,
         "wall_ms": wall_ms,
-        # last observed distinct-key count: seeds the fused path's 'auto'
-        # broadcast guard across process restarts (None when the strategy
-        # was forced, so no observation happened this batch)
-        "distinct_keys": _LAST_DISTINCT_KEYS.get(table.root),
     }
     # COW planned its rewrite against `snap`; a concurrent commit means the
     # merge itself is stale — fail loudly, caller redoes the batch
@@ -691,7 +512,7 @@ def apply_batch(
         expected_parent_id=snap["snapshot_id"],
     )
     return ApplyResult(bid, sid, rows_applied, events_in, wall_ms=wall_ms,
-                       per_partition=per_partition, lww_strategy_used=strategy)
+                       per_partition=per_partition)
 
 
 def _apply_mor(
@@ -710,7 +531,6 @@ def _apply_mor(
     obs_ev: Observation | None = None,
     parts_hint: list[int] | None = None,
     events: DataFrame | None = None,
-    strategy_used: str = "",
     quarantined: int = 0,
 ) -> ApplyResult:
     """Merge-on-read apply: stamp the winners with bookkeeping columns and
@@ -786,8 +606,6 @@ def _apply_mor(
         # fused-stats path: lineage stats and the batch's max
         # schema_version were observed during the write scan above
         got_ev = obs_ev.get
-        # feedback for the NEXT trigger's 'auto' broadcast guard
-        _LAST_DISTINCT_KEYS[table.root] = int(got_ev["dk"] or 0)
         sv, register = _register_version(
             snap, int(got_ev["sv"] or 0), new_schema, changes
         )
@@ -837,8 +655,6 @@ def _apply_mor(
         "schema_changes": [],
         "per_partition": per_partition,
         "wall_ms": wall_ms,
-        # see the COW lineage note: restart seed for the 'auto' guard
-        "distinct_keys": _LAST_DISTINCT_KEYS.get(table.root),
     }
     # Optimistic-concurrency commit loop: a MOR apply's delta files are
     # parent-independent, so a conflicting concurrent commit only requires
@@ -915,8 +731,7 @@ def _apply_mor(
             table.compact(spark, buckets=offenders)
     return ApplyResult(
         bid, sid, rows_applied, events_in, wall_ms=wall_ms,
-        per_partition=per_partition, lww_strategy_used=strategy_used,
-        events_quarantined=quarantined,
+        per_partition=per_partition, events_quarantined=quarantined,
     )
 
 

@@ -221,6 +221,25 @@ def bucket_of(doc_id: str, n_buckets: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
+def lww_pick(df: DataFrame, event_time, offset, src_partition) -> DataFrame:
+    """One row per doc_id: the row whose ``(event_time, offset,
+    src_partition)`` ordering triple is greatest — the engine's single LWW
+    rule, shared by write-side winner selection (``lww_winners``) and
+    read-side resolution (``lww_resolve``).  One ``max_by`` hash
+    aggregation: its map-side partial combine collapses a hot key to one
+    row per map task before the shuffle, which is the skew defusal."""
+    cols = df.columns
+    packed = F.max_by(
+        F.struct(*[F.col(c) for c in cols]),
+        F.struct(event_time, offset, src_partition),
+    )
+    return (
+        df.groupBy("doc_id")
+        .agg(packed.alias("_w"))
+        .select([F.col(f"_w.{c}").alias(c) for c in cols])
+    )
+
+
 def lww_resolve(df: DataFrame) -> DataFrame:
     """Collapse a multi-version row set (base + merge-on-read deltas) to one
     winner per doc_id by the engine's single ordering rule: max
@@ -228,23 +247,13 @@ def lww_resolve(df: DataFrame) -> DataFrame:
     triple (event_time, offset, src_partition) the write side orders by,
     so read-time resolution of merge-on-read deltas picks the exact row a
     copy-on-write apply would have kept, whatever batch slicing produced
-    the deltas.  One hash aggregation with map-side
-    partial combine — a hot key collapses per map task before the shuffle,
-    so resolution inherits the skew story of the write path."""
-    cols = df.columns
-    packed = F.max_by(
-        F.struct(*[F.col(c) for c in cols]),
-        F.struct(
-            "_last_event_time",
-            "_last_offset",
-            # legacy rows without the persisted tiebreak sort lowest
-            F.coalesce(F.col("_last_src_partition"), F.lit(-1)).alias("_sp"),
-        ),
-    )
-    return (
-        df.groupBy("doc_id")
-        .agg(packed.alias("_w"))
-        .select([F.col(f"_w.{c}").alias(c) for c in cols])
+    the deltas."""
+    return lww_pick(
+        df,
+        "_last_event_time",
+        "_last_offset",
+        # legacy rows without the persisted tiebreak sort lowest
+        F.coalesce(F.col("_last_src_partition"), F.lit(-1)).alias("_sp"),
     )
 
 
@@ -3300,6 +3309,9 @@ class SequenceTable:
         # descriptors carry the full file set by manifest reference).
         chain_ids = {s["snapshot_id"] for s in chain}
         pinned_ids = keep_ids | {s["snapshot_id"] for s in tagged}
+        # forks reached by a walk whose descriptor an earlier pass already
+        # expired: nothing left to pin but their idempotency marker
+        marker_only: set[int] = set()
         for bval in self._read_refs().get("branches", {}).values():
             sid: int | None = self._ref_sid(bval)
             fork = self._ref_fork(bval)
@@ -3314,6 +3326,11 @@ class SequenceTable:
                 try:
                     s = self.snapshot(sid)
                 except FileNotFoundError:
+                    # the fork was still on main's chain when a previous
+                    # pass expired its descriptor; detached now, it is the
+                    # branch's base and keeps its marker
+                    if sid == fork:
+                        marker_only.add(sid)
                     break
                 tagged.append(s)
                 pinned_ids.add(sid)
@@ -3329,7 +3346,7 @@ class SequenceTable:
             # that ran without the flag), and the matching log lines.  The
             # recovery invariant survives: the tip is always in ``keep``,
             # so the log's newest entry still names the last commit.
-            keep_sids = {s["snapshot_id"] for s in pinned}
+            keep_sids = {s["snapshot_id"] for s in pinned} | marker_only
             bdir = os.path.join(self.meta_dir, "batches")
             for f in fs.listdir(bdir):
                 p = os.path.join(bdir, f)

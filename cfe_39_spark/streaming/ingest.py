@@ -46,7 +46,6 @@ def run_stream(
     checkpoint: str,
     max_files_per_trigger: int = 4,
     available_now: bool = True,
-    lww_strategy: str = "bcast_join",
     stop_after_batches: int | None = None,
     known_partitions: list[int] | None = None,
     processing_time: str | None = None,
@@ -76,7 +75,7 @@ def run_stream(
     seen = {"n": 0, "last": -1}
 
     def _apply(df, batch_id: int) -> None:
-        res = apply_batch(spark, table, df, batch_id, lww_strategy=lww_strategy,
+        res = apply_batch(spark, table, df, batch_id,
                           known_partitions=known_partitions,
                           quarantine_dir=quarantine_dir)
         write_lineage(table.root, res)
@@ -153,7 +152,6 @@ def replay(
     spark: SparkSession,
     log_dir: str,
     table: SequenceTable,
-    lww_strategy: str = "bcast_join",
     segments_per_batch: int = 1,
     quarantine_dir: str | None = None,
 ) -> list:
@@ -170,7 +168,7 @@ def replay(
         df = spark.read.schema(spark.read.parquet(chunk[-1]).schema).parquet(*chunk)
         res = apply_batch(
             spark, table, df, batch_id=f"replay-{i // segments_per_batch}",
-            lww_strategy=lww_strategy, quarantine_dir=quarantine_dir,
+            quarantine_dir=quarantine_dir,
         )
         write_lineage(table.root, res)
         results.append(res)

@@ -11,7 +11,7 @@ import pytest
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import BranchHandle, SequenceTable
+from cfe_39_spark.sources.table import PARENT_FILES, BranchHandle, SequenceTable
 
 from .util import assert_state_equal
 
@@ -123,6 +123,24 @@ def test_branch_head_on_main_chain_survives_expiry(spark, tmp_path):
     b = table.branch("wip")
     r = apply_batch(spark, b, spark.read.parquet(segs[1]), batch_id="wip-1")
     assert not r.noop
+
+
+def test_forget_pass_keeps_marker_of_detached_fork(tmp_path):
+    """Regression (Spark-free): a staged branch's fork that an earlier
+    expiry pass detached from main keeps its idempotency marker through a
+    later ``forget_batches`` pass.  The first pass expires the fork's
+    descriptor (the fork is still on that pass's chain); the second pass's
+    pin walk then finds no descriptor at the fork and used to stop without
+    pinning it, so the marker GC erased ``__create__``."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    t.create_branch("a")
+    t.branch("a").commit("c0", [], PARENT_FILES)
+    t.commit("m0", [], PARENT_FILES)
+    t.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
+    t.expire_snapshots(keep_last=1, orphan_grace_s=0.0, forget_batches=True)
+    assert t.find_batch("__create__") == 1
 
 
 def test_refs_share_one_namespace_and_handle_guards(spark, tmp_path):

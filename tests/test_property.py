@@ -26,7 +26,9 @@ configs = st.fixed_dictionaries(
 )
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+# "mor_fused": MOR with ``known_partitions`` — the fused-stats path the
+# Kafka source and perfbench drive
+@pytest.mark.parametrize("mode", ["mor", "cow", "mor_fused"])
 @settings(
     max_examples=4,
     deadline=None,
@@ -42,5 +44,9 @@ def test_random_log_matches_oracle(spark, tmp_path_factory, mode, cfg_kw):
     for i, seg in enumerate(
         sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
     ):
-        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i, mode=mode)
+        apply_batch(
+            spark, table, spark.read.parquet(seg), batch_id=i,
+            mode="mor" if mode == "mor_fused" else mode,
+            known_partitions=range(cfg.n_partitions) if mode == "mor_fused" else None,
+        )
     assert_state_equal(table.read(spark), fx["expected"])
