@@ -27,6 +27,12 @@ def n_tok_expr(tokens: str | Column = "tokens") -> Column:
     return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(F.size(c).cast("int"))
 
 
+def n_tok_sql(tokens: str) -> str:
+    """``n_tok_expr`` as a SQL expression over the SQL expression
+    ``tokens`` (for plans built with ``selectExpr``)."""
+    return f"CASE WHEN ({tokens}) IS NULL THEN NULL ELSE CAST(size({tokens}) AS INT) END"
+
+
 def tokens_valid_expr(tokens: str = "tokens", vocab_size: int = 50257) -> Column:
     """True iff every token id is in [0, vocab).  Higher-order ``forall``
     runs JVM-side inside codegen — no UDF."""

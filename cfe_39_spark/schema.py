@@ -67,3 +67,50 @@ ALLOWED_WIDENINGS = {
 def storage_schema(user_schema: T.StructType) -> T.StructType:
     """User schema + bookkeeping columns = what data files actually hold."""
     return T.StructType(list(user_schema.fields) + BOOKKEEPING_FIELDS)
+
+
+# --- SQL rendering -----------------------------------------------------------
+# Hot-path plans are built from SQL expression strings (``selectExpr``,
+# ``F.expr``): each PySpark Column call is a py4j round trip or more, and a
+# per-column Column plan costs more driver time than the action it feeds.
+# Every name and type spliced into such a string goes through the helpers
+# below.
+def sql_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backticks, embedded backticks
+    doubled — safe for any column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """``dt`` as Spark SQL type text that parses back to the same
+    ``DataType`` (``CAST(x AS <text>)``).  Unlike ``simpleString()`` it
+    quotes struct field names and keeps NOT NULL fields.  SQL has no
+    spelling for arrays of non-null elements or maps of non-null values,
+    so those raise instead of silently changing the type."""
+    if isinstance(dt, T.StructType):
+        fields = ", ".join(
+            f"{sql_ident(f.name)}: {sql_type(f.dataType)}"
+            + ("" if f.nullable else " NOT NULL")
+            for f in dt.fields
+        )
+        return f"STRUCT<{fields}>"
+    if isinstance(dt, T.ArrayType):
+        if not dt.containsNull:
+            raise ValueError(f"no SQL spelling for {dt!r} (non-null elements)")
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        if not dt.valueContainsNull:
+            raise ValueError(f"no SQL spelling for {dt!r} (non-null values)")
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def sql_cast(name: str | None, from_type: T.DataType | None, to_type: T.DataType) -> str:
+    """SQL for column ``name`` (of type ``from_type``) read as ``to_type``:
+    a bare reference when the types already match, a CAST otherwise, and
+    a typed NULL when ``name`` is None (no such column)."""
+    if name is None:
+        return f"CAST(NULL AS {sql_type(to_type)})"
+    if from_type == to_type:
+        return sql_ident(name)
+    return f"CAST({sql_ident(name)} AS {sql_type(to_type)})"

@@ -69,6 +69,8 @@ from ..schema import (
     BOOKKEEPING_FIELDS,
     CDC_META_COLS,
     SEQUENCE_SCHEMA_V1,
+    sql_cast,
+    sql_ident,
     storage_schema,
 )
 from . import fs
@@ -165,7 +167,7 @@ class CommitConflictError(RuntimeError):
 
 def bucket_expr(doc_id_col: str, n_buckets: int):
     """The one true doc_id -> bucket function (computed JVM-side)."""
-    return F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64({sql_ident(doc_id_col)}), {int(n_buckets)}) AS INT)")
 
 
 _M64 = (1 << 64) - 1
@@ -221,22 +223,24 @@ def bucket_of(doc_id: str, n_buckets: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
-def lww_pick(df: DataFrame, event_time, offset, src_partition) -> DataFrame:
+def lww_pick(df: DataFrame, event_time: str, offset: str, src_partition: str) -> DataFrame:
     """One row per doc_id: the row whose ``(event_time, offset,
     src_partition)`` ordering triple is greatest — the engine's single LWW
     rule, shared by write-side winner selection (``lww_winners``) and
-    read-side resolution (``lww_resolve``).  One ``max_by`` hash
-    aggregation: its map-side partial combine collapses a hot key to one
-    row per map task before the shuffle, which is the skew defusal."""
-    cols = df.columns
-    packed = F.max_by(
-        F.struct(*[F.col(c) for c in cols]),
-        F.struct(event_time, offset, src_partition),
-    )
+    read-side resolution (``lww_resolve``).  The triple is given as SQL
+    expressions.  One ``max_by`` hash aggregation: its map-side partial
+    combine collapses a hot key to one row per map task before the
+    shuffle, which is the skew defusal."""
+    cols = ", ".join(sql_ident(c) for c in df.columns)
     return (
         df.groupBy("doc_id")
-        .agg(packed.alias("_w"))
-        .select([F.col(f"_w.{c}").alias(c) for c in cols])
+        .agg(
+            F.expr(
+                f"max_by(struct({cols}), "
+                f"struct({event_time}, {offset}, {src_partition})) AS _w"
+            )
+        )
+        .select("_w.*")
     )
 
 
@@ -253,8 +257,14 @@ def lww_resolve(df: DataFrame) -> DataFrame:
         "_last_event_time",
         "_last_offset",
         # legacy rows without the persisted tiebreak sort lowest
-        F.coalesce(F.col("_last_src_partition"), F.lit(-1)).alias("_sp"),
+        "coalesce(_last_src_partition, -1) AS _sp",
     )
+
+
+def _live_rows(state: DataFrame, user_cols: list[str]) -> DataFrame:
+    """The user-facing projection of resolved state: live rows, user
+    columns only."""
+    return state.filter("NOT _deleted").selectExpr(*map(sql_ident, user_cols))
 
 
 def changes_as_events(changes: DataFrame) -> DataFrame:
@@ -2335,14 +2345,15 @@ class SequenceTable:
         for ver, paths in sorted(by_ver.items()):
             plan = self._column_plan(snap, target, ver)
             stored_schema = storage_schema(_schema_from_json(snap["schemas"][str(ver)]))
-            df = spark.read.schema(stored_schema).parquet(*paths)
-            cols = [
-                F.col(stored).cast(f.dataType).alias(f.name)
-                if stored is not None
-                else F.lit(None).cast(f.dataType).alias(f.name)
+            stored_types = {f.name: f.dataType for f in stored_schema.fields}
+            exprs = [
+                f"{sql_cast(stored, stored_types.get(stored), f.dataType)} "
+                f"AS {sql_ident(f.name)}"
                 for (_, stored), f in zip(plan, target.fields)
             ]
-            parts.append(df.select(cols))
+            parts.append(
+                spark.read.schema(stored_schema).parquet(*paths).selectExpr(*exprs)
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -2424,11 +2435,7 @@ class SequenceTable:
         snap = self.snapshot(snapshot_id)
         user_cols = [f.name for f in self.user_schema(snap).fields]
         if min_event_time is None:
-            return (
-                self.read_state(spark, snapshot_id)
-                .filter(~F.col("_deleted"))
-                .select(user_cols)
-            )
+            return _live_rows(self.read_state(spark, snapshot_id), user_cols)
         micros = _bound_micros(min_event_time)
         kept = self._files_min_event_time(snap, micros)
         # dirty = buckets with a DELTA among the KEPT files (read_state's
@@ -2448,12 +2455,8 @@ class SequenceTable:
             state = lww_resolve(self._read_files(spark, snap, dirty)).unionByName(
                 state
             )
-        return (
-            state.filter(
-                F.col("_last_event_time") >= F.timestamp_micros(F.lit(micros))
-            )
-            .filter(~F.col("_deleted"))
-            .select(user_cols)
+        return _live_rows(
+            state.filter(f"_last_event_time >= timestamp_micros({micros})"), user_cols
         )
 
     def lookup(
@@ -2507,10 +2510,8 @@ class SequenceTable:
                 keep.append(e)
         user_cols = [f.name for f in self.user_schema(snap).fields]
         state = lww_resolve(self._read_files(spark, snap, keep))
-        return (
-            state.filter(F.col("doc_id").isin(list(set(doc_ids))))
-            .filter(~F.col("_deleted"))
-            .select(user_cols)
+        return _live_rows(
+            state.filter(F.col("doc_id").isin(list(set(doc_ids)))), user_cols
         )
 
     def scan_range(
@@ -2557,10 +2558,8 @@ class SequenceTable:
                 state
             )
         user_cols = [f.name for f in self.user_schema(snap).fields]
-        return (
-            state.filter(F.col("doc_id").between(F.lit(lo), F.lit(hi)))
-            .filter(~F.col("_deleted"))
-            .select(user_cols)
+        return _live_rows(
+            state.filter(F.col("doc_id").between(F.lit(lo), F.lit(hi))), user_cols
         )
 
     # ------------------------------------------------------------------ #
@@ -2668,12 +2667,14 @@ class SequenceTable:
                 continue
             df = self._read_files(spark, target, entries, user_schema=self.user_schema(target))
             parts.append(
-                df.withColumn("_commit_snapshot_id", F.lit(s["snapshot_id"]).cast("long"))
-                .withColumn("_commit_batch_id", F.lit(s["batch_id"]))
-                # rows are reconciled to the TARGET snapshot's schema above,
-                # so that is the version a re-emitted event must carry
-                .withColumn(
-                    "_schema_version", F.lit(target["schema_version"]).cast("int")
+                df.select(
+                    "*",
+                    F.expr(f"CAST({int(s['snapshot_id'])} AS BIGINT) AS _commit_snapshot_id"),
+                    F.lit(s["batch_id"]).alias("_commit_batch_id"),
+                    # rows are reconciled to the TARGET snapshot's schema
+                    # above, so that is the version a re-emitted event must
+                    # carry
+                    F.expr(f"CAST({int(target['schema_version'])} AS INT) AS _schema_version"),
                 )
             )
         if not parts:
@@ -2692,9 +2693,8 @@ class SequenceTable:
             out = out.unionByName(p)
         if net:
             out = lww_resolve(out)
-        return out.withColumn(
-            "_change_type",
-            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),
+        return out.select(
+            "*", F.expr("CASE WHEN _deleted THEN 'delete' ELSE 'upsert' END AS _change_type")
         )
 
     def read_changelog(

@@ -9,12 +9,12 @@ footers, so two things must hold:
   its ``schema_version`` (a drift would read a column as null, or fail
   the scan, where footer inference used to paper over it);
 * the payoff: ``lookup``, ``read``, ``scan_range`` and ``read_changes``
-  start no Spark job before the caller's action.
+  start no Spark job before the caller's action, and planning a lookup
+  costs a bounded number of py4j round trips.
 """
 
 import glob
 import os
-import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F, types as T
@@ -25,6 +25,8 @@ from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.operators.dml import delete_where, merge_into, update_where
 from cfe_39_spark.schema import SEQUENCE_SCHEMA_V1, storage_schema
 from cfe_39_spark.sources.table import SequenceTable, _schema_from_json
+
+from .util import jobs_started, py4j_round_trips
 
 
 def _setup(spark, tmp_path, n_segments):
@@ -107,20 +109,6 @@ def test_every_writer_honours_the_registered_schema(spark, tmp_path):
     assert t.read(spark).groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
-def _jobs_started(spark, fn):
-    """``fn()`` and the number of Spark jobs it started."""
-    sc = spark.sparkContext
-    group = f"read-plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store through the async bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_reads_plan_without_spark_jobs(spark, tmp_path):
     fx, t, segs = _setup(spark, tmp_path, n_segments=3)
     first = t.latest_snapshot_id()
@@ -136,10 +124,17 @@ def test_reads_plan_without_spark_jobs(spark, tmp_path):
         ("scan_range", lambda: t.scan_range(spark, keys[0], keys[-1])),
         ("read_changes", lambda: t.read_changes(spark, from_snapshot_id=first)),
     ]:
-        df, jobs = _jobs_started(spark, plan)
+        df, jobs = jobs_started(spark, plan)
         assert jobs == 0, (name, jobs)
         assert df.columns  # the plan is analysed, not deferred
 
-    rows, jobs = _jobs_started(spark, lambda: t.lookup(spark, keys).collect())
+    rows, jobs = jobs_started(spark, lambda: t.lookup(spark, keys).collect())
     assert len(rows) == 10
     assert jobs <= 2
+
+    # the plan is built from SQL strings, not one Column chain per column
+    # (each Column call costs several py4j round trips)
+    _, trips = py4j_round_trips(spark, lambda: t.lookup(spark, keys))
+    # measured: 141; per-column Column chains made 956
+    assert trips <= 210, trips
+

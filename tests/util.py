@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import threading
+import uuid
+
 import numpy as np
 import pandas as pd
+import py4j.clientserver
 
 
 def assert_state_equal(spark_df, expected: pd.DataFrame) -> None:
@@ -30,3 +34,42 @@ def assert_state_equal(spark_df, expected: pd.DataFrame) -> None:
             pd.testing.assert_series_equal(
                 g, e, check_names=False, check_dtype=False, obj=f"column {col}"
             )
+
+
+def jobs_started(spark, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"job-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_round_trips(spark, fn):
+    """``fn()`` and the number of py4j commands its thread sent to the JVM
+    while it ran (each one is a blocking Python->JVM round trip).  The
+    counter wraps ``ClientServerConnection.send_command`` only for the
+    duration of ``fn``.  Commands from other threads are not counted:
+    py4j's finalizer thread sends the JVM-side deletes of freed proxies
+    whenever the garbage collector gets to them, not as part of ``fn``."""
+    conn = py4j.clientserver.ClientServerConnection
+    orig = conn.send_command
+    me = threading.get_ident()
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += threading.get_ident() == me
+        return orig(self, command)
+
+    conn.send_command = counting
+    try:
+        out = fn()
+    finally:
+        conn.send_command = orig
+    return out, n
