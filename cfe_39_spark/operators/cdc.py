@@ -22,10 +22,12 @@ re-slicing, duplicate delivery, intra-batch shuffling and parallelism
 level — the properties the replay tests assert.
 
 Scale notes:
-  * Dedup (C1) and LWW (C2) are ONE hash aggregation,
+  * Dedup (C1) and LWW (C2) are ONE aggregation,
     ``max_by(struct(*cols), struct(event_time, offset, src_partition))``
-    (``lww_pick``, the same helper read-time ``lww_resolve`` uses).  Its
-    map-side partial combine is the skew defusal (C3): a hot doc_id
+    (``lww_pick``, the same helper read-time ``lww_resolve`` uses),
+    executed as a partial + final ``SortAggregate`` (a struct buffer is
+    not hash-aggregatable).  Its map-side partial combine is the skew
+    defusal (C3): a hot doc_id
     collapses to one row per map task *before* the shuffle, so no salting
     pass is needed.  On a 4-core host (``local[2]``, 2k-4k-event triggers,
     perfbench) a steady fused trigger runs 3 Spark jobs with this plan; the

@@ -81,6 +81,13 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal: single quotes, with ``\\``
+    and ``'`` backslash-escaped — safe for any string (the parser's default
+    escape processing turns both back into the original characters)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def sql_type(dt: T.DataType) -> str:
     """``dt`` as Spark SQL type text that parses back to the same
     ``DataType`` (``CAST(x AS <text>)``).  Unlike ``simpleString()`` it

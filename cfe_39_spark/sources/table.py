@@ -71,6 +71,7 @@ from ..schema import (
     SEQUENCE_SCHEMA_V1,
     sql_cast,
     sql_ident,
+    sql_str,
     storage_schema,
 )
 from . import fs
@@ -228,9 +229,12 @@ def lww_pick(df: DataFrame, event_time: str, offset: str, src_partition: str) ->
     src_partition)`` ordering triple is greatest — the engine's single LWW
     rule, shared by write-side winner selection (``lww_winners``) and
     read-side resolution (``lww_resolve``).  The triple is given as SQL
-    expressions.  One ``max_by`` hash aggregation: its map-side partial
-    combine collapses a hot key to one row per map task before the
-    shuffle, which is the skew defusal."""
+    expressions.  One ``max_by`` aggregation, executed as a
+    ``SortAggregate`` (its struct buffer is not hash-aggregatable): the
+    partial aggregate sorts each map task's rows by key and collapses a
+    hot key to one row per map task before the shuffle, which is the skew
+    defusal.  Every input row pays that sort, so callers filter the rows
+    they do not need before this, not after."""
     cols = ", ".join(sql_ident(c) for c in df.columns)
     return (
         df.groupBy("doc_id")
@@ -2478,9 +2482,15 @@ class SequenceTable:
 
         All surviving files of a key's bucket are read, so every MOR
         version of the key is present and ``lww_resolve`` returns the same
-        winner a full ``read`` would.  At 10^10 rows / 1024 buckets a
-        10-key lookup touches ~10 buckets' worth of files — the serving
-        path a CDC validator needs next to the scan path.
+        winner a full ``read`` would.  The key predicate is applied to the
+        file rows BEFORE resolution (every version of a key carries the
+        same ``doc_id``, so pre-filtering picks the same winner as
+        post-filtering): it reaches the parquet scan as a pushed ``In``
+        filter and only the keys' versions enter the resolving sort and
+        shuffle, not every row of the kept files.  At 10^10 rows / 1024
+        buckets a 10-key lookup touches ~10 buckets' worth of files and
+        resolves only the keys' rows — the serving path a CDC validator
+        needs next to the scan path.
         """
         snap = self.snapshot(snapshot_id)
         if not doc_ids:
@@ -2509,10 +2519,9 @@ class SequenceTable:
             if any(e["min_doc_id"] <= d <= e["max_doc_id"] for d in cand):
                 keep.append(e)
         user_cols = [f.name for f in self.user_schema(snap).fields]
-        state = lww_resolve(self._read_files(spark, snap, keep))
-        return _live_rows(
-            state.filter(F.col("doc_id").isin(list(set(doc_ids)))), user_cols
-        )
+        in_keys = f"doc_id IN ({', '.join(map(sql_str, ids))})"
+        state = lww_resolve(self._read_files(spark, snap, keep).filter(in_keys))
+        return _live_rows(state, user_cols)
 
     def scan_range(
         self,
@@ -2527,15 +2536,16 @@ class SequenceTable:
         buckets, so unlike ``lookup`` there is no bucket pruning; the
         skipping layers here are the footer ``[min_doc_id, max_doc_id]``
         per file (tight when the table has a ``sort_order``) and, inside
-        kept files, parquet row-group stats via the pushed-down BETWEEN.
+        kept files, parquet row-group stats via the BETWEEN pushed into
+        every scan, clean and dirty files alike.
 
         Sound under MOR for the same reason ``lookup`` is: every version
         of an in-range key lives in a file whose range contains the key
-        (hence intersects [lo, hi] and is kept), so the subset winner IS
-        the true winner; an out-of-range key may resolve against partial
-        history, but its winner's own doc_id is out of range and the
-        post-filter drops it.  Dirty-group resolution as in
-        ``read_state`` (mixed-spec safe)."""
+        (hence intersects [lo, hi] and is kept), and every version carries
+        the same doc_id, so filtering the file rows before resolution
+        keeps the key's whole history and the winner IS the true winner;
+        out-of-range rows never reach the resolving shuffle.  Dirty-group
+        resolution as in ``read_state`` (mixed-spec safe)."""
         if lo > hi:
             raise ValueError(f"empty range: {lo!r} > {hi!r}")
         snap = self.snapshot(snapshot_id)
@@ -2552,15 +2562,14 @@ class SequenceTable:
         }
         dirty = [e for e in kept if e["bucket"] % s_min in dirty_groups]
         clean = [e for e in kept if e["bucket"] % s_min not in dirty_groups]
-        state = self._read_files(spark, snap, clean)
+        in_range = f"doc_id BETWEEN {sql_str(lo)} AND {sql_str(hi)}"
+        state = self._read_files(spark, snap, clean).filter(in_range)
         if dirty:
-            state = lww_resolve(self._read_files(spark, snap, dirty)).unionByName(
-                state
-            )
+            state = lww_resolve(
+                self._read_files(spark, snap, dirty).filter(in_range)
+            ).unionByName(state)
         user_cols = [f.name for f in self.user_schema(snap).fields]
-        return _live_rows(
-            state.filter(F.col("doc_id").between(F.lit(lo), F.lit(hi))), user_cols
-        )
+        return _live_rows(state, user_cols)
 
     # ------------------------------------------------------------------ #
     # incremental changelog scan (S10) — the CDC *read* surface
@@ -2815,8 +2824,11 @@ class SequenceTable:
                     files.append(e)
             if not files:
                 return None
-            state = lww_resolve(self._read_files(spark, snap, files, user_schema=user))
-            return state.join(keys.distinct(), "doc_id", "left_semi")
+            # the semi-join goes BELOW the resolution (every version of a
+            # key carries its doc_id, so the winner is the same): only the
+            # changed keys' versions enter the resolving shuffle
+            rows = self._read_files(spark, snap, files, user_schema=user)
+            return lww_resolve(rows.join(keys.distinct(), "doc_id", "left_semi"))
 
         def pack(df: DataFrame, side: str) -> DataFrame:
             img = F.struct(

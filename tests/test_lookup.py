@@ -1,13 +1,17 @@
 """Point-lookup serving path (SequenceTable.lookup): bucket + footer
 min/max file skipping, answers identical to a full read."""
 
+import datetime
 import glob
+import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
+from cfe_39_spark.schema import EVENT_SCHEMA_V1, SEQUENCE_SCHEMA_V1
 from cfe_39_spark.sources.table import SequenceTable, _xxh64, bucket_expr, bucket_of
 
 
@@ -161,6 +165,124 @@ def test_scan_range_mixed_specs(spark, tmp_path):
     }
     got = {r["doc_id"]: r.asDict() for r in t.scan_range(spark, lo, hi).collect()}
     assert got == exp
+
+
+# ---------------------------------------------------------------------- #
+# key predicates: rendered as SQL literals, applied before MOR resolution
+# ---------------------------------------------------------------------- #
+# keys that a SQL string literal must escape or carry through unchanged
+AWKWARD_KEYS = ["", "'", "\\", '"', "it's", "back\\slash\\'", 'say "hi"',
+                "line\nbreak", "tab\tx", "\\n", "中文'键", "é😀"]
+N_AWK_BUCKETS = 4
+
+
+@pytest.fixture(scope="module")
+def awkward_table(spark, tmp_path_factory):
+    """A table whose keys include ``AWKWARD_KEYS``, with MOR deltas in
+    every bucket, and its full read as ``{doc_id: row}``."""
+    d = tmp_path_factory.mktemp("awkward")
+    write_fixture(
+        str(d / "fx"),
+        GenConfig(n_docs_initial=40, n_events=200, n_segments=4,
+                  dup_rate=0.1, seed=109),
+    )
+    awk = spark.createDataFrame(
+        [(k, [i, i + 1], 2, "awkward") for i, k in enumerate(AWKWARD_KEYS)],
+        SEQUENCE_SCHEMA_V1,
+    )
+    init = spark.read.parquet(str(d / "fx" / "initial.parquet")).unionByName(awk)
+    t = SequenceTable.create(spark, str(d / "t"), init, n_buckets=N_AWK_BUCKETS)
+    for i, seg in enumerate(sorted(glob.glob(str(d / "fx" / "segments" / "*.parquet")))):
+        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i,
+                    compact_threshold=None)
+    # later versions of the awkward keys: updates, and one delete
+    at = datetime.datetime(2030, 1, 1)
+    events = [
+        (k, [7, i], 2, "updated", "D" if i == 1 else "U", i, 99, 9, 1,
+         at + datetime.timedelta(seconds=i))
+        for i, k in enumerate(AWKWARD_KEYS)
+        if i % 3 != 2  # some awkward keys keep their base version
+    ]
+    apply_batch(spark, t, spark.createDataFrame(events, EVENT_SCHEMA_V1),
+                batch_id="awkward", compact_threshold=None)
+    full = {r["doc_id"]: r.asDict() for r in t.read(spark).collect()}
+    return t, full
+
+
+def _key(live_keys):
+    return st.one_of(
+        st.sampled_from(AWKWARD_KEYS),
+        st.sampled_from(live_keys),
+        st.text(max_size=6),
+        st.text(alphabet="'\\\"\n中😀ab", max_size=6),
+    )
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(data=st.data())
+def test_lookup_equals_filtered_read_property(spark, awkward_table, data):
+    """``lookup`` over any keys (quotes, backslashes, newlines, multi-byte
+    text, the empty string) equals the full read filtered in Python."""
+    t, full = awkward_table
+    keys = data.draw(st.lists(_key(sorted(full)), max_size=12))
+    got = sorted(
+        (r.asDict() for r in t.lookup(spark, keys).collect()),
+        key=lambda r: r["doc_id"],
+    )
+    assert got == [full[k] for k in sorted(set(keys)) if k in full]
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(data=st.data())
+def test_scan_range_equals_filtered_read_property(spark, awkward_table, data):
+    """``scan_range`` with any bounds equals the full read filtered in
+    Python (Spark's binary string order is code-point order, as in
+    Python)."""
+    t, full = awkward_table
+    bounds = data.draw(st.lists(_key(sorted(full)), min_size=2, max_size=2))
+    lo, hi = sorted(bounds)
+    got = sorted(
+        (r.asDict() for r in t.scan_range(spark, lo, hi).collect()),
+        key=lambda r: r["doc_id"],
+    )
+    assert got == [full[k] for k in sorted(full) if lo <= k <= hi]
+
+
+def _file_scans(df):
+    """The ``FileScan`` lines of ``df``'s executed plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if "FileScan" in ln]
+
+
+def _pushed(scan: str) -> str:
+    m = re.search(r"PushedFilters: \[([^\]]*)", scan)
+    return m.group(1) if m else ""
+
+
+def test_key_predicates_reach_the_dirty_file_scans(spark, awkward_table):
+    """Every bucket holds a delta, so every file is resolved: the key
+    predicate must reach each of those scans (parquet row-group skipping,
+    and only the keys' versions enter the resolving shuffle), not sit
+    above the resolving aggregate."""
+    t, full = awkward_table
+    assert set(t.delta_file_counts()) == set(range(N_AWK_BUCKETS))
+    # the awkward keys are in the table (one of them deleted)
+    assert set(AWKWARD_KEYS) - set(full) == {AWKWARD_KEYS[1]}
+    live = sorted(full)
+    keys = live[::4][:10]
+    scans = _file_scans(t.lookup(spark, keys))
+    assert scans
+    for scan in scans:
+        assert "In(doc_id," in _pushed(scan), scan
+    scans = _file_scans(t.scan_range(spark, live[5], live[20]))
+    assert scans
+    for scan in scans:
+        pushed = _pushed(scan)
+        assert "GreaterThanOrEqual(doc_id," in pushed, scan
+        assert "LessThanOrEqual(doc_id," in pushed, scan
 
 
 # ---------------------------------------------------------------------- #

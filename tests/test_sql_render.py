@@ -1,8 +1,9 @@
 """The SQL rendering helpers hot-path plans are built with: identifiers
-are quoted for any column name, and a rendered type parses back to the
-exact ``DataType`` it came from."""
+are quoted for any column name, string literals carry any text, and a
+rendered type parses back to the exact ``DataType`` it came from."""
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
 
 from cfe_39_spark.schema import (
@@ -10,6 +11,7 @@ from cfe_39_spark.schema import (
     EVENT_SCHEMA_V1,
     SEQUENCE_SCHEMA_V1,
     sql_ident,
+    sql_str,
     sql_type,
     storage_schema,
 )
@@ -66,3 +68,20 @@ def test_sql_ident_quotes_any_name(spark):
     df = spark.range(1).selectExpr(*[f"id AS {sql_ident(n)}" for n in names])
     assert df.columns == names
     assert df.selectExpr(*map(sql_ident, names)).columns == names
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(values=st.lists(
+    st.one_of(st.text(max_size=12), st.text(alphabet="'\\\"\n\tu0123x中😀", max_size=8)),
+    min_size=1, max_size=20,
+))
+def test_sql_str_round_trips_any_text(spark, values):
+    """Quotes, backslashes (also before ``u``, digits or ``n``, which the
+    parser would otherwise read as escapes), newlines and multi-byte text."""
+    fixed = ["", "'", "\\", "\\'", "\\u0041", "\\101", "\\n", "a\nb", "中'😀"]
+    values = fixed + values
+    row = spark.range(1).selectExpr(
+        *[f"{sql_str(v)} AS c{i}" for i, v in enumerate(values)]
+    ).first()
+    assert list(row) == values
