@@ -55,8 +55,6 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-import sys
-
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from ..functions.tokens import n_tok_expr, n_tok_sql, validate_tokens_arrow
@@ -74,9 +72,7 @@ from ..sources.table import (
     _schema_to_json,
     bucket_expr,
     changes_as_events,
-    has_deltas,
     lww_pick,
-    lww_resolve,
 )
 
 
@@ -276,14 +272,19 @@ def apply_batch(
     """Apply one micro-batch of change events to the table, exactly once.
     Winners per key come from ``lww_winners`` (one ``max_by`` aggregation).
 
-    ``known_partitions``: the source's partition ids when the caller knows
-    them (a Kafka consumer always does — topic partition count).  With the
-    hint, the per-partition lineage stats ride the delta-write job itself
-    via a second ``Observation`` on the events relation, dropping the MOR
-    hot path from two Spark jobs per trigger to ONE — the job-scheduling
-    floor is exactly what caps streaming scaling efficiency (BENCH.md §1).
+    Lineage stats (per source partition: offset range, events in, winners
+    written) and the batch's max schema_version ride the MOR delta-write
+    job itself, as ``Observation``s on the events and winners relations
+    indexed by the batch's source partitions.  ``known_partitions`` only
+    decides where that partition list comes from: the source's partition
+    ids when the caller knows them (a Kafka consumer always does — topic
+    partition count), else one column-pruned distinct over
+    ``src_partition`` (its shuffle costs two more Spark jobs per trigger:
+    5 instead of 3 for a steady one; the job-scheduling floor is what
+    caps streaming scaling efficiency, BENCH.md §1).
     Events outside the hinted set are detected from the observed totals
-    and fall back to the grouped stats job (correct, just not fused).
+    and recounted with grouped stats jobs (correct, just not fused).
+    ``mode='cow'`` computes its stats in one grouped job either way.
 
     Idempotent on batch_id (S6): a replayed batch returns the existing
     snapshot without touching data.  Row-level idempotency (C4) comes from
@@ -325,34 +326,23 @@ def apply_batch(
     # ---- C7: reconcile schemas (metadata-only; no data rewrite) ----
     new_schema, changes = evolve_schema(table_schema, events.schema)
 
-    if mode == "mor" and known_partitions is not None:
-        # fused-stats fast path: lineage stats + batch schema_version are
-        # observed DURING the delta-write scan — no separate stats job
-        parts_hint = sorted(set(known_partitions))
-        obs_ev = Observation()
-        stats = [F.expr("max(schema_version) AS sv"), F.expr("count(1) AS n_total")]
-        if parts_hint:
-            off = sql_ident("offset")
-            stats += [
-                F.expr(f"{_per_partition_sql(parts_hint, agg)} AS {name}")
-                for name, agg in (
-                    ("mn", lambda p: f"min(CASE WHEN src_partition = {p} THEN {off} END)"),
-                    ("mx", lambda p: f"max(CASE WHEN src_partition = {p} THEN {off} END)"),
-                    ("n", lambda p: f"count_if(src_partition = {p})"),
-                )
-            ]
-        events_obs = events.observe(obs_ev, *stats)
+    if mode == "mor":
+        parts = (
+            sorted(set(known_partitions))
+            if known_partitions is not None
+            # column-pruned: the token column never leaves the footers
+            else sorted(
+                r[0] for r in events.select("src_partition").distinct().collect()
+            )
+        )
         return _apply_mor(
-            spark, table, lww_winners(events_obs), bid, snap, new_schema,
-            None, None, None, t0, compact_threshold,
-            changes=changes, obs_ev=obs_ev, parts_hint=parts_hint, events=events,
-            quarantined=quarantined,
+            spark, table, events, parts, bid, snap, new_schema, changes, t0,
+            compact_threshold, quarantined,
         )
 
     # ---- C6: ONE column-pruned job for lineage stats + the batch's max
     # schema_version (offset/src_partition/schema_version only — the token
     # column never leaves the parquet footer for this scan) ----
-    t_prog = time.monotonic()
     prog = (
         events.groupBy("src_partition")
         .agg(
@@ -363,27 +353,14 @@ def apply_batch(
         )
         .collect()
     )
-    if os.environ.get("CFE39_TIMING"):
-        print(f"TIMING {bid} prog={time.monotonic() - t_prog:.2f}", file=sys.stderr)
     batch_sv = max((r["sv"] or 0) for r in prog) if prog else 0
     sv, register = _register_version(snap, batch_sv, new_schema, changes)
     user_cols = [f.name for f in new_schema.fields]
 
-    # ---- C1+C2+C3: one winner per key ----
-    winners = lww_winners(events)
-
-    if mode == "mor":
-        # no persist: MOR consumes winners exactly once (the delta-write
-        # job); lineage counts ride the same job via observe(), so caching
-        # a full token-payload copy would only add memory traffic
-        return _apply_mor(
-            spark, table, winners, bid, snap, new_schema, sv,
-            register, prog, t0, compact_threshold, quarantined=quarantined,
-        )
-
-    # persisted: reused by the merge-planner collect, the C4 join and the
-    # merge itself — without this the LWW aggregation would run 3x
-    winners = winners.persist()
+    # ---- C1+C2+C3: one winner per key.  Persisted: reused by the
+    # merge-planner collect, the C4 join and the merge itself — without
+    # this the LWW aggregation would run 3x ----
+    winners = lww_winners(events).persist()
 
     # ---- O3: plan the touched slice ----
     tb = (
@@ -395,11 +372,9 @@ def apply_batch(
     touched = {r["_bucket"] for r in tb}
     bounds = {r["_bucket"]: (r["lo"], r["hi"]) for r in tb}
     rewrite_files, carry_files = table.plan_merge_files(snap, touched, bounds)
-    target_slice = table._read_files(spark, snap, rewrite_files, user_schema=new_schema)
-    if has_deltas(rewrite_files):
-        # slice holds unresolved merge-on-read rows: collapse to one row
-        # per key first (the C4/C5 joins assume a key-unique target side)
-        target_slice = lww_resolve(target_slice)
+    # key-unique target side for the C4/C5 joins: groups holding
+    # merge-on-read deltas are resolved, clean groups stream as they are
+    target_slice = table._resolve(spark, snap, rewrite_files, user_schema=new_schema)
 
     # ---- C4: applies-flag via column-pruned bookkeeping join ----
     bk = target_slice.select(
@@ -537,25 +512,23 @@ def apply_batch(
 def _apply_mor(
     spark: SparkSession,
     table: SequenceTable,
-    winners: DataFrame,
+    events: DataFrame,
+    parts: list[int],
     bid: str,
     snap: dict,
     new_schema: T.StructType,
-    sv: int | None,
-    register: T.StructType | None,
-    prog: list | None,
+    changes: list[str],
     t0: float,
     compact_threshold: int | None,
-    changes: list[str] | None = None,
-    obs_ev: Observation | None = None,
-    parts_hint: list[int] | None = None,
-    events: DataFrame | None = None,
-    quarantined: int = 0,
+    quarantined: int,
 ) -> ApplyResult:
-    """Merge-on-read apply: stamp the winners with bookkeeping columns and
-    commit them as delta files — no table read, no rewrite, O(batch) per
-    trigger.  Redelivered/out-of-order rows are written too and simply
-    lose at read-time resolution (same ordering rule, same final state).
+    """Merge-on-read apply: stamp the batch's LWW winners with bookkeeping
+    columns and commit them as delta files — no table read, no rewrite,
+    O(batch) per trigger.  Redelivered/out-of-order rows are written too
+    and simply lose at read-time resolution (same ordering rule, same
+    final state).  Lineage stats, indexed by the source partitions
+    ``parts``, and the batch's max schema_version are observed during the
+    delta write: no separate stats job.
 
     Lineage semantics: in this mode ``rows_applied`` means "winners
     written" — a stale winner that later loses at read-time resolution is
@@ -565,6 +538,19 @@ def _apply_mor(
     recorded in the lineage row (``rows_applied_semantics``) instead of
     being papered over."""
     n_buckets = snap["n_buckets"]
+    obs_ev = Observation()
+    stats = [F.expr("max(schema_version) AS sv"), F.expr("count(1) AS n_total")]
+    if parts:
+        off = sql_ident("offset")
+        stats += [
+            F.expr(f"{_per_partition_sql(parts, agg)} AS {name}")
+            for name, agg in (
+                ("mn", lambda p: f"min(CASE WHEN src_partition = {p} THEN {off} END)"),
+                ("mx", lambda p: f"max(CASE WHEN src_partition = {p} THEN {off} END)"),
+                ("n", lambda p: f"count_if(src_partition = {p})"),
+            )
+        ]
+    winners = lww_winners(events.observe(obs_ev, *stats))
     # one selectExpr, not a Column chain per column (schema.py, SQL rendering)
     have = {f.name: f.dataType for f in winners.schema.fields}
     typed = {f.name: f.dataType for f in new_schema.fields}
@@ -593,11 +579,6 @@ def _apply_mor(
     # aggregates collected during the action) — no persist, no second scan;
     # this is per-trigger serial floor, and the floor is what caps
     # streaming scaling efficiency (BENCH.md §1)
-    parts = (
-        list(parts_hint)
-        if obs_ev is not None
-        else sorted({r["src_partition"] for r in prog})
-    )
     obs = Observation()
     if parts:
         winners = winners.observe(
@@ -615,50 +596,45 @@ def _apply_mor(
         # costs more than the check is worth unless the source is
         # untrusted (UDFs are the slow path; prefer built-ins).
         delta = validate_tokens_arrow(delta)
-    t_w = time.monotonic()
     new_files = table._write_data_files(
-        delta, n_buckets, sv if sv is not None else 0, batch_tag=bid, kind="delta",
+        delta, n_buckets, 0, batch_tag=bid, kind="delta",
         sort_cols=snap.get("sort_order"), bloom=snap.get("bloom_filter"), zorder=snap.get("zorder"),
     )
+    # the batch's schema version is known only now (observed above):
+    # stamp the entries with it
+    got_ev = obs_ev.get
+    sv, register = _register_version(snap, int(got_ev["sv"] or 0), new_schema, changes)
+    for e in new_files:
+        e["schema_version"] = sv
     applied = obs.get["applied"] if parts else []
     applied_rows = [
         {"src_partition": p, "count": int(n)} for p, n in zip(parts, applied)
     ]
-    if obs_ev is not None:
-        # fused-stats path: lineage stats and the batch's max
-        # schema_version were observed during the write scan above
-        got_ev = obs_ev.get
-        sv, register = _register_version(
-            snap, int(got_ev["sv"] or 0), new_schema, changes
+    observed = zip(*(got_ev[k] for k in ("mn", "mx", "n"))) if parts else []
+    prog = [
+        {"src_partition": p, "min_offset": mn, "max_offset": mx, "events_in": int(n)}
+        for p, (mn, mx, n) in zip(parts, observed)
+        if int(n) > 0
+    ]
+    if int(got_ev["n_total"]) != sum(r["events_in"] for r in prog):
+        # events outside a hinted partition set: recompute stats + winner
+        # counts the exact way (two extra jobs — the rare correction path;
+        # the data write above is already correct)
+        prog = (
+            events.groupBy("src_partition")
+            .agg(
+                F.min("offset").alias("min_offset"),
+                F.max("offset").alias("max_offset"),
+                F.count(F.lit(1)).alias("events_in"),
+            )
+            .collect()
         )
-        for e in new_files:
-            e["schema_version"] = sv
-        stats = zip(*(got_ev[k] for k in ("mn", "mx", "n"))) if parts else []
-        prog = [
-            {"src_partition": p, "min_offset": mn, "max_offset": mx, "events_in": int(n)}
-            for p, (mn, mx, n) in zip(parts, stats)
-            if int(n) > 0
-        ]
-        if int(got_ev["n_total"]) != sum(r["events_in"] for r in prog):
-            # events outside the hinted partition set: recompute stats +
-            # winner counts the exact way (two extra jobs — the rare
-            # correction path; the data write above is already correct)
-            prog = (
-                events.groupBy("src_partition")
-                .agg(
-                    F.min("offset").alias("min_offset"),
-                    F.max("offset").alias("max_offset"),
-                    F.count(F.lit(1)).alias("events_in"),
-                )
-                .collect()
-            )
-            applied_rows = (
-                lww_winners(events)
-                .groupBy("src_partition")
-                .count()
-                .collect()
-            )
-    t_c = time.monotonic()
+        applied_rows = (
+            lww_winners(events)
+            .groupBy("src_partition")
+            .count()
+            .collect()
+        )
     per_partition = _per_partition(prog, applied_rows)
     events_in = sum(p["events_in"] for p in per_partition)
     rows_applied = sum(p["rows_applied"] for p in per_partition)
@@ -726,13 +702,6 @@ def _apply_mor(
             continue
     else:
         raise CommitConflictError(f"batch {bid}: commit lost the race 5 times")
-    if os.environ.get("CFE39_TIMING"):
-        print(
-            f"TIMING {bid} write={t_c - t_w:.2f} "
-            f"commit={time.monotonic() - t_c:.2f} "
-            f"total={time.monotonic() - t0:.2f}",
-            file=sys.stderr,
-        )
     if compact_threshold:
         # compact ONLY the buckets at/over the threshold: each trigger's
         # compaction pause is O(offending buckets), not a whole-table

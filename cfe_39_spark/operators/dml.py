@@ -49,7 +49,6 @@ from ..sources.table import (
     CommitConflictError,
     SequenceTable,
     bucket_expr,
-    lww_resolve,
 )
 
 BOOKKEEPING = (
@@ -146,7 +145,7 @@ def _run_dml(
         ts = time.time()
         sv = snap["schema_version"]
         bid = f"__{op_name}__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
-        resolved = lww_resolve(table._read_files(spark, snap, target))
+        resolved = table._resolve(spark, snap, target)
         delta_files = table._write_data_files(
             transform(resolved.filter(hit), ts),
             snap["n_buckets"], sv, batch_tag=bid, kind="delta",
@@ -193,7 +192,7 @@ def _run_dml(
             f"{op_name}: commit lost the race 5 times"
         )
 
-    resolved = lww_resolve(table._read_files(spark, snap, target)).persist()
+    resolved = table._resolve(spark, snap, target).persist()
     try:
         # three-valued logic guard: a NULL-evaluating predicate (e.g. a
         # payload column compared on a row with nulls) must read as
@@ -463,7 +462,7 @@ def merge_into(
     gset = set(groups)
     target = [e for e in snap["files"] if e["bucket"] % s_min in gset]
 
-    resolved = lww_resolve(table._read_files(spark, snap, target))
+    resolved = table._resolve(spark, snap, target)
     joined = resolved.join(
         src, resolved["doc_id"] == src["src_doc_id"], "full_outer"
     )

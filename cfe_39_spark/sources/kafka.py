@@ -117,8 +117,8 @@ def kafka_stream(
     spark-sql-kafka connector on the submit classpath; not loadable in the
     sandbox).  Downstream: ``parse_kafka_records`` -> ``split_poison`` ->
     the same foreachBatch ``apply_batch`` sink ``run_stream`` uses, with
-    ``known_partitions=range(topic partition count)`` enabling the
-    one-job-per-trigger path."""
+    ``known_partitions=range(topic partition count)``, which spares each
+    trigger the jobs that list its source partitions."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

@@ -24,7 +24,7 @@ reuses the parent's segment references verbatim and writes ONE new segment
 holding only its own delta files, so at 10^10 rows / millions of live files
 a trigger's metadata write is a few KB, not a rewrite of a multi-MB inline
 file list.  Segments are coalesced (smallest-first) once the list exceeds
-``CFE39_MANIFEST_TARGET`` so the per-snapshot segment count — and therefore
+``_MANIFEST_TARGET`` (32) so the per-snapshot segment count — and therefore
 descriptor size and read-side planning fan-out — stays bounded regardless
 of stream lifetime.
 
@@ -96,7 +96,7 @@ FORMAT_VERSION = 1
 # segments into one once the list grows past this, so segment count is
 # bounded by the budget, not by stream lifetime (amortized O(1) extra
 # writes per commit — each coalesce buys budget/2 commits of headroom).
-_MANIFEST_TARGET = int(os.environ.get("CFE39_MANIFEST_TARGET", "32"))
+_MANIFEST_TARGET = 32
 
 # Manifest segments are immutable once written (same discipline as data
 # files), so a process-wide content cache keyed by absolute path is safe;
@@ -104,7 +104,7 @@ _MANIFEST_TARGET = int(os.environ.get("CFE39_MANIFEST_TARGET", "32"))
 # segment per process.  LRU-bounded: a long-lived streaming driver writes
 # one segment per trigger (millions over a stream's life) — an unbounded
 # cache is a slow driver-memory leak even though each entry is small.
-_MANIFEST_CACHE_MAX = int(os.environ.get("CFE39_MANIFEST_CACHE_MAX", "256"))
+_MANIFEST_CACHE_MAX = 256
 
 
 class _LRUCache(dict):
@@ -315,10 +315,6 @@ def changes_as_events(changes: DataFrame) -> DataFrame:
         sv.alias("schema_version"),
         *user_cols,
     )
-
-
-def has_deltas(files: list[dict]) -> bool:
-    return any(e.get("kind", "base") == "delta" for e in files)
 
 
 def _schema_to_json(schema: T.StructType) -> str:
@@ -2363,39 +2359,74 @@ class SequenceTable:
             out = out.unionByName(p)
         return out
 
-    def read_state(
-        self, spark: SparkSession, snapshot_id: "int | str | None" = None, resolve: bool = True
+    def _resolve(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        files: list[dict],
+        where: "str | DataFrame | None" = None,
+        user_schema: T.StructType | None = None,
     ) -> DataFrame:
-        """Full internal state (bookkeeping + tombstones included).  When
-        the snapshot carries merge-on-read delta files, rows are LWW-
-        resolved to one winner per key (Iceberg-v2-style read path).
+        """The state ``files`` hold: one row per key, bookkeeping and
+        tombstones included — the one place merge-on-read resolution is
+        decided, for every read and every rewrite (compaction, the COW
+        apply slice, DML).
 
-        Bucket-scoped resolution: only buckets that actually hold delta
-        files pay the groupBy shuffle; clean buckets' base files stream
-        through a plain union-scan.  A key lives in exactly one bucket
-        (same hash at write and read), so resolving per-bucket-group and
-        unioning is equivalent to resolving the whole table — but at
-        10^10 rows with 1 dirty bucket of 1024, it is ~1000x less shuffle.
+        Group-scoped resolution: only bucket groups holding a DELTA among
+        ``files`` pay ``lww_resolve`` (its sort and shuffle); the clean
+        groups' rows stream through a plain union-scan.  Exact because a
+        key lives in exactly one group (same hash at write and read) and
+        base files are key-unique per group (create, compact, COW apply
+        and DML rewrite whole groups), so resolving per group and
+        unioning equals resolving everything — at 10^10 rows with 1
+        dirty bucket of 1024, ~1000x less shuffle.  ``files`` may be any
+        pruned selection: a group whose deltas were all pruned away
+        streams its kept base rows unresolved, by the same invariant.
 
-        Under mixed bucket specs (mid spec-evolution) the disjointness
-        unit is the GROUP: the bucket id under the smallest live spec
-        (``bucket % s_min`` — sound because every live spec divides the
-        current B).  Single-spec tables reduce to the plain bucket id.
-        """
-        snap = self.snapshot(snapshot_id)
-        files = snap["files"]
+        Under mixed bucket specs (mid spec-evolution) the group is the
+        bucket id under the smallest live spec (``bucket % s_min`` —
+        sound because every live spec divides the current B); on a
+        single-spec table it is the plain bucket id.
+
+        ``where`` filters the file rows BEFORE resolution: a SQL
+        predicate, or a DataFrame of ``doc_id`` keys to semi-join.  It
+        must keep or drop whole keys (every version of a key carries the
+        same ``doc_id``), so the winner is unchanged and only the kept
+        keys' versions enter the resolving sort and shuffle; a predicate
+        reaches the parquet scans as a pushed filter.  ``user_schema``
+        is ``_read_files``'s target schema."""
         s_min = self._min_live_spec(snap)
-        delta_groups = {
+        dirty_groups = {
             e["bucket"] % s_min for e in files if e.get("kind", "base") == "delta"
         }
-        if not (resolve and delta_groups):
-            return self._read_files(spark, snap, files)
-        dirty = [e for e in files if e["bucket"] % s_min in delta_groups]
-        clean = [e for e in files if e["bucket"] % s_min not in delta_groups]
-        out = lww_resolve(self._read_files(spark, snap, dirty))
+
+        def rows(part: list[dict]) -> DataFrame:
+            df = self._read_files(spark, snap, part, user_schema=user_schema)
+            if where is None:
+                return df
+            if isinstance(where, str):
+                return df.filter(where)
+            return df.join(where, "doc_id", "left_semi")
+
+        clean = [e for e in files if e["bucket"] % s_min not in dirty_groups]
+        if not dirty_groups:
+            return rows(clean)
+        out = lww_resolve(
+            rows([e for e in files if e["bucket"] % s_min in dirty_groups])
+        )
         if clean:
-            out = out.unionByName(self._read_files(spark, snap, clean))
+            out = out.unionByName(rows(clean))
         return out
+
+    def read_state(
+        self, spark: SparkSession, snapshot_id: "int | str | None" = None
+    ) -> DataFrame:
+        """Full internal state (bookkeeping + tombstones included), merge-
+        on-read deltas LWW-resolved to one winner per key (Iceberg-v2-style
+        read path); only bucket groups holding deltas pay the resolving
+        shuffle (``_resolve``)."""
+        snap = self.snapshot(snapshot_id)
+        return self._resolve(spark, snap, snap["files"])
 
     def read(
         self,
@@ -2441,24 +2472,10 @@ class SequenceTable:
         if min_event_time is None:
             return _live_rows(self.read_state(spark, snapshot_id), user_cols)
         micros = _bound_micros(min_event_time)
-        kept = self._files_min_event_time(snap, micros)
-        # dirty = buckets with a DELTA among the KEPT files (read_state's
-        # rule applied to the pruned selection): only those can hold
-        # several versions of one key.  A bucket whose deltas were all
-        # time-pruned streams its kept base rows unresolved — base files
-        # are key-unique per bucket (create/compact/COW rewrite whole
-        # buckets), the same invariant read_state's clean path rides
-        s_min = self._min_live_spec(snap)
-        dirty_groups = {
-            e["bucket"] % s_min for e in kept if e.get("kind", "base") == "delta"
-        }
-        dirty = [e for e in kept if e["bucket"] % s_min in dirty_groups]
-        clean = [e for e in kept if e["bucket"] % s_min not in dirty_groups]
-        state = self._read_files(spark, snap, clean)
-        if dirty:
-            state = lww_resolve(self._read_files(spark, snap, dirty)).unionByName(
-                state
-            )
+        # the bound is on the WINNER's event time, so it filters after
+        # resolution; a group whose deltas were all time-pruned streams
+        # its kept base rows unresolved (``_resolve``)
+        state = self._resolve(spark, snap, self._files_min_event_time(snap, micros))
         return _live_rows(
             state.filter(f"_last_event_time >= timestamp_micros({micros})"), user_cols
         )
@@ -2481,13 +2498,16 @@ class SequenceTable:
            over skipping).
 
         All surviving files of a key's bucket are read, so every MOR
-        version of the key is present and ``lww_resolve`` returns the same
-        winner a full ``read`` would.  The key predicate is applied to the
-        file rows BEFORE resolution (every version of a key carries the
-        same ``doc_id``, so pre-filtering picks the same winner as
+        version of the key is present and the winner is the one a full
+        ``read`` returns.  The key predicate is applied to the file rows
+        BEFORE resolution (every version of a key carries the same
+        ``doc_id``, so pre-filtering picks the same winner as
         post-filtering): it reaches the parquet scan as a pushed ``In``
         filter and only the keys' versions enter the resolving sort and
-        shuffle, not every row of the kept files.  At 10^10 rows / 1024
+        shuffle, not every row of the kept files.  Only bucket groups
+        holding a delta among the kept files are resolved at all
+        (``_resolve``): a lookup whose keys all hash to compacted buckets
+        is a plain filtered scan, no shuffle.  At 10^10 rows / 1024
         buckets a 10-key lookup touches ~10 buckets' worth of files and
         resolves only the keys' rows — the serving path a CDC validator
         needs next to the scan path.
@@ -2520,8 +2540,7 @@ class SequenceTable:
                 keep.append(e)
         user_cols = [f.name for f in self.user_schema(snap).fields]
         in_keys = f"doc_id IN ({', '.join(map(sql_str, ids))})"
-        state = lww_resolve(self._read_files(spark, snap, keep).filter(in_keys))
-        return _live_rows(state, user_cols)
+        return _live_rows(self._resolve(spark, snap, keep, in_keys), user_cols)
 
     def scan_range(
         self,
@@ -2545,7 +2564,7 @@ class SequenceTable:
         the same doc_id, so filtering the file rows before resolution
         keeps the key's whole history and the winner IS the true winner;
         out-of-range rows never reach the resolving shuffle.  Dirty-group
-        resolution as in ``read_state`` (mixed-spec safe)."""
+        resolution as in ``read_state`` (``_resolve``, mixed-spec safe)."""
         if lo > hi:
             raise ValueError(f"empty range: {lo!r} > {hi!r}")
         snap = self.snapshot(snapshot_id)
@@ -2556,20 +2575,9 @@ class SequenceTable:
             or e.get("max_doc_id") is None
             or not (e["max_doc_id"] < lo or e["min_doc_id"] > hi)
         ]
-        s_min = self._min_live_spec(snap)
-        dirty_groups = {
-            e["bucket"] % s_min for e in kept if e.get("kind", "base") == "delta"
-        }
-        dirty = [e for e in kept if e["bucket"] % s_min in dirty_groups]
-        clean = [e for e in kept if e["bucket"] % s_min not in dirty_groups]
         in_range = f"doc_id BETWEEN {sql_str(lo)} AND {sql_str(hi)}"
-        state = self._read_files(spark, snap, clean).filter(in_range)
-        if dirty:
-            state = lww_resolve(
-                self._read_files(spark, snap, dirty).filter(in_range)
-            ).unionByName(state)
         user_cols = [f.name for f in self.user_schema(snap).fields]
-        return _live_rows(state, user_cols)
+        return _live_rows(self._resolve(spark, snap, kept, in_range), user_cols)
 
     # ------------------------------------------------------------------ #
     # incremental changelog scan (S10) — the CDC *read* surface
@@ -2827,8 +2835,7 @@ class SequenceTable:
             # the semi-join goes BELOW the resolution (every version of a
             # key carries its doc_id, so the winner is the same): only the
             # changed keys' versions enter the resolving shuffle
-            rows = self._read_files(spark, snap, files, user_schema=user)
-            return lww_resolve(rows.join(keys.distinct(), "doc_id", "left_semi"))
+            return self._resolve(spark, snap, files, keys.distinct(), user)
 
         def pack(df: DataFrame, side: str) -> DataFrame:
             img = F.struct(
@@ -2888,15 +2895,14 @@ class SequenceTable:
         lineage metadata (driver-side, O(span) JSON reads, no data scan).
 
         This is the ``known_partitions`` hint a changelog CONSUMER passes
-        to ``apply_batch`` so its lineage stats ride the delta-write scan
-        (the fused one-job-per-trigger path): ``changes_as_events`` emits
-        each row's ORIGINAL ``src_partition`` (persisted as
-        ``_last_src_partition``), and every commit's lineage records
-        exactly which partitions it ingested, so the union over the span
-        is the feed's partition set.  Returns None when any span commit
-        with change files lacks per-partition lineage (pre-upgrade
-        tables) — callers then take the unfused stats path (correct,
-        two extra jobs)."""
+        to ``apply_batch``, sparing it the jobs that list the feed's
+        partitions: ``changes_as_events`` emits each row's ORIGINAL
+        ``src_partition`` (persisted as ``_last_src_partition``), and
+        every commit's lineage records exactly which partitions it
+        ingested, so the union over the span is the feed's partition
+        set.  Returns None when any span commit with change files lacks
+        per-partition lineage (pre-upgrade tables) — ``apply_batch`` then
+        lists the partitions itself (correct, two more Spark jobs)."""
         to_sid = (
             to_snapshot_id if to_snapshot_id is not None else self.latest_snapshot_id()
         )
@@ -3044,7 +3050,7 @@ class SequenceTable:
             return None
         buckets = sorted(groups)
         target = [e for e in snap["files"] if e["bucket"] % s_min in groups]
-        resolved = lww_resolve(self._read_files(spark, snap, target))
+        resolved = self._resolve(spark, snap, target)
         if drop_tombstones_before is not None:
             resolved = resolved.filter(
                 (~F.col("_deleted"))

@@ -61,8 +61,8 @@ def run_stream(
     many non-empty batches have applied — the soak-test harness for
     long-running mode.  ``stop_after_batches`` simulates a crash for the
     kill-and-resume tests.  ``known_partitions``: source partition ids
-    when known (a Kafka source's topic partition count) — enables the
-    one-job-per-trigger fused-stats hot path in ``apply_batch``.
+    when known (a Kafka source's topic partition count) — spares each
+    ``apply_batch`` the jobs that list the batch's source partitions.
     ``quarantine_dir``: opt-in DLQ — malformed events are diverted to
     per-batch parquet there instead of entering the merge (see
     ``quarantine_bad_events``)."""

@@ -84,12 +84,11 @@ def mirror_once(
     ``known_partitions`` default: derived from the span snapshots' lineage
     metadata (``src.span_src_partitions`` — driver-side JSON only), which
     matches the feed exactly because ``changes_as_events`` re-emits each
-    row's original persisted ``src_partition``.  With the hint, the dst
-    apply's lineage stats ride the delta-write scan itself — the fused
-    ONE-job-per-trigger MOR path the primary ingest uses.  Pass an
-    explicit list to override, or a pre-upgrade source without
-    per-partition lineage falls back to the unfused two-extra-jobs stats
-    path (correct, just not fused)."""
+    row's original persisted ``src_partition``.  The dst apply's lineage
+    stats ride its delta-write scan either way; the hint spares it the
+    jobs that list the feed's partitions.  Pass an explicit list to
+    override; for a pre-upgrade source without per-partition lineage the
+    apply lists the partitions itself (correct, two more Spark jobs)."""
     cursor = load_cursor(checkpoint_dir)
     latest = src.latest_snapshot_id()
     if latest <= cursor:

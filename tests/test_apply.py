@@ -218,8 +218,10 @@ def test_steady_fused_trigger_job_count(spark, tmp_path):
     write.  Its plan costs a bounded number of py4j round trips: the stats
     observe, the LWW aggregation and the delta projection are SQL
     expression strings, not Column chains per column and source partition
-    (each Column call costs several round trips).  The first trigger may
-    pay one-off costs and is not pinned."""
+    (each Column call costs several round trips).  Without the hint the
+    trigger takes the same path plus the job that lists the batch's
+    source partitions: at most 5 jobs.  The first trigger may pay one-off
+    costs and is not pinned."""
     import glob
 
     cfg = GenConfig(n_docs_initial=40, n_events=600, n_segments=4, dup_rate=0.1, seed=53)
@@ -245,6 +247,16 @@ def test_steady_fused_trigger_job_count(spark, tmp_path):
     assert all(n <= 3 for n in jobs[1:]), jobs
     # measured: 111 per trigger; per-column Column chains made 1,814
     assert all(n <= 165 for n in trips[1:]), trips
+    assert_state_equal(t.read(spark), fx["expected"])
+
+    t = SequenceTable.create(spark, str(tmp_path / "t-unhinted"), init, n_buckets=4)
+    jobs = [
+        jobs_started(spark, lambda: apply_batch(
+            spark, t, ev, batch_id=i, compact_threshold=None,
+        ))[1]
+        for i, ev in enumerate(segs)
+    ]
+    assert all(n <= 5 for n in jobs[1:]), jobs
     assert_state_equal(t.read(spark), fx["expected"])
 
 

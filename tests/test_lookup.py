@@ -12,7 +12,15 @@ from pyspark.sql import functions as F
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.schema import EVENT_SCHEMA_V1, SEQUENCE_SCHEMA_V1
-from cfe_39_spark.sources.table import SequenceTable, _xxh64, bucket_expr, bucket_of
+from cfe_39_spark.sources.table import (
+    SequenceTable,
+    _xxh64,
+    bucket_expr,
+    bucket_of,
+    lww_resolve,
+)
+
+from .util import executed_plan, jobs_started
 
 
 def _setup(spark, tmp_path, n_buckets=8):
@@ -176,11 +184,10 @@ AWKWARD_KEYS = ["", "'", "\\", '"', "it's", "back\\slash\\'", 'say "hi"',
 N_AWK_BUCKETS = 4
 
 
-@pytest.fixture(scope="module")
-def awkward_table(spark, tmp_path_factory):
+def _build_awkward(spark, d, evolve=False):
     """A table whose keys include ``AWKWARD_KEYS``, with MOR deltas in
-    every bucket, and its full read as ``{doc_id: row}``."""
-    d = tmp_path_factory.mktemp("awkward")
+    every bucket.  ``evolve``: the spec grows 4 -> 8 buckets before the
+    last batch, whose deltas are then written under the new spec."""
     write_fixture(
         str(d / "fx"),
         GenConfig(n_docs_initial=40, n_events=200, n_segments=4,
@@ -203,10 +210,66 @@ def awkward_table(spark, tmp_path_factory):
         for i, k in enumerate(AWKWARD_KEYS)
         if i % 3 != 2  # some awkward keys keep their base version
     ]
+    if evolve:
+        t.evolve_bucket_spec(2 * N_AWK_BUCKETS)
     apply_batch(spark, t, spark.createDataFrame(events, EVENT_SCHEMA_V1),
                 batch_id="awkward", compact_threshold=None)
-    full = {r["doc_id"]: r.asDict() for r in t.read(spark).collect()}
-    return t, full
+    return t
+
+
+def _brute_read(spark, t):
+    """The live rows as ``{doc_id: row}``, every file resolved together —
+    no bucket-group shortcut, so an oracle for the group-scoped reads."""
+    snap = t.snapshot()
+    user_cols = [f.name for f in t.user_schema(snap).fields]
+    state = lww_resolve(t._read_files(spark, snap, snap["files"]))
+    return {
+        r["doc_id"]: r.asDict()
+        for r in state.filter("NOT _deleted").select(user_cols).collect()
+    }
+
+
+def _build_mixed(spark, d, evolve):
+    """``_build_awkward``'s table with bucket group 0 compacted, so clean
+    and dirty groups mix.  With ``evolve`` this is mid
+    ``evolve_bucket_spec``: group 0 is rewritten as 8-bucket base files,
+    groups 1-3 still hold 4-bucket base files and deltas of both specs."""
+    t = _build_awkward(spark, d, evolve=evolve)
+    assert t.compact(spark, buckets=[0]) is not None
+    assert set(t.delta_file_counts()) == set(range(1, N_AWK_BUCKETS))
+    snap = t.snapshot()
+    specs = {t._entry_spec(snap, e) for e in snap["files"]}
+    assert specs == ({N_AWK_BUCKETS, 2 * N_AWK_BUCKETS} if evolve else {N_AWK_BUCKETS})
+    return t
+
+
+@pytest.fixture(scope="module")
+def awkward_tables(spark, tmp_path_factory):
+    """``{name: (table, full read as {doc_id: row})}`` for the awkward-key
+    table with deltas in every bucket (``all_dirty``) and the two
+    clean/dirty mixes of ``_build_mixed``.  Each full read is the
+    brute-force one, and ``read`` must agree with it."""
+    tables = {
+        "all_dirty": _build_awkward(spark, tmp_path_factory.mktemp("awkward")),
+        "mixed": _build_mixed(spark, tmp_path_factory.mktemp("mixed"), False),
+        "mixed_mid_evolution": _build_mixed(
+            spark, tmp_path_factory.mktemp("mixed-evolved"), True
+        ),
+    }
+    out = {}
+    for name, t in tables.items():
+        full = _brute_read(spark, t)
+        assert {r["doc_id"]: r.asDict() for r in t.read(spark).collect()} == full
+        out[name] = t, full
+    # the awkward keys reach both the clean group and a dirty one
+    groups = {bucket_of(k, N_AWK_BUCKETS) for k in AWKWARD_KEYS}
+    assert 0 in groups and groups - {0}
+    return out
+
+
+@pytest.fixture(scope="module")
+def awkward_table(awkward_tables):
+    return awkward_tables["all_dirty"]
 
 
 def _key(live_keys):
@@ -221,40 +284,41 @@ def _key(live_keys):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
-def test_lookup_equals_filtered_read_property(spark, awkward_table, data):
+def test_lookup_equals_filtered_read_property(spark, awkward_tables, data):
     """``lookup`` over any keys (quotes, backslashes, newlines, multi-byte
-    text, the empty string) equals the full read filtered in Python."""
-    t, full = awkward_table
-    keys = data.draw(st.lists(_key(sorted(full)), max_size=12))
-    got = sorted(
-        (r.asDict() for r in t.lookup(spark, keys).collect()),
-        key=lambda r: r["doc_id"],
-    )
-    assert got == [full[k] for k in sorted(set(keys)) if k in full]
+    text, the empty string) equals the full read filtered in Python, on
+    tables whose buckets are all dirty or mix clean and dirty groups."""
+    keys = data.draw(st.lists(_key(sorted(awkward_tables["all_dirty"][1])), max_size=12))
+    for name, (t, full) in awkward_tables.items():
+        got = sorted(
+            (r.asDict() for r in t.lookup(spark, keys).collect()),
+            key=lambda r: r["doc_id"],
+        )
+        assert got == [full[k] for k in sorted(set(keys)) if k in full], name
 
 
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(data=st.data())
-def test_scan_range_equals_filtered_read_property(spark, awkward_table, data):
+def test_scan_range_equals_filtered_read_property(spark, awkward_tables, data):
     """``scan_range`` with any bounds equals the full read filtered in
     Python (Spark's binary string order is code-point order, as in
-    Python)."""
-    t, full = awkward_table
-    bounds = data.draw(st.lists(_key(sorted(full)), min_size=2, max_size=2))
-    lo, hi = sorted(bounds)
-    got = sorted(
-        (r.asDict() for r in t.scan_range(spark, lo, hi).collect()),
-        key=lambda r: r["doc_id"],
+    Python), on all-dirty and mixed clean/dirty tables."""
+    bounds = data.draw(
+        st.lists(_key(sorted(awkward_tables["all_dirty"][1])), min_size=2, max_size=2)
     )
-    assert got == [full[k] for k in sorted(full) if lo <= k <= hi]
+    lo, hi = sorted(bounds)
+    for name, (t, full) in awkward_tables.items():
+        got = sorted(
+            (r.asDict() for r in t.scan_range(spark, lo, hi).collect()),
+            key=lambda r: r["doc_id"],
+        )
+        assert got == [full[k] for k in sorted(full) if lo <= k <= hi], name
 
 
 def _file_scans(df):
     """The ``FileScan`` lines of ``df``'s executed plan."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return [ln for ln in plan.splitlines() if "FileScan" in ln]
+    return [ln for ln in executed_plan(df).splitlines() if "FileScan" in ln]
 
 
 def _pushed(scan: str) -> str:
@@ -283,6 +347,21 @@ def test_key_predicates_reach_the_dirty_file_scans(spark, awkward_table):
         pushed = _pushed(scan)
         assert "GreaterThanOrEqual(doc_id," in pushed, scan
         assert "LessThanOrEqual(doc_id," in pushed, scan
+
+
+def test_lookup_on_clean_buckets_does_not_shuffle(spark, awkward_tables):
+    """Only bucket groups holding a delta are resolved: a lookup whose
+    keys all hash to the compacted group is one filtered scan — one Spark
+    job, no resolving aggregate — on one spec and mid spec evolution."""
+    for name in ("mixed", "mixed_mid_evolution"):
+        t, full = awkward_tables[name]
+        keys = [k for k in sorted(full) if bucket_of(k, N_AWK_BUCKETS) == 0][:10]
+        assert len(keys) >= 5, name
+        rows, jobs = jobs_started(spark, lambda: t.lookup(spark, keys).collect())
+        assert sorted(r["doc_id"] for r in rows) == keys, name
+        assert jobs == 1, (name, jobs)
+        plan = executed_plan(t.lookup(spark, keys))
+        assert "SortAggregate" not in plan and "Exchange" not in plan, (name, plan)
 
 
 # ---------------------------------------------------------------------- #

@@ -50,6 +50,14 @@ def jobs_started(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def executed_plan(df) -> str:
+    """``df``'s executed physical plan as text.  ``df`` is collected
+    first: under adaptive execution the final plan exists only once the
+    query has run."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def py4j_round_trips(spark, fn):
     """``fn()`` and the number of py4j commands its thread sent to the JVM
     while it ran (each one is a blocking Python->JVM round trip).  The
