@@ -13,9 +13,9 @@ partition, so two DIFFERENT events on different partitions can tie on
 (event_time, offset) — without the tiebreak, which copy survives would be
 engine-scheduling-dependent.  The winner's src_partition is PERSISTED as
 ``_last_src_partition`` bookkeeping, so the same tertiary rule applies
-across batch boundaries, at merge-on-read resolution (``lww_resolve``) and
-in the COW monotonicity filter — a tie split across two micro-batches
-resolves exactly as it would inside one batch.  (A tie on the FULL triple
+across batch boundaries, at merge-on-read resolution (``lww_resolve``, in
+reads and compaction) — a tie split across two micro-batches resolves
+exactly as it would inside one batch.  (A tie on the FULL triple
 is the same event redelivered: the stored row is kept, idempotently.)  One
 ordering rule everywhere => the final table state is invariant under batch
 re-slicing, duplicate delivery, intra-batch shuffling and parallelism
@@ -33,14 +33,13 @@ Scale notes:
     perfbench) a steady fused trigger runs 3 Spark jobs with this plan; the
     narrow-agg + broadcast-join plan it replaced ran 5 and cost 13-14% more
     work CPU per commit, on the Zipf-keyed workload as on the uniform one.
-  * The MERGE join (C5) is key-unique on both sides by construction
-    (post-LWW batch x one-row-per-key table slice), so no join skew exists
-    to defuse; AQE broadcasts the batch side when it is small.
-  * Manifest pruning (O3) bounds the slice to files whose bucket AND
-    doc_id range can intersect the batch — per-trigger cost is O(batch
-    neighborhood), never O(table).
+  * The MERGE (C5) is merge-on-read: the winners are written as bucketed
+    delta files and nothing of the table is read, so per-trigger cost is
+    O(batch), never O(table).  Readers and compaction resolve base+delta
+    per bucket group, and compaction rewrites only the groups over
+    ``compact_threshold``.
   * Plan construction is driver cost paid on every trigger: each PySpark
-    Column call is one or more py4j round trips, so the MOR hot path
+    Column call is one or more py4j round trips, so the hot path
     builds its stats, LWW and delta projection from SQL strings
     (``selectExpr``/``F.expr``).  With 8 source partitions a steady fused
     trigger sends 111 py4j commands where per-column Column chains sent
@@ -57,10 +56,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
-from ..functions.tokens import n_tok_expr, n_tok_sql, validate_tokens_arrow
+from ..functions.tokens import n_tok_sql, validate_tokens_arrow
 from ..schema import (
     ALLOWED_WIDENINGS,
-    BOOKKEEPING_COLS,
     CDC_META_COLS,
     sql_cast,
     sql_ident,
@@ -70,7 +68,6 @@ from ..sources.table import (
     CommitConflictError,
     SequenceTable,
     _schema_to_json,
-    bucket_expr,
     changes_as_events,
     lww_pick,
 )
@@ -127,21 +124,6 @@ class ApplyResult:
     wall_ms: int = 0
     per_partition: list[dict] = field(default_factory=list)
     events_quarantined: int = 0
-
-
-def _lex_gt(b_et, b_off, b_sp, t_et, t_off, t_sp):
-    """(b_et, b_off, b_sp) > (t_et, t_off, t_sp); null target => True (new
-    key).  ``t_sp`` null (legacy rows without the persisted tiebreak)
-    sorts lowest, matching ``lww_resolve``."""
-    t_sp = F.coalesce(t_sp, F.lit(-1))
-    return (
-        t_et.isNull()
-        | (b_et > t_et)
-        | (
-            (b_et == t_et)
-            & ((b_off > t_off) | ((b_off == t_off) & (b_sp > t_sp)))
-        )
-    )
 
 
 # ------------------------------------------------------------------ #
@@ -211,7 +193,8 @@ def quarantine_bad_events(
 
     A CDC event is malformed when it cannot participate in the engine's
     ordering/merge contract: null ``doc_id`` (no merge key), null
-    ``event_time``/``offset`` (no LWW position), or an op outside
+    ``event_time``/``offset``/``src_partition`` (no LWW position; the
+    partition is also the lineage key), or an op outside
     {I, U, D}.  Without a quarantine such rows flow into the LWW aggregation
     (null keys group together, null ordering fields sort below every real
     event) and materialize garbage table rows that only a rollback can
@@ -234,12 +217,15 @@ def quarantine_bad_events(
         F.col("doc_id").isNull()
         | F.col("event_time").isNull()
         | F.col("offset").isNull()
+        | F.col("src_partition").isNull()
         | ~op_ok
     )
     reason = (
         F.when(F.col("doc_id").isNull(), F.lit("null_doc_id"))
         .when(
-            F.col("event_time").isNull() | F.col("offset").isNull(),
+            F.col("event_time").isNull()
+            | F.col("offset").isNull()
+            | F.col("src_partition").isNull(),
             F.lit("null_ordering_field"),
         )
         .otherwise(F.lit("unknown_op"))
@@ -257,54 +243,67 @@ def quarantine_bad_events(
 
 
 # ------------------------------------------------------------------ #
-# C4 + C5 + C6: idempotency filter, MERGE, lineage — one batch apply
+# C4 + C5 + C6: idempotent merge-on-read apply, lineage — one batch
 # ------------------------------------------------------------------ #
+def _null_partition_error(bid: str) -> ValueError:
+    return ValueError(
+        f"batch {bid}: events with a null src_partition (the LWW "
+        "tiebreak and the lineage key); pass quarantine_dir to divert them"
+    )
+
+
 def apply_batch(
     spark: SparkSession,
     table: SequenceTable,
     events: DataFrame,
     batch_id: str | int,
-    mode: str = "mor",
     compact_threshold: int | None = 16,
     known_partitions: list[int] | None = None,
     quarantine_dir: str | None = None,
 ) -> ApplyResult:
-    """Apply one micro-batch of change events to the table, exactly once.
-    Winners per key come from ``lww_winners`` (one ``max_by`` aggregation).
+    """Apply one micro-batch of change events to the table, exactly once,
+    merge-on-read: the batch's LWW winners (``lww_winners``, one
+    ``max_by`` aggregation) are stamped with bookkeeping columns and
+    committed as bucketed DELTA files.  Nothing of the existing table is
+    read or rewritten, so per-trigger cost is O(batch).  Readers resolve
+    base+delta by the same ordering rule (``lww_resolve``), and
+    ``compact_threshold`` bounds read amplification by folding a bucket's
+    deltas back into base files once it accumulates that many delta files
+    (Iceberg v2 equality-delete + RewriteDataFiles, rebuilt from scratch).
+    ``compact_threshold=1`` is the read-optimized table: each trigger
+    compacts the buckets it dirtied, leaving key-unique base files.
+
+    Idempotent on batch_id (S6): a replayed batch returns the existing
+    snapshot without touching data.  Row-level idempotency (C4) comes from
+    resolution itself: a redelivered or out-of-order event is written too
+    and loses (or ties, as the same event) against the stored row's
+    ``(_last_event_time, _last_offset, _last_src_partition)`` — table
+    state IS the dedup state, so no Spark state store grows with the key
+    space (SURVEY.md §4.3 layer 2).
 
     Lineage stats (per source partition: offset range, events in, winners
-    written) and the batch's max schema_version ride the MOR delta-write
-    job itself, as ``Observation``s on the events and winners relations
+    written) and the batch's max schema_version ride the delta-write job
+    itself, as ``Observation``s on the events and winners relations
     indexed by the batch's source partitions.  ``known_partitions`` only
     decides where that partition list comes from: the source's partition
     ids when the caller knows them (a Kafka consumer always does — topic
     partition count), else one column-pruned distinct over
     ``src_partition`` (its shuffle costs two more Spark jobs per trigger:
     5 instead of 3 for a steady one; the job-scheduling floor is what
-    caps streaming scaling efficiency, BENCH.md §1).
-    Events outside the hinted set are detected from the observed totals
-    and recounted with grouped stats jobs (correct, just not fused).
-    ``mode='cow'`` computes its stats in one grouped job either way.
+    caps streaming scaling efficiency, BENCH.md §1).  Events outside the
+    hinted set are detected from the observed totals and recounted with
+    grouped stats jobs (correct, just not fused).
 
-    Idempotent on batch_id (S6): a replayed batch returns the existing
-    snapshot without touching data.  Row-level idempotency (C4) comes from
-    the (event_time, offset) monotonicity test against stored bookkeeping —
-    table state IS the dedup state, so no Spark state store grows with the
-    key space (SURVEY.md §4.3 layer 2).
+    ``rows_applied`` means "winners written": a stale winner that later
+    loses at resolution is still counted, because counting true applies
+    would need the stored-bookkeeping join this path exists to avoid.
+    The lineage row records this (``rows_applied_semantics``).
 
-    mode='mor' (default, the 10^10-scale path): merge-on-read — write the
-    batch's LWW winners as bucketed DELTA files and commit; nothing of the
-    existing table is read or rewritten, so per-trigger cost is O(batch).
-    Readers resolve base+delta by the same (event_time, offset) rule
-    (``lww_resolve``), and ``compact_threshold`` bounds read amplification
-    by folding deltas back into base files once any bucket accumulates
-    that many delta files (Iceberg v2 equality-delete + RewriteDataFiles,
-    rebuilt from scratch).
-
-    mode='cow' (copy-on-write): the read-optimized path — full-outer MERGE
-    into the pruned slice of touched files, leaving one key-unique base
-    row set.  Identical final state (tests assert both modes against the
-    same oracle); per-trigger cost O(touched files).
+    A null ``src_partition`` is rejected with a ValueError and nothing is
+    committed (``quarantine_dir`` diverts such events instead).  Unhinted,
+    the partition listing finds it before any write; hinted, the recount
+    does, after the delta files were staged — they stay uncommitted
+    orphans for expiry's GC, like an aborted DML.
     """
     t0 = time.monotonic()
     bid = str(batch_id)
@@ -321,223 +320,19 @@ def apply_batch(
 
     snap = table.snapshot()
     n_buckets = snap["n_buckets"]
-    table_schema = table.user_schema(snap)
 
     # ---- C7: reconcile schemas (metadata-only; no data rewrite) ----
-    new_schema, changes = evolve_schema(table_schema, events.schema)
+    new_schema, changes = evolve_schema(table.user_schema(snap), events.schema)
 
-    if mode == "mor":
-        parts = (
-            sorted(set(known_partitions))
-            if known_partitions is not None
-            # column-pruned: the token column never leaves the footers
-            else sorted(
-                r[0] for r in events.select("src_partition").distinct().collect()
-            )
-        )
-        return _apply_mor(
-            spark, table, events, parts, bid, snap, new_schema, changes, t0,
-            compact_threshold, quarantined,
-        )
+    if known_partitions is not None:
+        parts = sorted(set(known_partitions))
+    else:
+        # column-pruned: the token column never leaves the footers
+        found = [r[0] for r in events.select("src_partition").distinct().collect()]
+        if None in found:
+            raise _null_partition_error(bid)
+        parts = sorted(found)
 
-    # ---- C6: ONE column-pruned job for lineage stats + the batch's max
-    # schema_version (offset/src_partition/schema_version only — the token
-    # column never leaves the parquet footer for this scan) ----
-    prog = (
-        events.groupBy("src_partition")
-        .agg(
-            F.min("offset").alias("min_offset"),
-            F.max("offset").alias("max_offset"),
-            F.count(F.lit(1)).alias("events_in"),
-            F.max("schema_version").alias("sv"),
-        )
-        .collect()
-    )
-    batch_sv = max((r["sv"] or 0) for r in prog) if prog else 0
-    sv, register = _register_version(snap, batch_sv, new_schema, changes)
-    user_cols = [f.name for f in new_schema.fields]
-
-    # ---- C1+C2+C3: one winner per key.  Persisted: reused by the
-    # merge-planner collect, the C4 join and the merge itself — without
-    # this the LWW aggregation would run 3x ----
-    winners = lww_winners(events).persist()
-
-    # ---- O3: plan the touched slice ----
-    tb = (
-        winners.withColumn("_bucket", bucket_expr("doc_id", n_buckets))
-        .groupBy("_bucket")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .collect()
-    )
-    touched = {r["_bucket"] for r in tb}
-    bounds = {r["_bucket"]: (r["lo"], r["hi"]) for r in tb}
-    rewrite_files, carry_files = table.plan_merge_files(snap, touched, bounds)
-    # key-unique target side for the C4/C5 joins: groups holding
-    # merge-on-read deltas are resolved, clean groups stream as they are
-    target_slice = table._resolve(spark, snap, rewrite_files, user_schema=new_schema)
-
-    # ---- C4: applies-flag via column-pruned bookkeeping join ----
-    bk = target_slice.select(
-        "doc_id", "_last_event_time", "_last_offset", "_last_src_partition"
-    )
-    have = set(winners.columns)
-    typed = {f.name: f.dataType for f in new_schema.fields}
-    b = winners.select(
-        F.col("doc_id").alias("_b_doc_id"),
-        "op",
-        "offset",
-        "src_partition",
-        "epoch",
-        "event_time",
-        *[
-            (F.col(c) if c in have else F.lit(None)).cast(typed[c]).alias(f"_b_{c}")
-            for c in user_cols
-            if c != "doc_id"
-        ],
-    )
-    w = b.join(bk, b["_b_doc_id"] == bk["doc_id"], "left").withColumn(
-        "_applies",
-        _lex_gt(
-            F.col("event_time"),
-            F.col("offset"),
-            F.col("src_partition"),
-            F.col("_last_event_time"),
-            F.col("_last_offset"),
-            F.col("_last_src_partition"),
-        ),
-    ).drop("doc_id", "_last_event_time", "_last_offset", "_last_src_partition")
-    w = w.persist()
-
-    # ---- C6: applied counts per source partition (lineage) ----
-    applied_rows = (
-        w.filter("_applies").groupBy("src_partition").count().collect()
-    )
-    per_partition = _per_partition(prog, applied_rows)
-    events_in = sum(p["events_in"] for p in per_partition)
-    rows_applied = sum(p["rows_applied"] for p in per_partition)
-
-    # ---- C5: MERGE (copy-on-write over the pruned slice) ----
-    applies = F.col("_applies") & F.col("_b_doc_id").isNotNull()
-    j = target_slice.join(
-        w, target_slice["doc_id"] == w["_b_doc_id"], "full_outer"
-    )
-    is_delete = applies & (F.col("op") == "D")
-    merged_cols = [F.coalesce(target_slice["doc_id"], w["_b_doc_id"]).alias("doc_id")]
-    for c in user_cols:
-        if c == "doc_id":
-            continue
-        src = F.when(is_delete, F.lit(None)).when(applies, F.col(f"_b_{c}")).otherwise(
-            target_slice[c]
-        )
-        if c == "n_tok":
-            # maintain the invariant column if the producer omitted it (C8
-            # JVM-side kernel; stays inside whole-stage codegen)
-            tok = F.when(is_delete, F.lit(None)).when(applies, F.col("_b_tokens")).otherwise(target_slice["tokens"])
-            src = F.coalesce(src, n_tok_expr(tok))
-        merged_cols.append(src.alias(c))
-    merged_cols += [
-        F.when(applies, F.col("offset")).otherwise(target_slice["_last_offset"]).alias("_last_offset"),
-        F.when(applies, F.col("event_time")).otherwise(target_slice["_last_event_time"]).alias("_last_event_time"),
-        F.when(applies, F.col("epoch")).otherwise(target_slice["_last_epoch"]).alias("_last_epoch"),
-        F.when(applies, F.col("src_partition"))
-        .otherwise(target_slice["_last_src_partition"])
-        .alias("_last_src_partition"),
-        F.when(is_delete, F.lit(True))
-        .when(applies, F.lit(False))
-        .otherwise(F.coalesce(target_slice["_deleted"], F.lit(False)))
-        .alias("_deleted"),
-    ]
-    merged = j.select(merged_cols)
-
-    new_files = table._write_data_files(
-        merged, n_buckets, sv, batch_tag=bid, sort_cols=snap.get("sort_order"), bloom=snap.get("bloom_filter"), zorder=snap.get("zorder")
-    )
-
-    # ---- S10: explicit change set (Delta-CDF role).  COW base files mix
-    # rewritten-but-unchanged rows with real changes, so the feed must be
-    # written separately — O(applied rows), from the already-persisted w
-    # (a cache read, but still one extra write job per COW trigger; the
-    # accepted cost of the read-optimized mode — MOR's change feed is its
-    # delta files, zero extra IO).
-    ch_is_del = F.col("op") == "D"
-    ch_cols = [F.col("_b_doc_id").alias("doc_id")]
-    for f2 in new_schema.fields:
-        if f2.name == "doc_id":
-            continue
-        src2 = F.when(ch_is_del, F.lit(None).cast(f2.dataType)).otherwise(
-            F.col(f"_b_{f2.name}").cast(f2.dataType)
-        )
-        if f2.name == "n_tok":
-            src2 = F.coalesce(src2, n_tok_expr(F.when(~ch_is_del, F.col("_b_tokens"))))
-        ch_cols.append(src2.alias(f2.name))
-    ch_cols += [
-        F.col("offset").alias("_last_offset"),
-        F.col("event_time").alias("_last_event_time"),
-        F.col("epoch").alias("_last_epoch"),
-        F.col("src_partition").cast("int").alias("_last_src_partition"),
-        ch_is_del.alias("_deleted"),
-    ]
-    change_files = table._write_data_files(
-        w.filter("_applies").select(ch_cols), n_buckets, sv,
-        batch_tag=f"{bid}chg", kind="changelog",
-    )
-    w.unpersist()
-    winners.unpersist()
-
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    lineage = {
-        "batch_id": bid,
-        "events_in": events_in,
-        "rows_applied": rows_applied,
-        "schema_changes": changes,
-        "per_partition": per_partition,
-        "wall_ms": wall_ms,
-    }
-    # COW planned its rewrite against `snap`; a concurrent commit means the
-    # merge itself is stale — fail loudly, caller redoes the batch
-    sid = table.commit(
-        bid,
-        new_files,
-        carry_files,
-        schema_version=sv,
-        new_schema=register,
-        lineage=lineage,
-        change_files=change_files,
-        expected_parent_id=snap["snapshot_id"],
-    )
-    return ApplyResult(bid, sid, rows_applied, events_in, wall_ms=wall_ms,
-                       per_partition=per_partition)
-
-
-def _apply_mor(
-    spark: SparkSession,
-    table: SequenceTable,
-    events: DataFrame,
-    parts: list[int],
-    bid: str,
-    snap: dict,
-    new_schema: T.StructType,
-    changes: list[str],
-    t0: float,
-    compact_threshold: int | None,
-    quarantined: int,
-) -> ApplyResult:
-    """Merge-on-read apply: stamp the batch's LWW winners with bookkeeping
-    columns and commit them as delta files — no table read, no rewrite,
-    O(batch) per trigger.  Redelivered/out-of-order rows are written too
-    and simply lose at read-time resolution (same ordering rule, same
-    final state).  Lineage stats, indexed by the source partitions
-    ``parts``, and the batch's max schema_version are observed during the
-    delta write: no separate stats job.
-
-    Lineage semantics: in this mode ``rows_applied`` means "winners
-    written" — a stale winner that later loses at read-time resolution is
-    still counted, whereas COW counts only rows passing the C4
-    monotonicity filter.  Counting true applies here would require the
-    stored-bookkeeping join MOR exists to avoid, so the difference is
-    recorded in the lineage row (``rows_applied_semantics``) instead of
-    being papered over."""
-    n_buckets = snap["n_buckets"]
     obs_ev = Observation()
     stats = [F.expr("max(schema_version) AS sv"), F.expr("count(1) AS n_total")]
     if parts:
@@ -629,6 +424,8 @@ def _apply_mor(
             )
             .collect()
         )
+        if any(r["src_partition"] is None for r in prog):
+            raise _null_partition_error(bid)
         applied_rows = (
             lww_winners(events)
             .groupBy("src_partition")

@@ -16,7 +16,7 @@ surface keeps working:
   then only those groups are rewritten.  At 10^10 rows a delete of one
   key rewrites ~1/B of the table's files.
 * **Mirror-convergent** — DML emits change rows (``kind="changelog"``)
-  like any COW apply, and stamps the affected rows with an ordering
+  beside its rewritten files, and stamps the affected rows with an ordering
   triple STRICTLY ABOVE their previous version (event_time bumped to the
   DML wall clock, or offset+1 when the row's event time is already at or
   past it).  A mirror tailing ``read_changes`` therefore applies the DML
@@ -140,7 +140,8 @@ def _run_dml(
         # many buckets the predicate scatters across.  Old versions stay
         # in place and lose at read-time resolution; compaction drops
         # them physically later.  COW pays the rewrite up front and keeps
-        # reads resolution-free — the same duality as apply_batch.
+        # reads resolution-free — the trade apply_batch's
+        # compact_threshold makes for the stream.
         hit = F.coalesce(F.expr(predicate), F.lit(False)) & ~F.col("_deleted")
         ts = time.time()
         sv = snap["schema_version"]

@@ -45,9 +45,9 @@ BOOKKEEPING_FIELDS = [
     # source partition, so two different events can tie on (event_time,
     # offset) across partitions.  The write path breaks that tie by
     # src_partition; storing the winner's src_partition lets read-time
-    # resolution (lww_resolve) and the COW monotonicity filter apply the
-    # SAME tertiary rule across batch boundaries — without it, the final
-    # state would depend on how the event log was sliced into batches.
+    # resolution (lww_resolve) apply the SAME tertiary rule across batch
+    # boundaries — without it, the final state would depend on how the
+    # event log was sliced into batches.
     T.StructField("_last_src_partition", T.IntegerType(), True),
     T.StructField("_deleted", T.BooleanType(), False),
 ]

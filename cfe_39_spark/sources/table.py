@@ -82,7 +82,8 @@ EPOCH0 = "1970-01-01 00:00:00"
 # parent snapshot's files".  The O(batch)-metadata hot path — the commit
 # reuses the parent's manifest segments by reference and never loads,
 # diffs, or rewrites the live file list.  Callers that carry a *computed*
-# list (COW merge, compaction) pass it materialized and pay a segment diff.
+# list (compaction, DML group rewrites) pass it materialized and pay a
+# segment diff.
 PARENT_FILES = object()
 
 # Metadata format version stamped into every snapshot descriptor (the
@@ -161,9 +162,9 @@ class _Snapshot(dict):
 
 class CommitConflictError(RuntimeError):
     """Another writer committed since this writer planned its snapshot.
-    MOR applies recover by re-planning the carried manifest (cheap — their
-    delta files are parent-independent); COW applies must redo the merge
-    against the new parent."""
+    Applies recover by re-planning the carried manifest (cheap — their
+    delta files are parent-independent); group rewrites (compaction, DML)
+    must redo the rewrite against the new parent."""
 
 
 def bucket_expr(doc_id_col: str, n_buckets: int):
@@ -253,9 +254,9 @@ def lww_resolve(df: DataFrame) -> DataFrame:
     winner per doc_id by the engine's single ordering rule: max
     (_last_event_time, _last_offset, _last_src_partition) — the same
     triple (event_time, offset, src_partition) the write side orders by,
-    so read-time resolution of merge-on-read deltas picks the exact row a
-    copy-on-write apply would have kept, whatever batch slicing produced
-    the deltas."""
+    so read-time resolution of merge-on-read deltas picks the exact row
+    applying the events one by one would have kept, whatever batch
+    slicing produced the deltas."""
     return lww_pick(
         df,
         "_last_event_time",
@@ -489,7 +490,7 @@ class SequenceTable:
         distinct values per file so parquet-mr sizes the filter exactly
         (unset → its adaptive/max-bytes sizing, ~<1% of a full row
         group).  Both persist as table properties inherited by every
-        commit (MOR deltas, COW merges, compaction, rebucket).
+        commit (MOR deltas, DML rewrites, compaction, rebucket).
 
         ``zorder_cols`` (opt-in, the Delta OPTIMIZE ZORDER / Iceberg
         z-order-rewrite role; mutually exclusive with ``sort_order``):
@@ -1292,7 +1293,7 @@ class SequenceTable:
         the parent's segment references and write one segment for
         ``new_files`` — O(batch) metadata, no segment ever loaded.
 
-        Materialized ``carried_files`` (COW merge / compaction / legacy
+        Materialized ``carried_files`` (compaction / DML rewrite / legacy
         callers): per parent segment, reuse it iff every entry survives
         unchanged in the carried list; otherwise pool its survivors into
         the new segment alongside ``new_files``.  Carried entries the
@@ -1651,13 +1652,13 @@ class SequenceTable:
         ``PARENT_FILES`` sentinel to carry the parent's file set by
         manifest-segment *reference* (the streaming hot path: O(batch)
         metadata per commit, nothing loaded), or a materialized entry list
-        when the commit drops/rewrites files (COW merge, compaction).
+        when the commit drops/rewrites files (compaction, DML rewrite).
 
         ``change_files``: manifest entries holding this commit's logical
         change rows (the CDC feed, S10).  Kept OUTSIDE ``files`` so state
         reads never see them; a merge-on-read apply passes its delta
         entries (the deltas ARE the change data — zero extra write), a
-        copy-on-write apply writes an explicit change set.  Maintenance
+        copy-on-write DML rewrite writes an explicit change set.  Maintenance
         commits (compaction/rebucket) pass none: they change no logical
         row, and ``read_changes`` correctly skips them.
 
@@ -2369,15 +2370,15 @@ class SequenceTable:
     ) -> DataFrame:
         """The state ``files`` hold: one row per key, bookkeeping and
         tombstones included — the one place merge-on-read resolution is
-        decided, for every read and every rewrite (compaction, the COW
-        apply slice, DML).
+        decided, for every read and every rewrite (compaction, DML,
+        ``merge_into``).
 
         Group-scoped resolution: only bucket groups holding a DELTA among
         ``files`` pay ``lww_resolve`` (its sort and shuffle); the clean
         groups' rows stream through a plain union-scan.  Exact because a
         key lives in exactly one group (same hash at write and read) and
-        base files are key-unique per group (create, compact, COW apply
-        and DML rewrite whole groups), so resolving per group and
+        base files are key-unique per group (create, compact and DML
+        rewrite whole groups), so resolving per group and
         unioning equals resolving everything — at 10^10 rows with 1
         dirty bucket of 1024, ~1000x less shuffle.  ``files`` may be any
         pruned selection: a group whose deltas were all pruned away
@@ -2918,57 +2919,6 @@ class SequenceTable:
             sid = s["parent_id"]
         return sorted(parts)
 
-    def plan_merge_files(
-        self, snap: dict, touched_buckets: set[int], key_bounds: dict[int, tuple[str, str]]
-    ) -> tuple[list[dict], list[dict]]:
-        """Split the manifest into (rewrite, carry) for a COW MERGE (O3).
-
-        A file is rewritten iff its bucket is touched AND its doc_id
-        min/max range can intersect the batch's key range for that bucket.
-        Everything else is carried into the child snapshot untouched.
-
-        Exception: a touched bucket GROUP that holds merge-on-read DELTA
-        files — or files written under an older bucket spec (mid lazy
-        spec evolution) — is rewritten WHOLE (no range pruning).  A key
-        can live in several files there (base + deltas, or old-spec base
-        + new-spec base); pruning could pull one version into the merge
-        while carrying another, breaking the key-unique output invariant.
-        Rewriting the group makes the COW merge double as its compaction
-        AND its spec migration — after it, the group is fully resolved
-        current-spec base files.  On a single-spec table a group IS a
-        bucket, so this reduces exactly to the old per-bucket rule.
-        """
-        nb = snap["n_buckets"]
-        s_min = self._min_live_spec(snap)
-        touched_groups = {b % s_min for b in touched_buckets}
-        force_groups = {
-            e["bucket"] % s_min
-            for e in snap["files"]
-            if e["bucket"] % s_min in touched_groups
-            and (
-                e.get("kind", "base") == "delta"
-                or self._entry_spec(snap, e) != nb
-            )
-        }
-        rewrite, carry = [], []
-        for e in snap["files"]:
-            b = e["bucket"]
-            if b % s_min in force_groups:
-                rewrite.append(e)
-                continue
-            # a non-forced file is current-spec base in a delta-free group
-            if b in touched_buckets:
-                lo, hi = key_bounds.get(b, (None, None))
-                if (
-                    e["min_doc_id"] is None
-                    or lo is None
-                    or not (e["max_doc_id"] < lo or e["min_doc_id"] > hi)
-                ):
-                    rewrite.append(e)
-                    continue
-            carry.append(e)
-        return rewrite, carry
-
     # ------------------------------------------------------------------ #
     # maintenance: merge-on-read compaction
     # ------------------------------------------------------------------ #
@@ -3097,7 +3047,7 @@ class SequenceTable:
         evolution; SURVEY.md §4.2 O2).
 
         A metadata-only commit: existing files stay in place under their
-        old spec; every subsequent write (MOR deltas, COW merges,
+        old spec; every subsequent write (MOR deltas, DML rewrites,
         compaction, create-like rewrites) lands under the new spec, and
         compaction migrates old groups incrementally (``compact(...,
         migrate_specs=True)``).  At 10^10 rows this is THE way to grow B:
@@ -3107,7 +3057,7 @@ class SequenceTable:
         Divisibility contract: ``new_n_buckets`` must be a strict multiple
         of the current count.  That makes a key's bucket under any live
         spec derivable from its current bucket (``b % s``), which is what
-        keeps every pruning site (lookup, manifest skipping, COW planning,
+        keeps every pruning site (lookup, manifest skipping, DML planning,
         dirty-group resolution) exact during the migration window.
         Returns the new snapshot id, or None if the count is unchanged.
         """

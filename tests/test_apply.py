@@ -100,13 +100,13 @@ def test_cross_partition_tie_breaks_deterministically(spark, tmp_path):
     assert outcomes == {("b", (9, 9))}
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor", "mor_compacted"])
 def test_cross_batch_tie_persists_tiebreak(spark, tmp_path, mode):
     """The tertiary src_partition tiebreak must survive BATCH BOUNDARIES:
     two different events tying on (event_time, offset) must resolve to the
     same winner whether they arrive in one batch or split across two, in
-    either arrival order, under MOR read-time resolution and COW merge
-    alike.  Requires the winner's src_partition to be persisted
+    either arrival order, under read-time resolution and in compacted
+    base files alike.  Requires the winner's src_partition to be persisted
     (_last_src_partition) — with only the pair stored, the split case is
     nondeterministic (ADVICE r3)."""
     import datetime
@@ -128,7 +128,8 @@ def test_cross_batch_tie_persists_tiebreak(spark, tmp_path, mode):
         )
         for i, rows in enumerate(batches):
             apply_batch(spark, t, spark.createDataFrame(rows, schema),
-                        batch_id=i, mode=mode, compact_threshold=None)
+                        batch_id=i,
+                        compact_threshold=1 if mode == "mor_compacted" else None)
         got = t.read(spark).collect()
         assert len(got) == 1, (mode, tag, got)
         assert got[0]["source"] == "b", (mode, tag, got)

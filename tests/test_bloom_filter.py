@@ -15,7 +15,7 @@ import pytest
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources.table import SequenceTable
-from tests.util import assert_state_equal
+from tests.util import assert_state_equal, rewrite_unchanged
 
 
 def _bloom_offset(spark, path: str, col: str) -> int:
@@ -77,8 +77,8 @@ def test_bloom_validates_columns(spark, tmp_path):
 
 
 def test_bloom_written_on_all_write_paths_state_exact(spark, tmp_path):
-    """Init base files, MOR deltas, compaction output, COW merges and
-    rebucket all carry the bloom; logical state matches the oracle."""
+    """Init base files, MOR deltas, compaction output, COW DML rewrites
+    and rebucket all carry the bloom; logical state matches the oracle."""
     fx, t = _setup(spark, tmp_path,
                    bloom_filter_cols=["doc_id"], bloom_filter_ndv=200)
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
@@ -88,8 +88,10 @@ def test_bloom_written_on_all_write_paths_state_exact(spark, tmp_path):
     _assert_blooms(spark, t)  # init base + MOR delta files
     t.compact(spark)
     _assert_blooms(spark, t)  # compaction rewrite
-    apply_batch(spark, t, spark.read.parquet(segs[3]), batch_id=3, mode="cow")
-    _assert_blooms(spark, t)  # COW merge output
+    apply_batch(spark, t, spark.read.parquet(segs[3]), batch_id=3,
+                compact_threshold=None)
+    rewrite_unchanged(spark, t, fx["expected"], segs[4:])
+    _assert_blooms(spark, t)  # COW DML rewrite output
     apply_batch(spark, t, spark.read.parquet(segs[4]), batch_id=4,
                 compact_threshold=None)
     t.rebucket(spark, 8)

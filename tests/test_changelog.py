@@ -13,20 +13,21 @@ from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources.table import SequenceTable, changes_as_events
 
-from .util import assert_state_equal
+from .util import APPLY_MODES, assert_state_equal
 
 
-def _replayed(spark, tmp_path, cfg, mode):
+def _replayed(spark, tmp_path, cfg, mode="mor"):
     fx = write_fixture(str(tmp_path / "fx"), cfg)
     init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
     a = SequenceTable.create(spark, str(tmp_path / "a"), init, n_buckets=4)
     for i, seg in enumerate(sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))):
-        apply_batch(spark, a, spark.read.parquet(seg), batch_id=i, mode=mode)
+        apply_batch(spark, a, spark.read.parquet(seg), batch_id=i,
+                    **APPLY_MODES[mode])
     b = SequenceTable.create(spark, str(tmp_path / "b"), init, n_buckets=4)
     return a, b, fx
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", list(APPLY_MODES))
 def test_changelog_mirror_bit_for_bit(spark, tmp_path, mode):
     """Per-commit incremental consumption: apply each commit's feed into a
     mirror table; the mirror must equal the source bit-for-bit."""
@@ -61,20 +62,6 @@ def test_changelog_net_collapses_to_one_row_per_key(spark, tmp_path):
     state = a.read(spark).select("doc_id", "n_tok")
     joined = live.join(state, "doc_id", "inner")
     assert joined.count() == live.count()
-
-
-def test_changelog_cow_counts_match_lineage(spark, tmp_path):
-    """COW writes an explicit change set; its row count must equal the
-    lineage's rows_applied (only rows passing the C4 filter are changes)."""
-    cfg = GenConfig(n_docs_initial=20, n_events=120, n_segments=3, dup_rate=0.25, seed=77)
-    a, _, _ = _replayed(spark, tmp_path, cfg, "cow")
-    chain = list(reversed(a.committed_chain()))
-    checked = 0
-    for parent, cur in zip(chain, chain[1:]):
-        feed = a.read_changes(spark, parent["snapshot_id"], cur["snapshot_id"])
-        assert feed.count() == cur["lineage"]["rows_applied"]
-        checked += 1
-    assert checked >= 3
 
 
 def test_changelog_skips_maintenance_commits(spark, tmp_path):
@@ -126,7 +113,7 @@ def test_changelog_two_hop_mirror_chain(spark, tmp_path):
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
     b_cursor = c_cursor = 1
     for i, seg in enumerate(segs):
-        apply_batch(spark, a, spark.read.parquet(seg), batch_id=i, mode="mor")
+        apply_batch(spark, a, spark.read.parquet(seg), batch_id=i)
         if i == 1:  # maintenance mid-span on the producer
             a.compact(spark)
             a.rebucket(spark, 8)
@@ -200,11 +187,11 @@ def _check_diff(got_rows, expected):
             assert r["source"] == img["source"], k
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", list(APPLY_MODES))
 def test_read_changelog_matches_fold_diff(spark, tmp_path, mode):
     """Net-diff classification (insert / update pair / delete with before
     image) must equal a pandas two-point fold diff under the exact LWW
-    triple rule, in both write modes, with hot keys, redeliveries and
+    triple rule, with and without per-trigger compaction, with hot keys, redeliveries and
     deletes in the span."""
     cfg = GenConfig(n_docs_initial=30, n_events=200, n_segments=6, dup_rate=0.2,
                     key_dist="hot", shuffle_within_segments=True, seed=91)
@@ -214,10 +201,12 @@ def test_read_changelog_matches_fold_diff(spark, tmp_path, mode):
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
     cut = 3
     for i, seg in enumerate(segs[:cut]):
-        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i, mode=mode)
+        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i,
+                    **APPLY_MODES[mode])
     from_sid = t.latest_snapshot_id()
     for i, seg in enumerate(segs[cut:], start=cut):
-        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i, mode=mode)
+        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i,
+                    **APPLY_MODES[mode])
     got = t.read_changelog(spark, from_sid).collect()
     _check_diff(got, _fold_diff(fx, tmp_path, cut))
 
@@ -253,11 +242,11 @@ def test_read_changelog_stale_redelivery_emits_nothing(spark, tmp_path):
     t = SequenceTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     apply_batch(spark, t, spark.createDataFrame(
         [("d1", [1, 2], 2, "new", "U", 7, 0, 0, 1, t2024)], schema),
-        batch_id=0, mode="mor", compact_threshold=None)
+        batch_id=0, compact_threshold=None)
     pre = t.latest_snapshot_id()
     apply_batch(spark, t, spark.createDataFrame(
         [("d1", [9], 1, "old", "U", 3, 0, 0, 1, t2023)], schema),
-        batch_id=1, mode="mor", compact_threshold=None)
+        batch_id=1, compact_threshold=None)
     assert t.read_changes(spark, pre).count() == 1  # raw feed: redelivery visible
     assert t.read_changelog(spark, pre).count() == 0  # net diff: winner unchanged
     got = t.read(spark).collect()
@@ -313,7 +302,7 @@ def test_read_changelog_drives_incremental_aggregate(spark, tmp_path):
     agg = dict(full_recompute())  # bootstrap at the initial snapshot
     cursor = t.latest_snapshot_id()
     for i, seg in enumerate(segs):
-        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i, mode="mor")
+        apply_batch(spark, t, spark.read.parquet(seg), batch_id=i)
         head = t.latest_snapshot_id()
         for r in t.read_changelog(spark, cursor, head).collect():
             sign = 1 if r["_change_type"] in ("insert", "update_after") else -1
@@ -342,7 +331,7 @@ def test_read_changelog_prunes_to_touched_buckets(spark, tmp_path, monkeypatch):
     apply_batch(spark, t, spark.createDataFrame(
         [("doc-00000007", [1, 2, 3], 3, "web", "U", 1, 0, 0, 1,
           datetime.datetime(2024, 6, 1))], schema),
-        batch_id="one-key", mode="mor", compact_threshold=None)
+        batch_id="one-key", compact_threshold=None)
     [target_bucket] = [
         r["_b"] for r in spark.createDataFrame([("doc-00000007",)], "doc_id string")
         .select(bucket_expr("doc_id", 16).alias("_b")).collect()

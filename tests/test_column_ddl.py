@@ -12,6 +12,8 @@ from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources.table import SequenceTable
 
+from .util import APPLY_MODES
+
 
 def _make_table(spark, tmp_path, n_docs=20, seed=311):
     cfg = GenConfig(n_docs_initial=n_docs, n_events=60, n_segments=2, seed=seed)
@@ -48,7 +50,7 @@ def test_rename_then_merge_lww_across_old_and_new_files(spark, tmp_path):
     table.rename_column("source", "origin")
     # post-rename batches arrive with the CURRENT name
     seg = spark.read.parquet(segs[0]).withColumnRenamed("source", "origin")
-    apply_batch(spark, table, seg, batch_id="post-rename", mode="mor")
+    apply_batch(spark, table, seg, batch_id="post-rename")
     out = table.read(spark)
     assert "origin" in out.columns and "source" not in out.columns
     # LWW resolved across files written before AND after the rename:
@@ -70,18 +72,18 @@ def test_drop_then_readd_does_not_resurrect(spark, tmp_path):
     assert out.filter(F.col("source").isNotNull()).count() == 0
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", list(APPLY_MODES))
 def test_batch_readd_after_drop_does_not_resurrect(spark, tmp_path, mode):
     # the subtler resurrection path: 'source' is dropped by DDL, then a
     # BATCH (not DDL) re-adds the name via schema evolution.  The merge
-    # read reconciles old state at the evolved schema — under COW it
+    # read reconciles old state at the evolved schema — a compaction
     # REWRITES old rows, so a name-based match there would persist the
     # dropped values forever, not just leak them into one read
     table, segs = _make_table(spark, tmp_path)
     table.drop_column("source")
     seg = spark.read.parquet(segs[0]).withColumn("source", F.lit("fresh"))
     touched = {r["doc_id"] for r in seg.select("doc_id").distinct().collect()}
-    apply_batch(spark, table, seg, batch_id="readd", mode=mode)
+    apply_batch(spark, table, seg, batch_id="readd", **APPLY_MODES[mode])
     rows = {r["doc_id"]: r["source"] for r in table.read(spark).collect()}
     assert all(v == "fresh" for d, v in rows.items() if d in touched)
     assert all(v is None for d, v in rows.items() if d not in touched)
@@ -94,7 +96,7 @@ def test_add_column_nulls_then_batch_fills(spark, tmp_path):
         table.read(spark).filter(F.col("quality").isNotNull()).count() == 0
     )
     seg = spark.read.parquet(segs[0]).withColumn("quality", F.lit(0.5))
-    apply_batch(spark, table, seg, batch_id="with-quality", mode="mor")
+    apply_batch(spark, table, seg, batch_id="with-quality")
     out = table.read(spark)
     touched = {r["doc_id"] for r in seg.select("doc_id").distinct().collect()}
     got = {r["doc_id"]: r["quality"] for r in out.collect()}
@@ -122,7 +124,7 @@ def test_batch_evolution_after_ddl_allocates_fresh_version(spark, tmp_path):
         .withColumnRenamed("source", "origin")
         .withColumn("quality", F.lit(1.0))
     )
-    apply_batch(spark, table, seg, batch_id="evolve-after-ddl", mode="mor")
+    apply_batch(spark, table, seg, batch_id="evolve-after-ddl")
     names = [f.name for f in table.user_schema().fields]
     assert "quality" in names and "origin" in names
     snap = table.snapshot()
@@ -138,7 +140,7 @@ def test_rollback_across_ddl_restores_old_shape(spark, tmp_path):
     # field-id registry survives the rollback: the renamed version's map
     # is still recorded, so re-applying DDL and reading history stays exact
     assert str(table.snapshot()["schema_version"] + 1) in table.snapshot()["field_ids"]
-    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0", mode="mor")
+    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0")
     assert "source" in table.read(spark).columns
 
 
@@ -156,7 +158,7 @@ def test_widen_column_ddl(spark, tmp_path):
     after = {r["doc_id"]: r["n_tok"] for r in out.select("doc_id", "n_tok").collect()}
     assert after == before  # values cast up, none lost
     # CDC keeps flowing after the widen
-    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0", mode="mor")
+    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0")
     assert table.read(spark).groupBy("doc_id").count().filter("count > 1").count() == 0
     with pytest.raises(ValueError, match="illegal type change"):
         table.widen_column("n_tok", T.IntegerType())  # narrowing
@@ -202,7 +204,7 @@ def test_legacy_table_backfill_is_name_exact(spark, tmp_path):
         json.dump(snap, f)
     before = table.read(spark).collect()
     assert len(before) > 0
-    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0", mode="mor")
+    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id="b0")
     assert "field_ids" in table.snapshot()
     assert table.read(spark).count() > 0
 

@@ -76,48 +76,6 @@ def test_concurrent_mor_writers_converge(spark, tmp_path):
     assert_state_equal(t.read(spark), fx["expected"])
 
 
-def test_cow_loses_race_to_mor_with_clear_conflict(spark, tmp_path):
-    """COW-vs-MOR race: a COW apply plans its rewrite against a parent
-    snapshot; if a MOR writer commits first, the COW merge is stale and
-    must surface CommitConflictError (never silently drop the MOR delta
-    from the manifest).  Retrying the COW batch against the new parent
-    then converges to the oracle state."""
-    cfg = GenConfig(n_docs_initial=20, n_events=120, n_segments=2,
-                    shuffle_within_segments=True, seed=89)
-    fx = write_fixture(str(tmp_path / "fx"), cfg)
-    init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
-    root = str(tmp_path / "t")
-    SequenceTable.create(spark, root, init, n_buckets=4)
-    segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
-
-    cow_handle = SequenceTable(root)
-    mor_handle = SequenceTable(root)
-    # interleave: force the COW writer to plan against the pre-MOR parent
-    # by committing the MOR batch between COW's plan and commit.  The
-    # simplest deterministic schedule: run MOR first in another handle,
-    # then hand the COW apply a stale snapshot via monkeypatched probe.
-    stale_snap = cow_handle.snapshot()
-    apply_batch(spark, mor_handle, spark.read.parquet(segs[1]), batch_id="mor",
-                compact_threshold=None)
-    orig = SequenceTable.snapshot
-
-    def stale_once(self, sid=None):
-        if sid is None and not getattr(self, "_served_stale", False):
-            self._served_stale = True
-            return stale_snap
-        return orig(self, sid)
-
-    cow_handle.snapshot = stale_once.__get__(cow_handle)
-    with pytest.raises(CommitConflictError):
-        apply_batch(spark, cow_handle, spark.read.parquet(segs[0]),
-                    batch_id="cow", mode="cow", compact_threshold=None)
-    # retry against the true parent converges
-    fresh = SequenceTable(root)
-    apply_batch(spark, fresh, spark.read.parquet(segs[0]), batch_id="cow-retry",
-                mode="cow", compact_threshold=None)
-    assert_state_equal(fresh.read(spark), fx["expected"])
-
-
 def test_commit_rejects_divergent_schema_for_same_version(spark, tmp_path):
     """Two writers racing to register DIFFERENT schemas under the same
     version number: the second must get CommitConflictError (round 2

@@ -233,19 +233,21 @@ def test_rollback_survives_crash_at_any_metadata_op(data):
 
 # ---- full apply_batch pipeline under random crash points -------------- #
 @pytest.mark.parametrize("backend", ["posix", "hdfs", "s3"])
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor", "mor_compacted"])
 def test_apply_batch_crash_retry_matches_oracle(spark, tmp_path, monkeypatch,
                                                 backend, mode):
     """Drive the REAL apply pipeline (Spark writes + commit) through two
     seeded random crash points per (mode, backend) cell; after retry the
-    final state must equal the fixture oracle bit-for-bit."""
+    final state must equal the fixture oracle bit-for-bit.  Under
+    ``mor_compacted`` the crash points also land inside the compaction
+    commit that follows the apply's own commit."""
     import glob
     import random
 
     from cfe_39_spark.fixtures import GenConfig, write_fixture
     from cfe_39_spark.operators.cdc import apply_batch
 
-    from .util import assert_state_equal
+    from .util import APPLY_MODES, assert_state_equal
 
     if backend == "hdfs":
         monkeypatch.setattr(fs, "_rename_file", _hdfs_rename)
@@ -260,14 +262,14 @@ def test_apply_batch_crash_retry_matches_oracle(spark, tmp_path, monkeypatch,
     init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
     t = SequenceTable.create(spark, str(tmp_path / "t"), init, n_buckets=4)
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
-    apply_batch(spark, t, spark.read.parquet(segs[0]), batch_id=0, mode=mode)
+    apply_batch(spark, t, spark.read.parquet(segs[0]), batch_id=0, **APPLY_MODES[mode])
 
     # count the metadata ops of a full apply on a twin, then crash the
     # real one at two seeded points inside that range
     twin = SequenceTable.create(spark, str(tmp_path / "twin"), init, n_buckets=4)
     p = _Patcher()
     counter = _count_ops(p)
-    apply_batch(spark, twin, spark.read.parquet(segs[0]), batch_id=0, mode=mode)
+    apply_batch(spark, twin, spark.read.parquet(segs[0]), batch_id=0, **APPLY_MODES[mode])
     n_ops = counter[0]
     p.restore()
     if backend == "hdfs":
@@ -281,7 +283,7 @@ def test_apply_batch_crash_retry_matches_oracle(spark, tmp_path, monkeypatch,
             _arm_crash(p, step)
             try:
                 apply_batch(spark, t, spark.read.parquet(segs[1]),
-                            batch_id=1, mode=mode)
+                            batch_id=1, **APPLY_MODES[mode])
             except SimulatedCrash:
                 pass
             p.restore()
@@ -291,7 +293,7 @@ def test_apply_batch_crash_retry_matches_oracle(spark, tmp_path, monkeypatch,
                 p.set("append_line", lambda path, line: None)
             # recovery: retry must land the batch exactly once
             r = apply_batch(spark, t, spark.read.parquet(segs[1]),
-                            batch_id=1, mode=mode)
+                            batch_id=1, **APPLY_MODES[mode])
             assert t.find_batch("1") == r.snapshot_id
             _assert_one_commit_per_batch(t)
             assert_state_equal(t.read(spark), fx["expected"])

@@ -12,7 +12,7 @@ from cfe_39_spark.operators.cdc import apply_batch, evolve_schema
 from cfe_39_spark.schema import SEQUENCE_SCHEMA_V1
 from cfe_39_spark.sources.table import SequenceTable
 
-from .util import assert_state_equal
+from .util import APPLY_MODES, assert_state_equal
 
 
 def _replay(spark, tmp_path, cfg, mode="mor"):
@@ -22,11 +22,12 @@ def _replay(spark, tmp_path, cfg, mode="mor"):
     for i, seg in enumerate(
         sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
     ):
-        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i, mode=mode)
+        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i,
+                    **APPLY_MODES[mode])
     return table, fx
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", list(APPLY_MODES))
 def test_add_column_mid_stream(spark, tmp_path, mode):
     cfg = GenConfig(
         n_docs_initial=20, n_events=120, n_segments=3, seed=71,
@@ -40,7 +41,7 @@ def test_add_column_mid_stream(spark, tmp_path, mode):
     assert "quality" in [f.name for f in table.user_schema().fields]
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", list(APPLY_MODES))
 def test_widen_n_tok_mid_stream(spark, tmp_path, mode):
     cfg = GenConfig(
         n_docs_initial=20, n_events=120, n_segments=3, seed=73,

@@ -213,16 +213,16 @@ def test_missing_change_file_detected(spark, tmp_path):
     """A deleted changelog file breaks read_changes / the streaming feed
     at read time; fsck must flag it with its own code (a data-only probe
     passes the table clean)."""
-    from cfe_39_spark.operators.cdc import apply_batch
+    from cfe_39_spark.operators.dml import update_where
 
     t = _mk(spark, tmp_path)
-    ev = _events(spark)
-    # COW: change files are written separately from data files (on MOR
-    # the delta files ARE the change feed, so deleting one fires both
-    # codes — also correct, but this test wants the isolated signal)
-    apply_batch(spark, t, ev, batch_id="b1", mode="cow")
+    # COW DML writes its change files separately from its rewritten data
+    # files (on MOR the delta files ARE the change feed, so deleting one
+    # fires both codes — also correct, but this test wants the isolated
+    # signal)
+    update_where(spark, t, {"source": "'x'"}, "doc_id = 'd001'")
     chg = t.snapshot().get("change_files") or []
-    assert chg, "apply_batch should have produced change files"
+    assert chg, "update_where should have produced change files"
     os.unlink(os.path.join(t.root, chg[0]["path"]))
     rep = check_table(t)
     assert "change_file_missing" in _codes(rep)
@@ -253,13 +253,12 @@ def test_missing_historical_change_file_detected(spark, tmp_path):
     """read_changes serves the whole retained span, so a changelog file
     lost from an OLDER snapshot must be flagged even when the tip's own
     change files are intact."""
-    from cfe_39_spark.operators.cdc import apply_batch
+    from cfe_39_spark.operators.dml import update_where
 
     t = _mk(spark, tmp_path)
-    apply_batch(spark, t, _events(spark), batch_id="b1", mode="cow")
+    update_where(spark, t, {"source": "'x'"}, "doc_id = 'd001'")
     old_chg = (t.snapshot().get("change_files") or [])[0]["path"]
-    ev2 = _events(spark).withColumn("offset", F.col("offset") + 100)
-    apply_batch(spark, t, ev2, batch_id="b2", mode="cow")
+    update_where(spark, t, {"source": "'y'"}, "doc_id = 'd002'")
     assert (t.snapshot().get("change_files") or []), "tip has change files"
     os.unlink(os.path.join(t.root, old_chg))
     rep = check_table(t)

@@ -64,20 +64,3 @@ def test_sequence_packing_reuses_one_shuffle(spark):
 
     df = REGISTRY["tx06_sequence_packing"].fn(spark, SF)
     assert count_exchanges(df) == 1, plan(df)
-
-
-def test_merge_file_pruning_unit():
-    from cfe_39_spark.sources.table import SequenceTable
-
-    t = SequenceTable.__new__(SequenceTable)
-    snap = {
-        "n_buckets": 2,
-        "files": [
-            {"bucket": 0, "min_doc_id": "a", "max_doc_id": "c", "path": "f0"},
-            {"bucket": 0, "min_doc_id": "x", "max_doc_id": "z", "path": "f1"},
-            {"bucket": 1, "min_doc_id": "a", "max_doc_id": "z", "path": "f2"},
-        ],
-    }
-    rewrite, carry = t.plan_merge_files(snap, {0}, {0: ("b", "d")})
-    assert [e["path"] for e in rewrite] == ["f0"]  # overlaps b..d
-    assert {e["path"] for e in carry} == {"f1", "f2"}  # out of range / untouched bucket

@@ -1,6 +1,7 @@
 """Property-based replay equivalence (SURVEY.md §5.2 item 4): random small
 event logs through the full engine must equal the independent pandas
-oracle fold, in both write modes, under random slicing/dup/skew knobs."""
+oracle fold, with and without per-trigger compaction and the partition
+hint, under random slicing/dup/skew knobs."""
 
 import glob
 
@@ -11,7 +12,7 @@ from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources.table import SequenceTable
 
-from .util import assert_state_equal
+from .util import APPLY_MODES, assert_state_equal
 
 configs = st.fixed_dictionaries(
     {
@@ -28,7 +29,7 @@ configs = st.fixed_dictionaries(
 
 # "mor_fused": MOR with ``known_partitions`` — the fused-stats path the
 # Kafka source and perfbench drive
-@pytest.mark.parametrize("mode", ["mor", "cow", "mor_fused"])
+@pytest.mark.parametrize("mode", ["mor", "mor_compacted", "mor_fused"])
 @settings(
     max_examples=4,
     deadline=None,
@@ -46,7 +47,7 @@ def test_random_log_matches_oracle(spark, tmp_path_factory, mode, cfg_kw):
     ):
         apply_batch(
             spark, table, spark.read.parquet(seg), batch_id=i,
-            mode="mor" if mode == "mor_fused" else mode,
             known_partitions=range(cfg.n_partitions) if mode == "mor_fused" else None,
+            **APPLY_MODES.get(mode, {}),
         )
     assert_state_equal(table.read(spark), fx["expected"])

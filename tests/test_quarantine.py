@@ -5,6 +5,8 @@ stream; SURVEY.md §2.2 C4 hardening)."""
 
 import glob
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from cfe_39_spark.fixtures import GenConfig, write_fixture
@@ -85,3 +87,42 @@ def test_quarantine_clean_batch_and_disabled_default(spark, tmp_path):
     r2 = apply_batch(spark, t2, spark.read.parquet(seg), batch_id=0)
     assert r2.events_quarantined == 0
     assert_state_equal(t2.read(spark), fx["expected"])
+
+
+def _null_partition_batch(spark, tmp_path, seed):
+    """A table plus a 5-event batch whose first 2 events carry a null
+    ``src_partition``."""
+    cfg = GenConfig(n_docs_initial=10, n_events=20, n_segments=1, seed=seed)
+    write_fixture(str(tmp_path / "fx"), cfg)
+    init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
+    table = SequenceTable.create(spark, str(tmp_path / "table"), init, n_buckets=4)
+    seg = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))[0]
+    ev = spark.read.parquet(seg)
+    rows = [r.asDict() for r in ev.orderBy("offset", "src_partition").limit(5).collect()]
+    for r in rows[:2]:
+        r["src_partition"] = None
+    return table, spark.createDataFrame(rows, ev.schema)
+
+
+@pytest.mark.parametrize("hinted", [False, True], ids=["unhinted", "hinted"])
+def test_null_src_partition_quarantined_or_rejected(spark, tmp_path, hinted):
+    """A null ``src_partition`` gives an event no LWW position (it is the
+    ordering tiebreak) and no lineage row: with a quarantine it is
+    diverted as ``null_ordering_field``; without one the batch is
+    rejected with a ValueError that names the column, and nothing is
+    committed."""
+    table, batch = _null_partition_batch(spark, tmp_path, seed=79)
+    hint = {"known_partitions": list(range(4))} if hinted else {}
+    sid = table.latest_snapshot_id()
+    with pytest.raises(ValueError, match="src_partition"):
+        apply_batch(spark, table, batch, batch_id="nulls", **hint)
+    assert table.latest_snapshot_id() == sid
+    assert table.find_batch("nulls") is None
+
+    qdir = str(tmp_path / "quarantine")
+    r = apply_batch(spark, table, batch, batch_id="nulls", quarantine_dir=qdir,
+                    **hint)
+    assert (r.events_quarantined, r.events_in) == (2, 3)
+    assert all(p["src_partition"] is not None for p in r.per_partition)
+    q = spark.read.parquet(qdir + "/batch-nulls").collect()
+    assert [x["_quarantine_reason"] for x in q] == ["null_ordering_field"] * 2

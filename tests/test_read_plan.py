@@ -64,8 +64,8 @@ def test_every_writer_honours_the_registered_schema(spark, tmp_path):
         assert not bad, (label, bad[:2])
 
     check("create")
-    apply_batch(spark, t, segs[0], batch_id=0, mode="cow")
-    check("cow apply + change files")
+    apply_batch(spark, t, segs[0], batch_id=0)
+    check("mor apply")
     apply_batch(spark, t, segs[1], batch_id=1, compact_threshold=None)
     check("mor delta")
     assert t.compact(spark) is not None
@@ -94,15 +94,16 @@ def test_every_writer_honours_the_registered_schema(spark, tmp_path):
     check("apply after add")
     t.rename_column("source", "origin")
     apply_batch(spark, t, segs[4].withColumnRenamed("source", "origin"),
-                batch_id=4, mode="cow")
-    check("apply after rename")
+                batch_id=4, compact_threshold=1)
+    check("apply + compaction after rename")
     t.drop_column("origin")
     apply_batch(spark, t, segs[5].drop("source"), batch_id=5,
                 compact_threshold=None)
     check("apply after drop")
     t.widen_column("n_tok", T.LongType())
-    apply_batch(spark, t, segs[6].drop("source"), batch_id=6, mode="cow")
-    check("apply after widen")
+    apply_batch(spark, t, segs[6].drop("source"), batch_id=6,
+                compact_threshold=1)
+    check("apply + compaction after widen")
     t.compact(spark)
     check("compaction across versions")
     assert len(t.snapshot()["schemas"]) >= 5  # four DDL versions registered

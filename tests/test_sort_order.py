@@ -14,7 +14,7 @@ import pytest
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources.table import SequenceTable
-from tests.util import assert_state_equal
+from tests.util import assert_state_equal, rewrite_unchanged
 
 
 def _setup(spark, tmp_path, sort_order):
@@ -51,8 +51,8 @@ def test_sort_order_validates_columns(spark, tmp_path):
 
 
 def test_sorted_layout_all_write_paths_state_exact(spark, tmp_path):
-    """MOR deltas, compaction output, COW merges and rebucket all honor
-    the table's sort order; logical state is byte-identical to an
+    """MOR deltas, compaction output, COW DML rewrites and rebucket all
+    honor the table's sort order; logical state is byte-identical to an
     unsorted table's."""
     fx, t = _setup(spark, tmp_path, ["doc_id"])
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
@@ -62,10 +62,10 @@ def test_sorted_layout_all_write_paths_state_exact(spark, tmp_path):
     _assert_files_sorted(t)  # init base + MOR delta files
     t.compact(spark)
     _assert_files_sorted(t)  # compaction rewrite
-    for i, s in enumerate(segs[3:4]):
-        apply_batch(spark, t, spark.read.parquet(s), batch_id=3 + i,
-                    mode="cow")
-    _assert_files_sorted(t)  # COW merge output
+    apply_batch(spark, t, spark.read.parquet(segs[3]), batch_id=3,
+                compact_threshold=None)
+    rewrite_unchanged(spark, t, fx["expected"], segs[4:])
+    _assert_files_sorted(t)  # COW DML rewrite output
     for i, s in enumerate(segs[4:]):
         apply_batch(spark, t, spark.read.parquet(s), batch_id=4 + i,
                     compact_threshold=None)

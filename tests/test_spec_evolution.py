@@ -34,11 +34,11 @@ def _segments(tmp_path):
     return sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
 
 
-def _apply_all(spark, t, segs, start=0, **kw):
+def _apply_all(spark, t, segs, start=0):
     for i, seg in enumerate(segs):
         apply_batch(
             spark, t, spark.read.parquet(seg), batch_id=start + i,
-            compact_threshold=kw.pop("compact_threshold", None), **kw,
+            compact_threshold=None,
         )
 
 
@@ -127,18 +127,26 @@ def test_compact_migrates_groups_incrementally(spark, tmp_path):
     assert t._min_live_spec(t.snapshot()) == 8
 
 
-def test_cow_merge_after_evolve(spark, tmp_path):
-    """COW mode mid-migration: touched groups holding old-spec files are
-    rewritten whole (the key-unique invariant), final state exact."""
+def test_cow_dml_after_evolve(spark, tmp_path):
+    """A copy-on-write DML rewrite mid-migration: the matched group, holding
+    old-spec files and deltas of both specs, is rewritten whole (the
+    key-unique invariant), final state exact."""
+    from cfe_39_spark.operators.dml import delete_where
+
     fx = _fixture(tmp_path)
     segs = _segments(tmp_path)
     init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
     t = SequenceTable.create(spark, str(tmp_path / "t"), init, n_buckets=4)
-    _apply_all(spark, t, segs[:3], mode="cow")
+    _apply_all(spark, t, segs[:3])
     t.evolve_bucket_spec(8)
-    _apply_all(spark, t, segs[3:], start=3, mode="cow")
-    assert_state_equal(t.read(spark), fx["expected"])
-    # COW rewrites whole touched groups -> base stays key-unique: read_state
+    _apply_all(spark, t, segs[3:], start=3)
+    victim = min(fx["expected"]["doc_id"])
+    r = delete_where(spark, t, f"doc_id = '{victim}'")
+    assert r is not None and r.rows_affected == 1 and r.groups_rewritten == 1
+    assert len(_specs_in_files(t)) == 2  # still mid-migration
+    exp = fx["expected"]
+    assert_state_equal(t.read(spark), exp[exp["doc_id"] != victim])
+    # DML rewrites whole groups -> base stays key-unique: read_state
     # (which trusts per-group uniqueness on its clean path) agrees with a
     # brute-force global LWW resolution
     from cfe_39_spark.sources.table import lww_resolve

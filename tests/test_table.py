@@ -1,5 +1,5 @@
 """Merge-on-read specifics: delta accumulation, read-time resolution,
-compaction, COW-over-MOR interop, auto-compaction, expiry (SURVEY.md §2.1
+compaction, auto-compaction, expiry (SURVEY.md §2.1
 S3/S6/S8, §4.2 O2/O3)."""
 
 import glob
@@ -33,26 +33,6 @@ def test_mor_compact_preserves_state(spark, tmp_path):
     assert_state_equal(table.read(spark), fx["expected"])
     # compaction is idempotent on the (now-changed) parent: second call is a no-op
     assert table.compact(spark) is None
-
-
-def test_cow_mode_matches_oracle(spark, tmp_path):
-    cfg = GenConfig(n_docs_initial=20, n_events=120, n_segments=3, seed=53)
-    table, fx, segs = _fixture(spark, tmp_path, cfg)
-    for i, seg in enumerate(segs):
-        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i, mode="cow")
-    assert table.delta_file_counts() == {}, "COW must not write delta files"
-    assert_state_equal(table.read(spark), fx["expected"])
-
-
-def test_cow_batch_over_mor_table(spark, tmp_path):
-    """A COW MERGE whose pruned slice contains unresolved delta files must
-    LWW-resolve the slice before joining (key-unique target invariant)."""
-    cfg = GenConfig(n_docs_initial=20, n_events=120, n_segments=3, dup_rate=0.25, seed=57)
-    table, fx, segs = _fixture(spark, tmp_path, cfg)
-    apply_batch(spark, table, spark.read.parquet(segs[0]), batch_id=0)
-    apply_batch(spark, table, spark.read.parquet(segs[1]), batch_id=1)
-    apply_batch(spark, table, spark.read.parquet(segs[2]), batch_id=2, mode="cow")
-    assert_state_equal(table.read(spark), fx["expected"])
 
 
 def test_auto_compaction_triggers(spark, tmp_path):
@@ -207,8 +187,8 @@ def test_rebucket_preserves_state_and_new_layout(spark, tmp_path):
     assert before.equals(after)
     # no-op when the count is unchanged; idempotent on batch_id otherwise
     assert table.rebucket(spark, 16) is None
-    # subsequent merges (both modes) work against the new layout
-    apply_batch(spark, table, spark.read.parquet(segs[2]), batch_id=2, mode="cow")
+    # a subsequent apply works against the new layout
+    apply_batch(spark, table, spark.read.parquet(segs[2]), batch_id=2)
     assert_state_equal(table.read(spark), fx["expected"])
 
 

@@ -46,7 +46,7 @@ def _rows(df):
     )
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor", "mor_compacted"])
 def test_recent_read_matches_post_filter(spark, tmp_path, mode):
     """Hand-built history with updates, a late delete, and an early delete:
     every bound (before, between, after all events) must match the
@@ -67,7 +67,8 @@ def test_recent_read_matches_post_filter(spark, tmp_path, mode):
     ]
     for i, rows in enumerate(batches):
         apply_batch(spark, t, spark.createDataFrame(rows, SCHEMA),
-                    batch_id=i, mode=mode, compact_threshold=None)
+                    batch_id=i,
+                    compact_threshold=1 if mode == "mor_compacted" else None)
     for h in (0, 2, 4, 7):
         got = t.read(spark, min_event_time=_ts(h))
         assert _rows(got) == _rows(_expected_recent(spark, t, _ts(h))), f"h={h}"

@@ -81,3 +81,22 @@ def py4j_round_trips(spark, fn):
     finally:
         conn.send_command = orig
     return out, n
+
+
+# apply_batch kwargs for the two table shapes the mode-parametrized tests
+# cover: merge-on-read with deltas left for read-time resolution, and the
+# read-optimized table, where each trigger compacts the buckets it dirtied
+APPLY_MODES = {"mor": {}, "mor_compacted": {"compact_threshold": 1}}
+
+
+def rewrite_unchanged(spark, table, expected: pd.DataFrame, later_segs) -> None:
+    """A copy-on-write group rewrite that changes no value: ``update_where``
+    setting ``source`` to itself on one live key of the final state that
+    none of ``later_segs`` touches.  The DML bumps that key's event time to
+    the wall clock, so a later event for it would lose; on an untouched key
+    the table still ends in the oracle's state."""
+    from cfe_39_spark.operators.dml import update_where
+
+    later = {r["doc_id"] for r in spark.read.parquet(*later_segs).select("doc_id").collect()}
+    key = min(d for d in expected["doc_id"] if d not in later)
+    assert update_where(spark, table, {"source": "source"}, f"doc_id = '{key}'")

@@ -39,7 +39,8 @@ def main() -> None:
     try:
         # the bench log is generated with 8 source partitions
         # (fixtures.gen_bench_log_spark n_partitions default) — the hint a
-        # Kafka consumer always has, enabling the fused one-job hot path
+        # Kafka consumer always has: lineage stats ride the delta-write
+        # job, with no jobs spent listing the batch's partitions
         parts = list(range(8))
         t = SequenceTable.create(spark, os.path.join(d, "t"), n_buckets=32)
         # Warm-up batch drawn from the replay's own first segment, applied
