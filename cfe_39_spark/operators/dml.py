@@ -1,34 +1,38 @@
-"""Predicate DML — ``delete_where`` / ``update_where`` (the Iceberg
-``DELETE FROM`` / ``UPDATE`` role, BASELINE.json north_star's "lake
-upsert" surface completed for OUT-OF-BAND corrections).
+"""Predicate DML — ``delete_where`` / ``update_where`` — and
+``merge_into`` (the Iceberg ``DELETE FROM`` / ``UPDATE`` / ``MERGE INTO``
+role, BASELINE.json north_star's "lake upsert" surface completed for
+OUT-OF-BAND corrections).
 
 A CDC table's state is normally written only by the change stream, but a
 real lake deployment also needs direct row-level DML that bypasses the
-log: GDPR erasure, bad-upstream-data correction, backfill fixes.  Both
-operators here are copy-on-write group rewrites that slot into the same
-snapshot/commit/changelog machinery the stream uses, so every downstream
-surface keeps working:
+log: GDPR erasure, bad-upstream-data correction, backfill fixes.  Every
+operator here writes the stream's shape: the changed rows are appended
+as merge-on-read delta files, so every downstream surface (reads,
+compaction, the change feed, mirrors) keeps working unchanged:
 
-* **O(matching groups), never O(table)** — one shuffle-free column-pruned
-  scan finds the bucket groups holding ANY raw row matching the
-  predicate (a superset is fine: the rewrite re-evaluates on resolved
-  winners; a false-positive group just gets an incidental compaction),
-  then only those groups are rewritten.  At 10^10 rows a delete of one
-  key rewrites ~1/B of the table's files.
-* **Mirror-convergent** — DML emits change rows (``kind="changelog"``)
-  beside its rewritten files, and stamps the affected rows with an ordering
-  triple STRICTLY ABOVE their previous version (event_time bumped to the
-  DML wall clock, or offset+1 when the row's event time is already at or
-  past it).  A mirror tailing ``read_changes`` therefore applies the DML
-  through the normal LWW rule and converges to the primary's state —
-  the invariant the whole engine sells.  Consequences, documented as
-  semantics: a redelivery of the pre-DML winning event no-ops (strictly
-  below the bump), and a genuinely NEW source event newer than the DML
-  timestamp overwrites the manual edit — "the fix holds until the source
-  speaks again".
-* **Exactly-once** — commits carry ``expected_parent_id``, so a DML
-  racing a stream trigger fails loudly and is retried against the new
-  snapshot instead of silently dropping the trigger's files.
+* **O(matched rows) written, O(matching groups) read** — one
+  shuffle-free column-pruned scan finds the bucket groups holding ANY
+  raw row matching the predicate (a superset is fine: the hit test runs
+  on resolved winners), only those groups are resolved, and only the
+  changed winners are written.  The old versions stay in place and lose
+  at read-time resolution; compaction drops them physically later.
+* **Mirror-convergent** — the delta files are also the commit's change
+  files, and the changed rows carry an ordering triple STRICTLY ABOVE
+  their previous version (event_time bumped to the DML wall clock, or
+  offset+1 when the row's event time is already at or past it).  A
+  mirror tailing ``read_changes`` therefore applies the DML through the
+  normal LWW rule and converges to the primary's state — the invariant
+  the whole engine sells.  Consequences, documented as semantics: a
+  redelivery of the pre-DML winning event no-ops (strictly below the
+  bump), and a genuinely NEW source event newer than the DML timestamp
+  overwrites the manual edit — "the fix holds until the source speaks
+  again".
+* **Exactly-once** — the commit goes through
+  ``SequenceTable.commit_rebase`` over the touched groups: it rebases
+  over a concurrent commit on OTHER groups and fails loudly
+  (``CommitConflictError``, re-plan) over one on its own groups, so a
+  DML never commits rows computed from a version another writer has
+  since replaced (no lost update).
 
 Zero matching rows ⇒ no commit (returns None); staged files from the
 aborted attempt are orphans the existing expiry GC reclaims.
@@ -44,27 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokens import n_tok_expr
-from ..sources.table import (
-    PARENT_FILES,
-    CommitConflictError,
-    SequenceTable,
-    bucket_expr,
-)
-
-BOOKKEEPING = (
-    "_last_offset",
-    "_last_event_time",
-    "_last_epoch",
-    "_last_src_partition",
-    "_deleted",
-)
+from ..sources.table import SequenceTable, bucket_expr
 
 
 @dataclass
 class DmlResult:
     snapshot_id: int
     rows_affected: int
-    groups_rewritten: int
     wall_ms: int
 
 
@@ -82,12 +72,12 @@ class MergeCardinalityError(ValueError):
 
 def _affected_groups(
     spark: SparkSession, table: SequenceTable, snap: dict, predicate: str
-) -> list[int]:
+) -> set[int]:
     """Bucket groups (ids under the smallest live spec) holding any RAW
     row matching the predicate — one column-pruned, shuffle-free scan
     (only doc_id + the predicate's columns leave the parquet footers).
     Raw rows (not LWW winners) keep this job aggregation-free; the
-    superset only costs an incidental compaction of a stale-match group."""
+    superset only costs resolving a stale-match group."""
     s_min = table._min_live_spec(snap)
     rows = (
         table._read_files(spark, snap, snap["files"])
@@ -96,7 +86,7 @@ def _affected_groups(
         .distinct()
         .collect()
     )
-    return sorted(r["_g"] for r in rows)
+    return {r["_g"] for r in rows}
 
 
 def _bump(ts: float):
@@ -112,161 +102,74 @@ def _bump(ts: float):
     return new_et, new_off
 
 
+def _commit_deltas(
+    table: SequenceTable,
+    snap: dict,
+    groups: set[int],
+    target: list[dict],
+    changed: DataFrame,
+    t0: float,
+    lineage: dict,
+) -> DmlResult | None:
+    """Write a DML's ``changed`` rows as delta files (laid out by the
+    table's sort order, bloom filter and z-order) and commit them over
+    ``groups``, whose planned file entries ``target`` are carried
+    unchanged.  ``commit_rebase`` rebases the commit over concurrent
+    commits on other groups and raises ``CommitConflictError`` over one
+    on these groups, whose rows the DML read stale.  No changed row ⇒
+    no commit (None)."""
+    bid = f"__{lineage['dml']}__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
+    deltas = table._write_data_files(
+        changed, snap["n_buckets"], snap["schema_version"], batch_tag=bid,
+        kind="delta", sort_cols=snap.get("sort_order"),
+        bloom=snap.get("bloom_filter"), zorder=snap.get("zorder"),
+    )
+    rows = sum(e["rows"] for e in deltas)
+    if rows == 0:
+        return None
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    sid = table.commit_rebase(
+        bid, target + deltas, snap, groups,
+        lineage={"mode": "mor", "rows_affected": rows, "wall_ms": wall_ms,
+                 **lineage},
+        # the delta files ARE this commit's change feed
+        change_files=deltas,
+    )
+    return DmlResult(sid, rows, wall_ms)
+
+
 def _run_dml(
     spark: SparkSession,
     table: SequenceTable,
     predicate: str,
     transform,
-    op_name: str,
-    lineage_extra: dict,
-    mode: str = "cow",
+    lineage: dict,
 ) -> DmlResult | None:
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"{op_name}: mode must be 'cow' or 'mor', got {mode!r}")
     t0 = time.monotonic()
     snap = table.snapshot()
     groups = _affected_groups(spark, table, snap, predicate)
     if not groups:
         return None
     s_min = table._min_live_spec(snap)
-    gset = set(groups)
-    target = [e for e in snap["files"] if e["bucket"] % s_min in gset]
-
-    if mode == "mor":
-        # merge-on-read DML (the 10^10-scale path for sparse predicates):
-        # the matched winners become delta rows with the bumped ordering
-        # triple — the SAME append the stream's MOR apply writes — so the
-        # commit is O(matched rows) with NO group rewrite at all, however
-        # many buckets the predicate scatters across.  Old versions stay
-        # in place and lose at read-time resolution; compaction drops
-        # them physically later.  COW pays the rewrite up front and keeps
-        # reads resolution-free — the trade apply_batch's
-        # compact_threshold makes for the stream.
-        hit = F.coalesce(F.expr(predicate), F.lit(False)) & ~F.col("_deleted")
-        ts = time.time()
-        sv = snap["schema_version"]
-        bid = f"__{op_name}__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
-        resolved = table._resolve(spark, snap, target)
-        delta_files = table._write_data_files(
-            transform(resolved.filter(hit), ts),
-            snap["n_buckets"], sv, batch_tag=bid, kind="delta",
-            sort_cols=snap.get("sort_order"), bloom=snap.get("bloom_filter"), zorder=snap.get("zorder"),
-        )
-        rows = sum(e["rows"] for e in delta_files)
-        if rows == 0:
-            return None
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # MOR deltas are parent-independent (the same property the MOR
-        # apply's retry loop exploits), and an interleaved newer source
-        # event beating the bump is exactly the documented "fix holds
-        # until the source speaks again" LWW semantics — so retry the
-        # commit across concurrent commits instead of failing; only a
-        # stale bucket layout or a schema move forces a re-plan.
-        for _ in range(5):
-            cur = (snap if table.latest_snapshot_id() == snap["snapshot_id"]
-                   else table.snapshot())
-            if cur["n_buckets"] % snap["n_buckets"] != 0:
-                raise CommitConflictError(
-                    f"{op_name}: table rebucketed {snap['n_buckets']}->"
-                    f"{cur['n_buckets']} mid-DML (not a multiple); re-plan"
-                )
-            if cur["schema_version"] != snap["schema_version"]:
-                raise CommitConflictError(
-                    f"{op_name}: schema version moved mid-DML; re-plan"
-                )
-            try:
-                sid = table.commit(
-                    bid, delta_files, PARENT_FILES,
-                    lineage={
-                        "dml": op_name, "mode": "mor", "predicate": predicate,
-                        "rows_affected": rows, "groups_rewritten": [],
-                        "wall_ms": wall_ms, **lineage_extra,
-                    },
-                    # the delta files ARE this commit's change feed
-                    change_files=delta_files,
-                    expected_parent_id=cur["snapshot_id"],
-                )
-                return DmlResult(sid, rows, 0, wall_ms)
-            except CommitConflictError:
-                continue
-        raise CommitConflictError(
-            f"{op_name}: commit lost the race 5 times"
-        )
-
-    resolved = table._resolve(spark, snap, target).persist()
-    try:
-        # three-valued logic guard: a NULL-evaluating predicate (e.g. a
-        # payload column compared on a row with nulls) must read as
-        # "not hit", or filter(~hit) would silently DROP the row from
-        # the rewrite instead of carrying it
-        hit = F.coalesce(F.expr(predicate), F.lit(False)) & ~F.col("_deleted")
-        ts = time.time()
-        sv = snap["schema_version"]
-        bid = f"__{op_name}__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
-        # change set first: zero affected winners ⇒ abort commit-free
-        # (the raw-row group scan matched only stale versions)
-        change_files = table._write_data_files(
-            transform(resolved.filter(hit), ts),
-            snap["n_buckets"],
-            sv,
-            batch_tag=f"{bid}chg",
-            kind="changelog",
-        )
-        rows = sum(e["rows"] for e in change_files)
-        if rows == 0:
-            return None
-        rewritten = transform(resolved.filter(hit), ts).unionByName(
-            resolved.filter(~hit)
-        )
-        new_files = table._write_data_files(
-            rewritten,
-            snap["n_buckets"],
-            sv,
-            batch_tag=bid,
-            sort_cols=snap.get("sort_order"),
-            bloom=snap.get("bloom_filter"),
-            zorder=snap.get("zorder"),
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # group-scoped rebase: a concurrent commit on OTHER groups (the
-        # ingest stream, another DML) does not force this rewrite to redo
-        sid = table.commit_rebase(
-            bid,
-            new_files,
-            snap,
-            gset,
-            lineage={
-                "dml": op_name,
-                "mode": "cow",
-                "predicate": predicate,
-                "rows_affected": rows,
-                "groups_rewritten": groups,
-                "wall_ms": wall_ms,
-                **lineage_extra,
-            },
-            change_files=change_files,
-        )
-        return DmlResult(sid, rows, len(groups), wall_ms)
-    finally:
-        resolved.unpersist()
+    target = [e for e in snap["files"] if e["bucket"] % s_min in groups]
+    # a NULL-evaluating predicate filters its row out, like false; no
+    # live winner matching ⇒ the raw-row scan matched only stale versions
+    hit = F.expr(predicate) & ~F.col("_deleted")
+    changed = transform(table._resolve(spark, snap, target).filter(hit), time.time())
+    return _commit_deltas(table, snap, groups, target, changed, t0,
+                          {"predicate": predicate, **lineage})
 
 
 def delete_where(
-    spark: SparkSession, table: SequenceTable, predicate: str,
-    mode: str = "cow",
+    spark: SparkSession, table: SequenceTable, predicate: str
 ) -> DmlResult | None:
     """Row-level DELETE by SQL predicate over the user columns (Iceberg
     ``DELETE FROM t WHERE ...``).  Matching live rows become tombstones
     (payload nulled, ``_deleted`` true) with a bumped ordering triple —
     see the module docstring for cost, mirror-convergence and
-    redelivery/resurrection semantics.
-
-    ``mode='cow'`` (default) rewrites the matched groups — reads stay
-    resolution-free.  ``mode='mor'`` appends the tombstones as delta
-    rows instead (Iceberg's merge-on-read DELETE role): O(matched rows)
-    written, no rewrite — the right shape when a sparse predicate
-    scatters across many buckets of a huge table; compaction reclaims
-    the superseded rows later."""
+    redelivery/resurrection semantics.  The tombstones are appended as
+    delta rows (Iceberg's merge-on-read DELETE role); compaction drops
+    the superseded versions later."""
     snap = table.snapshot()
     user_fields = table.user_schema(snap).fields
 
@@ -287,8 +190,8 @@ def delete_where(
             F.lit(True).alias("_deleted"),
         )
 
-    return _run_dml(spark, table, predicate, to_tombstones, "delete_where",
-                    {}, mode=mode)
+    return _run_dml(spark, table, predicate, to_tombstones,
+                    {"dml": "delete_where"})
 
 
 def update_where(
@@ -296,7 +199,6 @@ def update_where(
     table: SequenceTable,
     set_exprs: dict[str, str],
     predicate: str,
-    mode: str = "cow",
 ) -> DmlResult | None:
     """Row-level UPDATE by SQL predicate (Iceberg ``UPDATE t SET ...
     WHERE ...``).  ``set_exprs`` maps user columns to SQL expressions
@@ -304,7 +206,8 @@ def update_where(
     semantics — all right-hand sides see the old row) and cast to the
     column's current type.  ``doc_id`` is the merge key and immutable.
     The ``n_tok`` invariant column is recomputed automatically when
-    ``tokens`` is set without an explicit ``n_tok``."""
+    ``tokens`` is set without an explicit ``n_tok``.  The updated rows
+    are appended as delta rows, like :func:`delete_where`'s."""
     snap = table.snapshot()
     user_fields = table.user_schema(snap).fields
     known = {f.name for f in user_fields}
@@ -337,10 +240,8 @@ def update_where(
             F.lit(False).alias("_deleted"),
         )
 
-    return _run_dml(
-        spark, table, predicate, apply_set, "update_where",
-        {"set": dict(set_exprs)}, mode=mode,
-    )
+    return _run_dml(spark, table, predicate, apply_set,
+                    {"dml": "update_where", "set": dict(set_exprs)})
 
 
 def merge_into(
@@ -375,7 +276,7 @@ def merge_into(
       row -> inserted when ``when_not_matched_insert`` (``n_tok``
       derived from ``tokens`` when the source lacks it);
     * matched rows failing every condition, and target rows the source
-      does not mention, carry through unchanged.
+      does not mention, are left as they are (nothing is written).
 
     Duplicate or NULL ``doc_id`` in the source raises
     :class:`MergeCardinalityError` (multiplicity would make the result
@@ -383,14 +284,14 @@ def merge_into(
 
     Scale shape: candidate bucket groups come from the SOURCE'S keys
     (one distinct over ``hash(doc_id) % B`` — no table scan at all, so a
-    small-source merge into a 10^10-row table plans O(|source|) +
-    rewrites O(touched groups)); the source joins only the resolved
-    winners of those groups (shuffle hash join, broadcast under AQE when
-    the source is small).  Everything else — the strictly-above ordering
-    bump (mirror convergence, redelivery no-op, newer-source-event
-    override), ``expected_parent_id`` exactly-once commit, changelog
-    emission, sort-order/bloom inheritance — is shared with the
-    predicate DML path above.
+    small-source merge into a 10^10-row table plans O(|source|)); only
+    the source keys' versions in those groups are resolved, the source
+    left-joins their winners, and only the deleted, updated and inserted
+    rows are written, as delta files.  Everything else — the
+    strictly-above ordering bump (mirror convergence, redelivery no-op,
+    newer-source-event override), the ``commit_rebase`` exactly-once
+    commit, the deltas as change feed, sort-order/bloom inheritance — is
+    shared with the predicate DML path above.
     """
     t0 = time.monotonic()
     snap = table.snapshot()
@@ -431,8 +332,7 @@ def merge_into(
     # check, the bucket-group planning and the merge join all read this
     # persisted projection instead of recomputing the caller's plan
     src = source.select(
-        *[F.col(c).alias(f"src_{c}") for c in source.columns],
-        F.lit(True).alias("_src_present"),
+        *[F.col(c).alias(f"src_{c}") for c in source.columns]
     ).persist()
 
     # cardinality + key sanity in one bounded job (partial-agg combine,
@@ -452,29 +352,28 @@ def merge_into(
         )
 
     s_min = table._min_live_spec(snap)
-    groups = sorted(
+    groups = {
         r["_g"]
         for r in src.select(bucket_expr("src_doc_id", s_min).alias("_g"))
         .distinct().collect()
-    )
+    }
     if not groups:
         src.unpersist()
         return None
-    gset = set(groups)
-    target = [e for e in snap["files"] if e["bucket"] % s_min in gset]
+    target = [e for e in snap["files"] if e["bucket"] % s_min in groups]
 
-    resolved = table._resolve(spark, snap, target)
-    joined = resolved.join(
-        src, resolved["doc_id"] == src["src_doc_id"], "full_outer"
+    # only the source keys' versions enter resolution (the semi-join
+    # keeps or drops whole keys, so each winner is unchanged); every
+    # source row then meets its key's winner, if any
+    resolved = table._resolve(
+        spark, snap, target, where=src.select(F.col("src_doc_id").alias("doc_id"))
     )
+    joined = src.join(resolved, src["src_doc_id"] == resolved["doc_id"], "left")
 
-    ts = time.time()
-    lit_ts = F.lit(ts).cast("timestamp")
     tgt = F.col("_last_offset").isNotNull()
-    srcp = F.col("_src_present").isNotNull()
     live = tgt & ~F.coalesce(F.col("_deleted"), F.lit(False))
     del_hit = (
-        live & srcp & F.coalesce(F.expr(when_matched_delete), F.lit(False))
+        live & F.coalesce(F.expr(when_matched_delete), F.lit(False))
         if when_matched_delete is not None else F.lit(False)
     )
     upd_gate = (
@@ -482,11 +381,10 @@ def merge_into(
         if when_matched_condition is not None else F.lit(True)
     )
     upd_hit = (
-        live & srcp & ~del_hit & upd_gate
+        live & ~del_hit & upd_gate
         if update_exprs is not None else F.lit(False)
     )
-    ins_hit = srcp & ~live & F.lit(bool(when_not_matched_insert))
-    changed = del_hit | upd_hit | ins_hit
+    ins_hit = ~live if when_not_matched_insert else F.lit(False)
 
     dtypes = {f.name: f.dataType for f in user_fields}
 
@@ -507,77 +405,42 @@ def merge_into(
             return n_tok_expr(F.col("src_tokens").cast(dtypes["tokens"]))
         return F.lit(None).cast(f.dataType)
 
-    new_et = F.when(tgt, F.greatest(F.col("_last_event_time"), lit_ts)) \
-        .otherwise(lit_ts)
-    new_off = (
-        F.when(tgt & (F.col("_last_event_time") >= lit_ts),
-               F.col("_last_offset") + F.lit(1))
-        .when(tgt, F.col("_last_offset"))
-        .otherwise(F.lit(0).cast("long"))
-    )
-    out_cols = [
-        F.coalesce(F.col("doc_id"), F.col("src_doc_id")).alias("doc_id")
-        if f.name == "doc_id"
-        else F.when(del_hit, F.lit(None).cast(f.dataType))
-        .when(upd_hit, _upd(f)).when(ins_hit, _ins(f))
-        .otherwise(F.col(f.name)).alias(f.name)
-        for f in user_fields
-    ] + [
-        F.when(changed, new_off).otherwise(F.col("_last_offset"))
-        .alias("_last_offset"),
-        F.when(changed, new_et).otherwise(F.col("_last_event_time"))
-        .alias("_last_event_time"),
-        F.when(tgt, F.col("_last_epoch")).cast("long").alias("_last_epoch"),
-        F.when(tgt, F.col("_last_src_partition")).cast("int")
-        .alias("_last_src_partition"),
-        F.when(del_hit, F.lit(True)).when(upd_hit | ins_hit, F.lit(False))
-        .otherwise(F.coalesce(F.col("_deleted"), F.lit(False)))
-        .alias("_deleted"),
-    ]
-    merged = joined.select(
-        *out_cols,
-        del_hit.alias("_m_del"), upd_hit.alias("_m_upd"),
-        ins_hit.alias("_m_ins"), (tgt | ins_hit).alias("_m_keep"),
+    # an insert with no prior version starts at offset 0; over a
+    # tombstone it is bumped above it like any matched row
+    new_et, new_off = _bump(time.time())
+    changed = joined.filter(del_hit | upd_hit | ins_hit).select(
+        *[
+            F.col("src_doc_id").alias("doc_id")
+            if f.name == "doc_id"
+            else F.when(del_hit, F.lit(None).cast(f.dataType))
+            .when(upd_hit, _upd(f)).otherwise(_ins(f)).alias(f.name)
+            for f in user_fields
+        ],
+        F.coalesce(new_off, F.lit(0).cast("long")).alias("_last_offset"),
+        new_et.alias("_last_event_time"),
+        F.col("_last_epoch"),
+        F.col("_last_src_partition"),
+        del_hit.alias("_deleted"),
+        upd_hit.alias("_m_upd"),
+        ins_hit.alias("_m_ins"),
     ).persist()
     try:
-        counts = merged.agg(
-            F.sum(F.col("_m_del").cast("long")).alias("d"),
+        counts = changed.agg(
+            F.sum(F.col("_deleted").cast("long")).alias("d"),
             F.sum(F.col("_m_upd").cast("long")).alias("u"),
             F.sum(F.col("_m_ins").cast("long")).alias("i"),
         ).collect()[0]
         n_del, n_upd, n_ins = (int(counts[k] or 0) for k in ("d", "u", "i"))
-        rows = n_del + n_upd + n_ins
-        if rows == 0:
+        if n_del + n_upd + n_ins == 0:
             return None
-        helper = ["_m_del", "_m_upd", "_m_ins", "_m_keep"]
-        sv = snap["schema_version"]
-        bid = f"__merge_into__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
-        change_files = table._write_data_files(
-            merged.filter("_m_del OR _m_upd OR _m_ins").drop(*helper),
-            snap["n_buckets"], sv, batch_tag=f"{bid}chg", kind="changelog",
+        r = _commit_deltas(
+            table, snap, groups, target, changed.drop("_m_upd", "_m_ins"), t0,
+            {"dml": "merge_into", "rows_deleted": n_del,
+             "rows_updated": n_upd, "rows_inserted": n_ins},
         )
-        new_files = table._write_data_files(
-            merged.filter("_m_keep").drop(*helper),
-            snap["n_buckets"], sv, batch_tag=bid,
-            sort_cols=snap.get("sort_order"), bloom=snap.get("bloom_filter"), zorder=snap.get("zorder"),
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        sid = table.commit_rebase(
-            bid, new_files, snap, gset,
-            lineage={
-                "dml": "merge_into",
-                "rows_affected": rows,
-                "rows_deleted": n_del,
-                "rows_updated": n_upd,
-                "rows_inserted": n_ins,
-                "groups_rewritten": groups,
-                "wall_ms": wall_ms,
-            },
-            change_files=change_files,
-        )
-        return MergeResult(sid, rows, len(groups), wall_ms,
+        return MergeResult(r.snapshot_id, r.rows_affected, r.wall_ms,
                            rows_deleted=n_del, rows_updated=n_upd,
                            rows_inserted=n_ins)
     finally:
-        merged.unpersist()
+        changed.unpersist()
         src.unpersist()

@@ -82,8 +82,7 @@ EPOCH0 = "1970-01-01 00:00:00"
 # parent snapshot's files".  The O(batch)-metadata hot path — the commit
 # reuses the parent's manifest segments by reference and never loads,
 # diffs, or rewrites the live file list.  Callers that carry a *computed*
-# list (compaction, DML group rewrites) pass it materialized and pay a
-# segment diff.
+# list (compaction, DML) pass it materialized and pay a segment diff.
 PARENT_FILES = object()
 
 # Metadata format version stamped into every snapshot descriptor (the
@@ -163,8 +162,8 @@ class _Snapshot(dict):
 class CommitConflictError(RuntimeError):
     """Another writer committed since this writer planned its snapshot.
     Applies recover by re-planning the carried manifest (cheap — their
-    delta files are parent-independent); group rewrites (compaction, DML)
-    must redo the rewrite against the new parent."""
+    delta files are parent-independent); group-scoped commits (compaction,
+    DML) must redo their work against the new parent."""
 
 
 def bucket_expr(doc_id_col: str, n_buckets: int):
@@ -490,7 +489,7 @@ class SequenceTable:
         distinct values per file so parquet-mr sizes the filter exactly
         (unset → its adaptive/max-bytes sizing, ~<1% of a full row
         group).  Both persist as table properties inherited by every
-        commit (MOR deltas, DML rewrites, compaction, rebucket).
+        commit (MOR and DML deltas, compaction, rebucket).
 
         ``zorder_cols`` (opt-in, the Delta OPTIMIZE ZORDER / Iceberg
         z-order-rewrite role; mutually exclusive with ``sort_order``):
@@ -1293,7 +1292,7 @@ class SequenceTable:
         the parent's segment references and write one segment for
         ``new_files`` — O(batch) metadata, no segment ever loaded.
 
-        Materialized ``carried_files`` (compaction / DML rewrite / legacy
+        Materialized ``carried_files`` (compaction / DML / legacy
         callers): per parent segment, reuse it iff every entry survives
         unchanged in the carried list; otherwise pool its survivors into
         the new segment alongside ``new_files``.  Carried entries the
@@ -1652,13 +1651,14 @@ class SequenceTable:
         ``PARENT_FILES`` sentinel to carry the parent's file set by
         manifest-segment *reference* (the streaming hot path: O(batch)
         metadata per commit, nothing loaded), or a materialized entry list
-        when the commit drops/rewrites files (compaction, DML rewrite).
+        when the commit is scoped to bucket groups (compaction, DML).
 
         ``change_files``: manifest entries holding this commit's logical
         change rows (the CDC feed, S10).  Kept OUTSIDE ``files`` so state
-        reads never see them; a merge-on-read apply passes its delta
-        entries (the deltas ARE the change data — zero extra write), a
-        copy-on-write DML rewrite writes an explicit change set.  Maintenance
+        reads never see them; every logical write (apply, DML,
+        ``merge_into``) passes its delta entries (the deltas ARE the change
+        data — zero extra write).  Snapshots from older versions may list
+        separate change-set files here; readers handle both.  Maintenance
         commits (compaction/rebucket) pass none: they change no logical
         row, and ``read_changes`` correctly skips them.
 
@@ -2370,17 +2370,17 @@ class SequenceTable:
     ) -> DataFrame:
         """The state ``files`` hold: one row per key, bookkeeping and
         tombstones included — the one place merge-on-read resolution is
-        decided, for every read and every rewrite (compaction, DML,
-        ``merge_into``).
+        decided, for every read, every rewrite (compaction) and every
+        read-modify-write (DML, ``merge_into``).
 
         Group-scoped resolution: only bucket groups holding a DELTA among
         ``files`` pay ``lww_resolve`` (its sort and shuffle); the clean
         groups' rows stream through a plain union-scan.  Exact because a
         key lives in exactly one group (same hash at write and read) and
-        base files are key-unique per group (create, compact and DML
-        rewrite whole groups), so resolving per group and
-        unioning equals resolving everything — at 10^10 rows with 1
-        dirty bucket of 1024, ~1000x less shuffle.  ``files`` may be any
+        base files are key-unique per group (create, compact and rebucket
+        write whole groups; every other write appends deltas), so
+        resolving per group and unioning equals resolving everything — at
+        10^10 rows with 1 dirty bucket of 1024, ~1000x less shuffle.  ``files`` may be any
         pruned selection: a group whose deltas were all pruned away
         streams its kept base rows unresolved, by the same invariant.
 
@@ -3047,8 +3047,8 @@ class SequenceTable:
         evolution; SURVEY.md §4.2 O2).
 
         A metadata-only commit: existing files stay in place under their
-        old spec; every subsequent write (MOR deltas, DML rewrites,
-        compaction, create-like rewrites) lands under the new spec, and
+        old spec; every subsequent write (MOR and DML deltas, compaction,
+        create-like rewrites) lands under the new spec, and
         compaction migrates old groups incrementally (``compact(...,
         migrate_specs=True)``).  At 10^10 rows this is THE way to grow B:
         ``rebucket`` is a full-table rewrite in one commit, while this is

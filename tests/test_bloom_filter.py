@@ -77,8 +77,8 @@ def test_bloom_validates_columns(spark, tmp_path):
 
 
 def test_bloom_written_on_all_write_paths_state_exact(spark, tmp_path):
-    """Init base files, MOR deltas, compaction output, COW DML rewrites
-    and rebucket all carry the bloom; logical state matches the oracle."""
+    """Init base files, MOR deltas, compaction output, DML deltas and
+    rebucket all carry the bloom; logical state matches the oracle."""
     fx, t = _setup(spark, tmp_path,
                    bloom_filter_cols=["doc_id"], bloom_filter_ndv=200)
     segs = sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
@@ -91,7 +91,7 @@ def test_bloom_written_on_all_write_paths_state_exact(spark, tmp_path):
     apply_batch(spark, t, spark.read.parquet(segs[3]), batch_id=3,
                 compact_threshold=None)
     rewrite_unchanged(spark, t, fx["expected"], segs[4:])
-    _assert_blooms(spark, t)  # COW DML rewrite output
+    _assert_blooms(spark, t)  # DML delta output
     apply_batch(spark, t, spark.read.parquet(segs[4]), batch_id=4,
                 compact_threshold=None)
     t.rebucket(spark, 8)

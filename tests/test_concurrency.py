@@ -378,6 +378,27 @@ def test_dml_replans_on_overlapping_concurrent_commit(spark, tmp_path):
     assert list(got.set_index("doc_id").loc[same, "tokens"]) == [9, 9, 9]
 
 
+def test_concurrent_dml_on_same_key_replans(spark, tmp_path):
+    """Two read-modify-write DMLs on one key: the second, planned against
+    the snapshot before the first committed, must re-plan instead of
+    committing a value computed from the stale row (a lost update)."""
+    from cfe_39_spark.operators.dml import update_where
+
+    fx, t, victim, _, _ = _rebase_setup(spark, tmp_path)
+    n0 = int(fx["expected"].set_index("doc_id").loc[victim, "n_tok"])
+    upd = ({"n_tok": "n_tok + 1"}, f"doc_id = '{victim}'")
+    handle = SequenceTable(t.root)
+    stale = handle.snapshot()
+    assert update_where(spark, SequenceTable(t.root), *upd).rows_affected == 1
+    # update_where reads snapshot() twice (validation + plan) before commit
+    _serve_stale(handle, stale, times=2)
+    with pytest.raises(CommitConflictError, match="touched groups"):
+        update_where(spark, handle, *upd)
+    assert update_where(spark, SequenceTable(t.root), *upd).rows_affected == 1
+    got = t.read(spark).toPandas().set_index("doc_id")
+    assert int(got.loc[victim, "n_tok"]) == n0 + 2
+
+
 def test_merge_into_rebases_over_disjoint_concurrent_commit(spark, tmp_path):
     from cfe_39_spark.operators.dml import merge_into
 
@@ -430,19 +451,23 @@ def test_compact_rebases_over_disjoint_concurrent_commit(spark, tmp_path):
     assert_state_equal(t.read(spark), exp)
 
 
-def test_mor_dml_commits_across_concurrent_commit(spark, tmp_path):
-    """MOR DML deltas are parent-independent: a concurrent commit — even
-    into the SAME group — doesn't force a re-plan; both writes land and
-    LWW resolves (documented 'fix holds until the source speaks again')."""
-    from cfe_39_spark.operators.dml import delete_where
-
+def test_compact_replans_on_overlapping_concurrent_commit(spark, tmp_path):
+    """A compaction of the victim's group, planned before a concurrent
+    event landed in that same group, must refuse to commit (its rewrite
+    would drop the new delta); a fresh compaction keeps the event."""
     fx, t, victim, _, same = _rebase_setup(spark, tmp_path)
+    from cfe_39_spark.sources.table import bucket_of
+
     handle = SequenceTable(t.root)
     stale = handle.snapshot()
     _concurrent_event(spark, t.root, same)  # same group as victim
-    _serve_stale(handle, stale, times=2)
-    r = delete_where(spark, handle, f"doc_id = '{victim}'", mode="mor")
-    assert r is not None and r.rows_affected == 1
-    got = t.read(spark).toPandas()
-    assert victim not in set(got["doc_id"])
-    assert list(got.set_index("doc_id").loc[same, "tokens"]) == [9, 9, 9]
+    _serve_stale(handle, stale, times=1)
+    with pytest.raises(CommitConflictError, match="touched groups"):
+        handle.compact(spark, buckets=[bucket_of(victim, 4)])
+    assert SequenceTable(t.root).compact(spark, buckets=[bucket_of(victim, 4)]) is not None
+    exp = fx["expected"].copy()
+    m = exp["doc_id"] == same
+    exp.loc[m, "tokens"] = exp.loc[m, "tokens"].map(lambda _: [9, 9, 9])
+    exp.loc[m, "n_tok"] = 3
+    exp.loc[m, "source"] = "concurrent"
+    assert_state_equal(t.read(spark), exp)

@@ -1,7 +1,7 @@
 """Predicate DML (operators/dml.py) — delete_where / update_where, the
 Iceberg DELETE FROM / UPDATE role for out-of-band corrections (GDPR
 erasure, bad-data fixes) alongside the CDC stream.  Pins: oracle-exact
-state, O(matching groups) rewrite scope, redelivery no-op vs
+state, O(matched rows) write scope, redelivery no-op vs
 newer-event resurrection semantics, n_tok invariant maintenance, and —
 the engine's headline invariant — mirror convergence through the
 ordinary change feed."""
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.operators.dml import delete_where, update_where
-from cfe_39_spark.sources.table import SequenceTable
+from cfe_39_spark.sources.table import SequenceTable, bucket_of
 from cfe_39_spark.streaming import mirror
 from tests.util import assert_state_equal
 
@@ -119,31 +119,34 @@ def test_dml_no_match_commits_nothing(spark, tmp_path):
 
 
 def test_dml_rewrites_only_affected_groups(spark, tmp_path):
-    """O(matching groups): files of groups the predicate cannot touch are
-    carried by reference, byte-identical paths."""
+    """O(matched rows): every pre-DML file is carried as-is, and the only
+    new entries are deltas in the victim key's group."""
     fx, t, _ = _setup(spark, tmp_path)
     victim = sorted(fx["expected"]["doc_id"])[0]
     before = {e["path"] for e in t.snapshot()["files"]}
     r = delete_where(spark, t, f"doc_id = '{victim}'")
-    assert r is not None and r.groups_rewritten == 1
-    after = {e["path"] for e in t.snapshot()["files"]}
-    assert len(before & after) > 0, "untouched groups must be carried as-is"
+    assert r is not None and r.rows_affected == 1
+    after = t.snapshot()["files"]
+    assert before <= {e["path"] for e in after}
+    new = [e for e in after if e["path"] not in before]
+    assert new and all(
+        e["kind"] == "delta" and e["bucket"] == bucket_of(victim, 4) for e in new
+    )
 
 
 def test_dml_mor_mode_oracle_exact_appends_only(spark, tmp_path):
-    """mode='mor' (Iceberg merge-on-read DML role): same final state as
-    COW, but the commit appends O(matched) delta rows and rewrites ZERO
-    groups — every pre-existing file is carried by reference.  Compaction
-    later resolves the deltas away without changing the state."""
+    """Iceberg's merge-on-read DML role: the commit appends O(matched)
+    delta rows and rewrites nothing — every pre-existing file is carried
+    as-is.  Compaction later resolves the deltas away without changing
+    the state."""
     fx, t, _ = _setup(spark, tmp_path)
     exp = fx["expected"].copy()
     cut = int(exp["n_tok"].median())
     before_paths = {e["path"] for e in t.snapshot()["files"]}
 
-    r = delete_where(spark, t, f"n_tok > {cut}", mode="mor")
+    r = delete_where(spark, t, f"n_tok > {cut}")
     kept = exp[exp["n_tok"] <= cut].reset_index(drop=True)
     assert r is not None and r.rows_affected == len(exp) - len(kept)
-    assert r.groups_rewritten == 0
     snap = t.snapshot()
     assert (snap.get("lineage") or {}).get("mode") == "mor"
     after = snap["files"]
@@ -152,15 +155,14 @@ def test_dml_mor_mode_oracle_exact_appends_only(spark, tmp_path):
     new = [e for e in after if e["path"] not in before_paths]
     assert new and all(e.get("kind") == "delta" for e in new)
     assert_state_equal(t.read(spark), kept)
-    # time travel + change feed behave exactly like the COW commit
+    # time travel + change feed see the DML commit like any other
     assert t.read(spark, r.snapshot_id - 1).count() == len(exp)
     feed = t.read_changes(spark, from_snapshot_id=r.snapshot_id - 1)
     assert feed.filter("_change_type = 'delete'").count() == r.rows_affected
 
-    # MOR update stacks on the MOR delete; read-time LWW resolves both
-    r2 = update_where(spark, t, {"source": "'fixed'"}, f"n_tok <= {cut}",
-                      mode="mor")
-    assert r2 is not None and r2.groups_rewritten == 0
+    # the update stacks on the delete; read-time LWW resolves both
+    r2 = update_where(spark, t, {"source": "'fixed'"}, f"n_tok <= {cut}")
+    assert r2 is not None
     kept = kept.copy()
     kept["source"] = "fixed"
     assert_state_equal(t.read(spark), kept)
@@ -173,10 +175,9 @@ def test_dml_mor_mode_oracle_exact_appends_only(spark, tmp_path):
 
 
 def test_dml_mor_redelivery_noop_and_mirror_converges(spark, tmp_path):
-    """The ordering bump written into MOR delta rows carries the same
-    LWW semantics as COW: redelivered old events lose at resolution
-    time, and a mirror applying the change feed reaches the primary's
-    exact state."""
+    """The ordering bump written into the delta rows carries the LWW
+    semantics: redelivered old events lose at resolution time, and a
+    mirror applying the change feed reaches the primary's exact state."""
     fx, t, segs = _setup(spark, tmp_path)
     init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
     dst = SequenceTable.create(spark, str(tmp_path / "dst"), init, n_buckets=4)
@@ -184,7 +185,7 @@ def test_dml_mor_redelivery_noop_and_mirror_converges(spark, tmp_path):
     mirror.run_mirror(spark, t, dst, chk)
 
     victim = sorted(fx["expected"]["doc_id"])[0]
-    assert delete_where(spark, t, f"doc_id = '{victim}'", mode="mor") is not None
+    assert delete_where(spark, t, f"doc_id = '{victim}'") is not None
     post = t.read(spark).toPandas()
     for i, s in enumerate(segs):
         apply_batch(spark, t, spark.read.parquet(s), batch_id=f"re{i}",
@@ -194,9 +195,6 @@ def test_dml_mor_redelivery_noop_and_mirror_converges(spark, tmp_path):
     ticks = mirror.run_mirror(spark, t, dst, chk)
     assert ticks and ticks[-1].applied
     assert_state_equal(dst.read(spark), t.read(spark).toPandas())
-
-    with pytest.raises(ValueError, match="mode"):
-        delete_where(spark, t, "true", mode="nope")
 
 
 def test_dml_mirror_converges(spark, tmp_path):

@@ -210,20 +210,22 @@ def test_schema_unregistered_reported_not_raised(spark, tmp_path):
 
 
 def test_missing_change_file_detected(spark, tmp_path):
-    """A deleted changelog file breaks read_changes / the streaming feed
-    at read time; fsck must flag it with its own code (a data-only probe
+    """A deleted change file breaks read_changes / the streaming feed at
+    read time; fsck must flag it with its own code (a data-only probe
     passes the table clean)."""
-    from cfe_39_spark.operators.dml import update_where
+    from cfe_39_spark.sources.table import _MANIFEST_CACHE
 
     t = _mk(spark, tmp_path)
-    # COW DML writes its change files separately from its rewritten data
-    # files (on MOR the delta files ARE the change feed, so deleting one
-    # fires both codes — also correct, but this test wants the isolated
-    # signal)
-    update_where(spark, t, {"source": "'x'"}, "doc_id = 'd001'")
-    chg = t.snapshot().get("change_files") or []
-    assert chg, "update_where should have produced change files"
-    os.unlink(os.path.join(t.root, chg[0]["path"]))
+    # a change file that is not also a data file (on MOR the delta files
+    # ARE the change feed, so deleting one fires both codes — also
+    # correct, but this test wants the isolated signal)
+    sid = t.latest_snapshot_id()
+    p = os.path.join(t.meta_dir, f"snap-{sid:012d}.json")
+    d = json.load(open(p))
+    stray = dict(t.snapshot()["files"][0], path="data/no-such-dir/part-0.parquet")
+    d["change_files"] = list(d.get("change_files") or []) + [stray]
+    json.dump(d, open(p, "w"))
+    _MANIFEST_CACHE.clear()
     rep = check_table(t)
     assert "change_file_missing" in _codes(rep)
     assert "file_missing" not in _codes(rep)  # data files are all fine
@@ -250,16 +252,19 @@ def test_deep_change_file_rows_mismatch_detected(spark, tmp_path):
 
 
 def test_missing_historical_change_file_detected(spark, tmp_path):
-    """read_changes serves the whole retained span, so a changelog file
+    """read_changes serves the whole retained span, so a change file
     lost from an OLDER snapshot must be flagged even when the tip's own
-    change files are intact."""
-    from cfe_39_spark.operators.dml import update_where
+    files are intact: a delta the compaction dropped from ``files`` is
+    still the apply snapshot's change file."""
+    from cfe_39_spark.operators.cdc import apply_batch
 
     t = _mk(spark, tmp_path)
-    update_where(spark, t, {"source": "'x'"}, "doc_id = 'd001'")
-    old_chg = (t.snapshot().get("change_files") or [])[0]["path"]
-    update_where(spark, t, {"source": "'y'"}, "doc_id = 'd002'")
-    assert (t.snapshot().get("change_files") or []), "tip has change files"
-    os.unlink(os.path.join(t.root, old_chg))
+    apply_batch(spark, t, _events(spark), batch_id="b1", compact_threshold=None)
+    deltas = {e["path"] for e in t.snapshot().get("change_files") or []}
+    assert deltas, "a MOR apply commits its deltas as change files"
+    assert t.compact(spark) is not None
+    assert not deltas & {e["path"] for e in t.snapshot()["files"]}
+    os.unlink(os.path.join(t.root, sorted(deltas)[0]))
     rep = check_table(t)
     assert "change_file_missing" in _codes(rep)
+    assert "file_missing" not in _codes(rep)

@@ -4,7 +4,7 @@ The planner (`_plan_manifests` + `_coalesce_manifests`) is pure metadata —
 no Spark session needed — so hypothesis can hammer it across random commit
 histories: arbitrary interleavings of by-reference carries (streaming
 triggers), materialized carries that drop/rewrite arbitrary subsets
-(compaction/COW), and full rewrites (rebucket).  Invariants checked after
+(compaction, DML), and full rewrites (rebucket).  Invariants checked after
 EVERY commit:
 
 * file-set exactness: ``snapshot()["files"]`` ≡ carried ∪ new, no dup, no loss;

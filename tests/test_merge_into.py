@@ -1,7 +1,7 @@
 """Generic MERGE INTO (operators/dml.py::merge_into) — the Iceberg/Delta
 statement completing the DML triad.  Pins: oracle-exact default upsert,
 clause gating (matched-condition, delete clause, insert toggle), source
-cardinality/NULL-key errors, O(source-touched groups) rewrite scope,
+cardinality/NULL-key errors, O(source-touched groups) write scope,
 tombstone keys reading as NOT MATCHED, n_tok derivation, redelivery
 no-op semantics, and mirror convergence through the ordinary change
 feed."""
@@ -19,7 +19,7 @@ from cfe_39_spark.operators.dml import (
     delete_where,
     merge_into,
 )
-from cfe_39_spark.sources.table import SequenceTable
+from cfe_39_spark.sources.table import SequenceTable, bucket_of
 from cfe_39_spark.streaming import mirror
 from tests.util import assert_state_equal
 
@@ -135,14 +135,19 @@ def test_merge_tombstone_key_is_not_matched(spark, tmp_path):
 
 def test_merge_rewrites_only_source_key_groups(spark, tmp_path):
     """O(touched groups): candidate groups come from the SOURCE's keys —
-    no table scan — and files of other groups carry by reference."""
+    no table scan — every pre-merge file is carried as-is, and the only
+    new entries are deltas in the source key's group."""
     fx, t, _ = _setup(spark, tmp_path)
     d = sorted(fx["expected"]["doc_id"])[0]
     before = {e["path"] for e in t.snapshot()["files"]}
     r = merge_into(spark, t, _source(spark, [(d, [1], 1, "x")]))
-    assert r is not None and r.groups_rewritten == 1
-    after = {e["path"] for e in t.snapshot()["files"]}
-    assert len(before & after) > 0, "untouched groups must be carried as-is"
+    assert r is not None and r.rows_updated == 1
+    after = t.snapshot()["files"]
+    assert before <= {e["path"] for e in after}
+    new = [e for e in after if e["path"] not in before]
+    assert new and all(
+        e["kind"] == "delta" and e["bucket"] == bucket_of(d, 4) for e in new
+    )
 
 
 def test_merge_noop_commits_nothing_and_derives_n_tok(spark, tmp_path):

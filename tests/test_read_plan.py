@@ -74,9 +74,7 @@ def test_every_writer_honours_the_registered_schema(spark, tmp_path):
     update_where(spark, t, {"source": "'fixed'"}, f"doc_id = '{docs[0]}'")
     check("dml update")
     delete_where(spark, t, f"doc_id = '{docs[1]}'")
-    check("dml delete (cow)")
-    delete_where(spark, t, f"doc_id = '{docs[2]}'", mode="mor")
-    check("dml delete (mor)")
+    check("dml delete")
     src = spark.createDataFrame(
         [(docs[3], [1, 2, 3], 3, "merged"), ("merge-new", [7], 1, "merged")],
         SEQUENCE_SCHEMA_V1,

@@ -51,7 +51,7 @@ def test_sort_order_validates_columns(spark, tmp_path):
 
 
 def test_sorted_layout_all_write_paths_state_exact(spark, tmp_path):
-    """MOR deltas, compaction output, COW DML rewrites and rebucket all
+    """MOR deltas, compaction output, DML deltas and rebucket all
     honor the table's sort order; logical state is byte-identical to an
     unsorted table's."""
     fx, t = _setup(spark, tmp_path, ["doc_id"])
@@ -65,7 +65,7 @@ def test_sorted_layout_all_write_paths_state_exact(spark, tmp_path):
     apply_batch(spark, t, spark.read.parquet(segs[3]), batch_id=3,
                 compact_threshold=None)
     rewrite_unchanged(spark, t, fx["expected"], segs[4:])
-    _assert_files_sorted(t)  # COW DML rewrite output
+    _assert_files_sorted(t)  # DML delta output
     for i, s in enumerate(segs[4:]):
         apply_batch(spark, t, spark.read.parquet(s), batch_id=4 + i,
                     compact_threshold=None)

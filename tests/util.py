@@ -90,9 +90,9 @@ APPLY_MODES = {"mor": {}, "mor_compacted": {"compact_threshold": 1}}
 
 
 def rewrite_unchanged(spark, table, expected: pd.DataFrame, later_segs) -> None:
-    """A copy-on-write group rewrite that changes no value: ``update_where``
-    setting ``source`` to itself on one live key of the final state that
-    none of ``later_segs`` touches.  The DML bumps that key's event time to
+    """A DML delta that changes no value: ``update_where`` setting
+    ``source`` to itself on one live key of the final state that none of
+    ``later_segs`` touches.  The DML bumps that key's event time to
     the wall clock, so a later event for it would lose; on an untouched key
     the table still ends in the oracle's state."""
     from cfe_39_spark.operators.dml import update_where

@@ -229,7 +229,7 @@ def cmd_delete_where(spark, args):
         return {"deleted": False, "rows_affected": 0,
                 "snapshot_id": t.latest_snapshot_id()}
     return {"deleted": True, "rows_affected": r.rows_affected,
-            "groups_rewritten": r.groups_rewritten, "snapshot_id": r.snapshot_id}
+            "snapshot_id": r.snapshot_id}
 
 
 def cmd_update_where(spark, args):
@@ -248,7 +248,7 @@ def cmd_update_where(spark, args):
         return {"updated": False, "rows_affected": 0,
                 "snapshot_id": t.latest_snapshot_id()}
     return {"updated": True, "rows_affected": r.rows_affected,
-            "groups_rewritten": r.groups_rewritten, "snapshot_id": r.snapshot_id}
+            "snapshot_id": r.snapshot_id}
 
 
 def cmd_merge(spark, args):
@@ -277,7 +277,6 @@ def cmd_merge(spark, args):
     return {"merged": True, "rows_affected": r.rows_affected,
             "rows_deleted": r.rows_deleted, "rows_updated": r.rows_updated,
             "rows_inserted": r.rows_inserted,
-            "groups_rewritten": r.groups_rewritten,
             "snapshot_id": r.snapshot_id}
 
 
@@ -576,8 +575,8 @@ def parse_args(argv):
 
     dw = sub.add_parser("delete-where",
                         help="row-level DELETE by SQL predicate (GDPR "
-                             "erasure / bad-data removal; O(matching "
-                             "groups) copy-on-write, mirror-convergent)")
+                             "erasure / bad-data removal; O(matched rows) "
+                             "merge-on-read deltas, mirror-convergent)")
     dw.add_argument("--table", required=True)
     dw.add_argument("--predicate", required=True,
                     help="SQL boolean over the user columns, e.g. "
