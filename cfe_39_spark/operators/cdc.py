@@ -25,14 +25,19 @@ Scale notes:
   * Dedup (C1) and LWW (C2) are ONE aggregation,
     ``max_by(struct(*cols), struct(event_time, offset, src_partition))``
     (``lww_pick``, the same helper read-time ``lww_resolve`` uses),
-    executed as a partial + final ``SortAggregate`` (a struct buffer is
-    not hash-aggregatable).  Its map-side partial combine is the skew
-    defusal (C3): a hot doc_id
-    collapses to one row per map task *before* the shuffle, so no salting
-    pass is needed.  On a 4-core host (``local[2]``, 2k-4k-event triggers,
-    perfbench) a steady fused trigger runs 3 Spark jobs with this plan; the
-    narrow-agg + broadcast-join plan it replaced ran 5 and cost 13-14% more
-    work CPU per commit, on the Zipf-keyed workload as on the uniform one.
+    executed as a ``SortAggregate`` (a struct buffer is not
+    hash-aggregatable).  The events are repartitioned on their bucket
+    (``bucket_expr``) first and grouped by ``(_bucket, doc_id)``, so the
+    winners leave the aggregation already partitioned for the bucketed
+    delta write: one shuffle per trigger, not one on ``doc_id`` and a
+    second on ``_bucket``.  On a 4-core host (``local[2]``, perfbench
+    triggers of 2k-4k events) a steady fused trigger runs 2 Spark jobs
+    (3 with two shuffles) and a compacting one 4 (6).
+  * Skew (C3): no partial combine runs before that shuffle, so a hot
+    doc_id's copies all reach its bucket's task — the task that writes
+    that bucket's file anyway — where the sort-based aggregation folds
+    them into one row.  Nothing is salted; a bucket is as skewed as its
+    keys' event counts, and the trade buys one exchange per write.
   * The MERGE (C5) is merge-on-read: the winners are written as bucketed
     delta files and nothing of the table is read, so per-trigger cost is
     O(batch), never O(table).  Readers and compaction resolve base+delta
@@ -68,6 +73,7 @@ from ..sources.table import (
     CommitConflictError,
     SequenceTable,
     _schema_to_json,
+    bucketed,
     changes_as_events,
     lww_pick,
 )
@@ -345,7 +351,13 @@ def apply_batch(
                 ("n", lambda p: f"count_if(src_partition = {p})"),
             )
         ]
-    winners = lww_winners(events.observe(obs_ev, *stats))
+    # one shuffle for the whole write: LWW groups by (_bucket, doc_id) on
+    # rows already partitioned by bucket, and the delta write reuses that
+    # partitioning (lww_pick, SequenceTable._write_data_files).  The stats
+    # observe sits above the repartition: below it, Spark prunes the
+    # observed node of a provably empty batch (an empty local relation)
+    # and the observation never reports
+    winners = lww_winners(bucketed(events, n_buckets).observe(obs_ev, *stats))
     # one selectExpr, not a Column chain per column (schema.py, SQL rendering)
     have = {f.name: f.dataType for f in winners.schema.fields}
     typed = {f.name: f.dataType for f in new_schema.fields}
@@ -354,7 +366,7 @@ def apply_batch(
         return sql_cast(c if c in have else None, have.get(c), typed[c])
 
     is_del = "op = 'D'"
-    cols = ["doc_id"]
+    cols = ["_bucket", "doc_id"]
     for f in new_schema.fields:
         if f.name == "doc_id":
             continue

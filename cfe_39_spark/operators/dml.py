@@ -48,7 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokens import n_tok_expr
-from ..sources.table import SequenceTable, bucket_expr
+from ..schema import sql_ident
+from ..sources.table import SequenceTable, bucket_expr, bucketed
 
 
 @dataclass
@@ -117,7 +118,9 @@ def _commit_deltas(
     unchanged.  ``commit_rebase`` rebases the commit over concurrent
     commits on other groups and raises ``CommitConflictError`` over one
     on these groups, whose rows the DML read stale.  No changed row ⇒
-    no commit (None)."""
+    no commit (None).  ``changed`` carries its ``_bucket`` under the
+    table's bucket count, partitioned on it (``bucketed``), so the write
+    adds no shuffle."""
     bid = f"__{lineage['dml']}__-{snap['snapshot_id']}-{uuid.uuid4().hex[:8]}"
     deltas = table._write_data_files(
         changed, snap["n_buckets"], snap["schema_version"], batch_tag=bid,
@@ -155,7 +158,8 @@ def _run_dml(
     # a NULL-evaluating predicate filters its row out, like false; no
     # live winner matching ⇒ the raw-row scan matched only stale versions
     hit = F.expr(predicate) & ~F.col("_deleted")
-    changed = transform(table._resolve(spark, snap, target).filter(hit), time.time())
+    resolved = table._resolve(spark, snap, target, write_nb=snap["n_buckets"])
+    changed = transform(resolved.filter(hit), time.time())
     return _commit_deltas(table, snap, groups, target, changed, t0,
                           {"predicate": predicate, **lineage})
 
@@ -188,6 +192,7 @@ def delete_where(
             F.col("_last_epoch"),
             F.col("_last_src_partition"),
             F.lit(True).alias("_deleted"),
+            F.col("_bucket"),
         )
 
     return _run_dml(spark, table, predicate, to_tombstones,
@@ -238,6 +243,7 @@ def update_where(
             F.col("_last_epoch"),
             F.col("_last_src_partition"),
             F.lit(False).alias("_deleted"),
+            F.col("_bucket"),
         )
 
     return _run_dml(spark, table, predicate, apply_set,
@@ -364,11 +370,29 @@ def merge_into(
 
     # only the source keys' versions enter resolution (the semi-join
     # keeps or drops whole keys, so each winner is unchanged); every
-    # source row then meets its key's winner, if any
+    # source row then meets its key's winner, if any.  The meeting is a
+    # co-group on (_bucket, doc_id), not a join on doc_id: the winners
+    # and the source rows are both hash-partitioned on the table's
+    # bucket, so the resolution, the meeting and the delta write share
+    # one shuffle of each side (a join would re-shuffle both on doc_id)
+    nb = snap["n_buckets"]
     resolved = table._resolve(
-        spark, snap, target, where=src.select(F.col("src_doc_id").alias("doc_id"))
+        spark, snap, target, where=src.select(F.col("src_doc_id").alias("doc_id")),
+        write_nb=nb,
     )
-    joined = src.join(resolved, src["src_doc_id"] == resolved["doc_id"], "left")
+    t_cols = ", ".join(sql_ident(c) for c in resolved.columns if c != "_bucket")
+    s_cols = ", ".join(sql_ident(c) for c in src.columns)
+    joined = (
+        resolved.selectExpr("_bucket", "doc_id AS _k", f"struct({t_cols}) AS _t")
+        .unionByName(
+            bucketed(src.selectExpr("src_doc_id AS _k", f"struct({s_cols}) AS _s"), nb, "_k"),
+            allowMissingColumns=True,
+        )
+        .groupBy("_bucket", "_k")
+        .agg(F.expr("first(_s, true) AS _s"), F.expr("first(_t, true) AS _t"))
+        .filter("_s IS NOT NULL")
+        .select("_bucket", "_s.*", "_t.*")
+    )
 
     tgt = F.col("_last_offset").isNotNull()
     live = tgt & ~F.coalesce(F.col("_deleted"), F.lit(False))
@@ -423,6 +447,7 @@ def merge_into(
         del_hit.alias("_deleted"),
         upd_hit.alias("_m_upd"),
         ins_hit.alias("_m_ins"),
+        F.col("_bucket"),
     ).persist()
     try:
         counts = changed.agg(

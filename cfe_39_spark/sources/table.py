@@ -171,6 +171,16 @@ def bucket_expr(doc_id_col: str, n_buckets: int):
     return F.expr(f"CAST(pmod(xxhash64({sql_ident(doc_id_col)}), {int(n_buckets)}) AS INT)")
 
 
+def bucketed(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
+    """``df`` with its ``_bucket`` column (``bucket_expr`` of ``key``),
+    hash-partitioned on it: the one shuffle of a bucketed write.  An
+    aggregation grouped by ``(_bucket, key)`` over it needs no other
+    shuffle, and ``_write_data_files`` reuses its partitioning."""
+    return df.withColumn("_bucket", bucket_expr(key, n_buckets)).repartition(
+        n_buckets, "_bucket"
+    )
+
+
 _M64 = (1 << 64) - 1
 _P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
 _P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
@@ -230,21 +240,30 @@ def lww_pick(df: DataFrame, event_time: str, offset: str, src_partition: str) ->
     rule, shared by write-side winner selection (``lww_winners``) and
     read-side resolution (``lww_resolve``).  The triple is given as SQL
     expressions.  One ``max_by`` aggregation, executed as a
-    ``SortAggregate`` (its struct buffer is not hash-aggregatable): the
-    partial aggregate sorts each map task's rows by key and collapses a
-    hot key to one row per map task before the shuffle, which is the skew
-    defusal.  Every input row pays that sort, so callers filter the rows
-    they do not need before this, not after."""
-    cols = ", ".join(sql_ident(c) for c in df.columns)
+    ``SortAggregate`` (its struct buffer is not hash-aggregatable).  Every
+    input row pays its sort, so callers filter the rows they do not need
+    before this, not after.
+
+    On plain input it hash-partitions on ``doc_id``, and the partial
+    aggregate collapses a hot key to one row per map task before that
+    shuffle.  A write instead passes rows already repartitioned on their
+    ``_bucket`` (``bucket_expr``): the grouping is then ``(_bucket,
+    doc_id)``, ``_bucket`` passes through as a grouping column, and the
+    output stays hash-partitioned on it, so the bucketed file write needs
+    no second shuffle.  Exact, since ``_bucket`` is a function of
+    ``doc_id``.  The trade: no partial combine runs before that one
+    shuffle, so a hot key's copies all travel to its bucket's task."""
+    keys = ["_bucket", "doc_id"] if "_bucket" in df.columns else ["doc_id"]
+    cols = ", ".join(sql_ident(c) for c in df.columns if c != "_bucket")
     return (
-        df.groupBy("doc_id")
+        df.groupBy(*keys)
         .agg(
             F.expr(
                 f"max_by(struct({cols}), "
                 f"struct({event_time}, {offset}, {src_partition})) AS _w"
             )
         )
-        .select("_w.*")
+        .select(*keys[:-1], "_w.*")
     )
 
 
@@ -1544,7 +1563,11 @@ class SequenceTable:
     ) -> list[dict]:
         """Write one commit's data files, bucketed by doc_id hash; return
         their manifest entries.  ``repartition(_bucket)`` then
-        ``partitionBy(_bucket)`` yields ~one file per touched bucket.
+        ``partitionBy(_bucket)`` yields ~one file per touched bucket.  A
+        ``_bucket`` column already on ``df`` (``bucket_expr`` under
+        ``n_buckets``) is reused: when ``df`` is already hash-partitioned
+        on it (``lww_pick`` over bucket-partitioned rows), Spark drops the
+        repartition and the write adds no shuffle.
         ``sort_cols`` (the table's opt-in sort order): a LOCAL sort within
         each bucket partition before writing — no extra shuffle; row-group
         stats on the sort key become tight for intra-file skipping.
@@ -1557,9 +1580,9 @@ class SequenceTable:
         z column (functions/zorder.py); same no-extra-shuffle cost."""
         nonce = uuid.uuid4().hex[:8]
         out_dir = os.path.join(self.data_dir, f"commit-{batch_tag}-{nonce}")
-        staged = df.withColumn("_bucket", bucket_expr("doc_id", n_buckets)).repartition(
-            n_buckets, "_bucket"
-        )
+        if "_bucket" not in df.columns:
+            df = df.withColumn("_bucket", bucket_expr("doc_id", n_buckets))
+        staged = df.repartition(n_buckets, "_bucket")
         if zorder:
             from ..functions.zorder import zorder_key
 
@@ -2367,6 +2390,7 @@ class SequenceTable:
         files: list[dict],
         where: "str | DataFrame | None" = None,
         user_schema: T.StructType | None = None,
+        write_nb: int | None = None,
     ) -> DataFrame:
         """The state ``files`` hold: one row per key, bookkeeping and
         tombstones included — the one place merge-on-read resolution is
@@ -2395,7 +2419,13 @@ class SequenceTable:
         same ``doc_id``), so the winner is unchanged and only the kept
         keys' versions enter the resolving sort and shuffle; a predicate
         reaches the parquet scans as a pushed filter.  ``user_schema``
-        is ``_read_files``'s target schema."""
+        is ``_read_files``'s target schema.
+
+        ``write_nb`` is for rewrites (compaction, DML, ``rebucket``): the
+        bucket count the result is written under.  The rows then carry
+        that ``_bucket`` and are repartitioned on it before resolution,
+        so the resolving aggregation and the bucketed write share one
+        shuffle (``lww_pick``).  Reads leave it unset."""
         s_min = self._min_live_spec(snap)
         dirty_groups = {
             e["bucket"] % s_min for e in files if e.get("kind", "base") == "delta"
@@ -2403,11 +2433,11 @@ class SequenceTable:
 
         def rows(part: list[dict]) -> DataFrame:
             df = self._read_files(spark, snap, part, user_schema=user_schema)
-            if where is None:
-                return df
             if isinstance(where, str):
-                return df.filter(where)
-            return df.join(where, "doc_id", "left_semi")
+                df = df.filter(where)
+            elif where is not None:
+                df = df.join(where, "doc_id", "left_semi")
+            return df if write_nb is None else bucketed(df, write_nb)
 
         clean = [e for e in files if e["bucket"] % s_min not in dirty_groups]
         if not dirty_groups:
@@ -2685,14 +2715,14 @@ class SequenceTable:
                 continue
             df = self._read_files(spark, target, entries, user_schema=self.user_schema(target))
             parts.append(
-                df.select(
+                df.selectExpr(
                     "*",
-                    F.expr(f"CAST({int(s['snapshot_id'])} AS BIGINT) AS _commit_snapshot_id"),
-                    F.lit(s["batch_id"]).alias("_commit_batch_id"),
+                    f"CAST({int(s['snapshot_id'])} AS BIGINT) AS _commit_snapshot_id",
+                    f"{sql_str(s['batch_id'])} AS _commit_batch_id",
                     # rows are reconciled to the TARGET snapshot's schema
                     # above, so that is the version a re-emitted event must
                     # carry
-                    F.expr(f"CAST({int(target['schema_version'])} AS INT) AS _schema_version"),
+                    f"CAST({int(target['schema_version'])} AS INT) AS _schema_version",
                 )
             )
         if not parts:
@@ -2711,8 +2741,8 @@ class SequenceTable:
             out = out.unionByName(p)
         if net:
             out = lww_resolve(out)
-        return out.select(
-            "*", F.expr("CASE WHEN _deleted THEN 'delete' ELSE 'upsert' END AS _change_type")
+        return out.selectExpr(
+            "*", "CASE WHEN _deleted THEN 'delete' ELSE 'upsert' END AS _change_type"
         )
 
     def read_changelog(
@@ -3000,7 +3030,7 @@ class SequenceTable:
             return None
         buckets = sorted(groups)
         target = [e for e in snap["files"] if e["bucket"] % s_min in groups]
-        resolved = self._resolve(spark, snap, target)
+        resolved = self._resolve(spark, snap, target, write_nb=nb)
         if drop_tombstones_before is not None:
             resolved = resolved.filter(
                 (~F.col("_deleted"))
@@ -3011,7 +3041,7 @@ class SequenceTable:
             )
         new_files = self._write_data_files(
             resolved,
-            snap["n_buckets"],
+            nb,
             snap["schema_version"],
             batch_tag=f"compact{snap['snapshot_id']}",
             sort_cols=snap.get("sort_order"), bloom=snap.get("bloom_filter"), zorder=snap.get("zorder"),
@@ -3105,7 +3135,8 @@ class SequenceTable:
         snap = self.snapshot()
         if new_n_buckets == snap["n_buckets"]:
             return None
-        state = self.read_state(spark)  # MOR-resolved, tombstones retained
+        # MOR-resolved, tombstones retained, partitioned for the new layout
+        state = self._resolve(spark, snap, snap["files"], write_nb=new_n_buckets)
         new_files = self._write_data_files(
             state,
             new_n_buckets,

@@ -7,19 +7,19 @@ import pytest
 
 from cfe_39_spark.fixtures import GenConfig, expected_state, gen_events, gen_initial, segment_events, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
-from cfe_39_spark.sources.table import SequenceTable
+from cfe_39_spark.sources.table import SequenceTable, lww_resolve
 
-from .util import assert_state_equal, jobs_started, py4j_round_trips
+from .util import APPLY_MODES, assert_state_equal, jobs_started, py4j_round_trips, shuffles, sql_plans
 
 
-def _replay(spark, tmp_path, cfg, boundaries=None, n_buckets=8):
+def _replay(spark, tmp_path, cfg, boundaries=None, n_buckets=8, **apply_kw):
     fx = write_fixture(str(tmp_path / "fx"), cfg, boundaries)
     init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
     table = SequenceTable.create(spark, str(tmp_path / "table"), init, n_buckets=n_buckets)
     import glob
 
     for i, seg in enumerate(sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))):
-        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i)
+        apply_batch(spark, table, spark.read.parquet(seg), batch_id=i, **apply_kw)
     return table, fx
 
 
@@ -59,10 +59,75 @@ def test_out_of_order_and_shuffled(spark, tmp_path):
     assert_state_equal(table.read(spark), fx["expected"])
 
 
-def test_hot_key_skew(spark, tmp_path):
+@pytest.mark.parametrize("mode", sorted(APPLY_MODES))
+def test_hot_key_skew(spark, tmp_path, mode):
+    """80% of events on 1% of keys: a hot key's copies all reach its
+    bucket's task (no partial combine runs before the one shuffle), and
+    the state still equals the oracle, with deltas left for read-time
+    resolution and with each trigger compacting its buckets."""
     cfg = GenConfig(n_docs_initial=100, n_events=300, n_segments=3, key_dist="hot", seed=23)
-    table, fx = _replay(spark, tmp_path, cfg)
+    table, fx = _replay(spark, tmp_path, cfg, **APPLY_MODES[mode])
     assert_state_equal(table.read(spark), fx["expected"])
+
+
+def _brute_state(spark, t):
+    """Resolved state by one global ``lww_resolve`` over every file of
+    the snapshot: plain ``doc_id`` grouping, no bucket partitioning."""
+    snap = t.snapshot()
+    return lww_resolve(t._read_files(spark, snap, snap["files"]))
+
+
+def _state_rows(df):
+    return sorted(
+        tuple(r) for r in df.selectExpr(
+            "doc_id", "CAST(tokens AS STRING)", "n_tok", "source",
+            "_last_offset", "_last_event_time", "_last_src_partition", "_deleted",
+        ).collect()
+    )
+
+
+def test_hot_key_rebucket_and_merge_match_brute_force(spark, tmp_path):
+    """Hot-key state left as merge-on-read deltas, then a ``rebucket`` to
+    a new bucket count and a ``merge_into`` upsert over hot and new keys:
+    each resolves on the bucket partitioning of the rewrite, and each
+    result equals a brute-force global ``lww_resolve`` of its input."""
+    from pyspark.sql import functions as F
+
+    from cfe_39_spark.operators.dml import merge_into
+
+    cfg = GenConfig(n_docs_initial=100, n_events=300, n_segments=3, key_dist="hot", seed=23)
+    t, fx = _replay(spark, tmp_path, cfg, n_buckets=4, compact_threshold=None)
+    before = _state_rows(_brute_state(spark, t))
+    assert t.rebucket(spark, 6) is not None
+    assert t.snapshot()["n_buckets"] == 6
+    assert _state_rows(t.read_state(spark)) == before
+    assert_state_equal(t.read(spark), fx["expected"])
+
+    # a redelivered segment (a row-wise no-op) leaves deltas, so the
+    # merge resolves dirty groups
+    apply_batch(spark, t, spark.read.parquet(
+        str(tmp_path / "fx" / "segments" / "seg-00000.parquet")
+    ), batch_id="redeliver", compact_threshold=None)
+    assert_state_equal(t.read(spark), fx["expected"])
+    live = set(fx["expected"]["doc_id"])
+    counts = spark.read.parquet(str(tmp_path / "fx" / "segments")).groupBy("doc_id").count()
+    hot = [
+        r["doc_id"] for r in counts.orderBy(F.desc("count"), "doc_id").collect()
+        if r["doc_id"] in live
+    ][:4]
+    rows = [(d, [7, 7], 2, "merged") for d in hot]
+    rows += [(f"new-{i}", [i], 1, "merged") for i in range(3)]
+    pre = {r[0]: r for r in _state_rows(_brute_state(spark, t))}
+    r = merge_into(spark, t, spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string"
+    ))
+    assert (r.rows_updated, r.rows_inserted, r.rows_deleted) == (4, 3, 0)
+    got = _state_rows(t.read_state(spark))
+    assert got == _state_rows(_brute_state(spark, t))
+    by_key = {g[0]: g for g in got}
+    for d, tok, n, src in rows:
+        assert by_key[d][1:4] == (str(tok), n, src) and not by_key[d][7]
+    assert all(by_key[k] == v for k, v in pre.items() if k not in hot)
 
 
 def test_lww_dup_and_shuffle_matches_oracle(spark, tmp_path):
@@ -214,14 +279,15 @@ def test_fused_stats_path_equivalent(spark, tmp_path):
 
 def test_steady_fused_trigger_job_count(spark, tmp_path):
     """A steady MOR trigger on the fused-stats path (``known_partitions``
-    set, no compaction) starts at most 3 Spark jobs: the single ``max_by``
-    LWW aggregation feeds the delta write, and lineage stats ride that
+    set, no compaction) starts at most 2 Spark jobs: the single ``max_by``
+    LWW aggregation runs on rows already partitioned by bucket and feeds
+    the delta write with no second shuffle, and lineage stats ride that
     write.  Its plan costs a bounded number of py4j round trips: the stats
     observe, the LWW aggregation and the delta projection are SQL
     expression strings, not Column chains per column and source partition
     (each Column call costs several round trips).  Without the hint the
     trigger takes the same path plus the job that lists the batch's
-    source partitions: at most 5 jobs.  The first trigger may pay one-off
+    source partitions: at most 4 jobs.  The first trigger may pay one-off
     costs and is not pinned."""
     import glob
 
@@ -245,7 +311,7 @@ def test_steady_fused_trigger_job_count(spark, tmp_path):
         ))
         jobs.append(n_jobs)
         trips.append(n_trips)
-    assert all(n <= 3 for n in jobs[1:]), jobs
+    assert all(n <= 2 for n in jobs[1:]), jobs
     # measured: 111 per trigger; per-column Column chains made 1,814
     assert all(n <= 165 for n in trips[1:]), trips
     assert_state_equal(t.read(spark), fx["expected"])
@@ -257,8 +323,70 @@ def test_steady_fused_trigger_job_count(spark, tmp_path):
         ))[1]
         for i, ev in enumerate(segs)
     ]
-    assert all(n <= 5 for n in jobs[1:]), jobs
+    assert all(n <= 4 for n in jobs[1:]), jobs
     assert_state_equal(t.read(spark), fx["expected"])
+
+
+def test_bucketed_writes_shuffle_once(spark, tmp_path):
+    """Every bucketed write shuffles its rows once, on ``_bucket``: LWW
+    (or merge-on-read resolution) groups by ``(_bucket, doc_id)`` over
+    rows already partitioned by bucket, and the file write reuses that
+    partitioning.  Pinned on the executed plans of a steady trigger's
+    write, a compaction's and a ``delete_where``'s, and on the job count
+    of a compacting trigger (at most 4: the delta write and the
+    compaction write, two jobs each)."""
+    import glob
+
+    from cfe_39_spark.operators.dml import delete_where
+
+    cfg = GenConfig(n_docs_initial=40, n_events=600, n_segments=4, dup_rate=0.1, seed=53)
+    fx = write_fixture(str(tmp_path / "fx"), cfg)
+    init = spark.read.parquet(str(tmp_path / "fx" / "initial.parquet"))
+    t = SequenceTable.create(spark, str(tmp_path / "t"), init, n_buckets=4)
+    segs = [
+        spark.read.parquet(s)
+        for s in sorted(glob.glob(str(tmp_path / "fx" / "segments" / "*.parquet")))
+    ]
+    hint = list(range(cfg.n_partitions))
+
+    def write_plans(fn):
+        _, plans = sql_plans(spark, fn)
+        return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+
+    apply_batch(spark, t, segs[0], batch_id=0, known_partitions=hint, compact_threshold=None)
+    steady = write_plans(lambda: apply_batch(
+        spark, t, segs[1], batch_id=1, known_partitions=hint, compact_threshold=None,
+    ))
+    assert [shuffles(p) for p in steady] == [1], steady
+    compaction = write_plans(lambda: t.compact(spark))
+    assert [shuffles(p) for p in compaction] == [1], compaction
+    _, n_jobs = jobs_started(spark, lambda: apply_batch(
+        spark, t, segs[2], batch_id=2, known_partitions=hint, compact_threshold=1,
+    ))
+    assert n_jobs <= 4, n_jobs
+    apply_batch(spark, t, segs[3], batch_id=3, known_partitions=hint, compact_threshold=None)
+    assert_state_equal(t.read(spark), fx["expected"])
+    victim = min(fx["expected"]["doc_id"])
+    dml = write_plans(lambda: delete_where(spark, t, f"doc_id = '{victim}'"))
+    assert [shuffles(p) for p in dml] == [1], dml
+    exp = fx["expected"]
+    assert_state_equal(t.read(spark), exp[exp["doc_id"] != victim])
+
+
+@pytest.mark.parametrize("hint", [None, [0, 1]])
+def test_empty_batch_commits_with_zero_counts(spark, tmp_path, hint):
+    """A batch Spark can prove empty (an empty local relation: a
+    constant-false filter, or the feed of a span with no change files)
+    commits a snapshot with zero events and the state unchanged.  The
+    stats observation must survive Spark's pruning of empty relations,
+    which drops an observed node below the bucket repartition."""
+    cfg = GenConfig(n_docs_initial=20, n_events=40, n_segments=1, seed=31)
+    table, fx = _replay(spark, tmp_path, cfg, n_buckets=4)
+    events = spark.read.parquet(str(tmp_path / "fx" / "segments")).filter("false")
+    r = apply_batch(spark, table, events, batch_id="empty", known_partitions=hint)
+    assert not r.noop and (r.events_in, r.rows_applied) == (0, 0)
+    assert table.find_batch("empty") == r.snapshot_id
+    assert_state_equal(table.read(spark), fx["expected"])
 
 
 def test_fused_stats_with_negative_and_gapped_partitions(spark, tmp_path):

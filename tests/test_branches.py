@@ -143,6 +143,31 @@ def test_forget_pass_keeps_marker_of_detached_fork(tmp_path):
     assert t.find_batch("__create__") == 1
 
 
+@pytest.mark.parametrize("fork_tagged", [False, True])
+def test_drop_branch_keeps_marker_of_detached_fork(tmp_path, fork_tagged):
+    """Regression pin (Spark-free): dropping a branch whose fork an
+    expiry pass detached from main forgets only the branch's own commits;
+    the fork's idempotency marker stays.  Untagged, the expiry pass
+    deleted the fork's descriptor; tagged, the descriptor survives
+    off the main chain, where the walk would reach it as a staged
+    snapshot if it did not stop at the recorded fork."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    if fork_tagged:
+        t.tag("base", 1)
+    t.create_branch("a")
+    t.branch("a").commit("c0", [], PARENT_FILES)
+    t.commit("m0", [], PARENT_FILES)
+    t.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
+    assert 1 not in {s["snapshot_id"] for s in t.committed_chain()}
+    assert fs.exists(t._snap_path(1)) == fork_tagged
+    t.drop_branch("a")
+    assert t._read_marker("__create__") == 1
+    assert t.find_batch("__create__") == 1
+    assert t._read_marker("c0") is None
+
+
 def test_refs_share_one_namespace_and_handle_guards(spark, tmp_path):
     table, fx, segs = _replayed(spark, tmp_path, n_segments=2, seed=113)
     table.tag("pinned")

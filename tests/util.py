@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import re
 import threading
 import uuid
 
@@ -56,6 +57,31 @@ def executed_plan(df) -> str:
     query has run."""
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def sql_plans(spark, fn):
+    """``fn()`` and the final executed plan (text) of each SQL execution
+    it ran, in order, read from the SQL status store.  Under adaptive
+    execution the store's plan description is the final plan once the
+    execution has finished."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    plans = []
+    for i in range(before, execs.size()):
+        p = execs.apply(i).physicalPlanDescription()
+        if "== Final Plan ==" in p:
+            p = p.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        plans.append(p)
+    return out, plans
+
+
+def shuffles(plan: str) -> int:
+    """The number of shuffle ``Exchange`` nodes in a plan from
+    ``sql_plans`` (broadcast exchanges not counted)."""
+    return len(re.findall(r"^[\s:|+-]*Exchange \(\d+\)", plan, re.M))
 
 
 def py4j_round_trips(spark, fn):
