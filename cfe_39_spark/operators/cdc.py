@@ -68,11 +68,9 @@ from ..schema import (
     sql_cast,
     sql_ident,
 )
+from ..sources.meta import PARENT_FILES, CommitConflictError
 from ..sources.table import (
-    PARENT_FILES,
-    CommitConflictError,
     SequenceTable,
-    _schema_to_json,
     bucketed,
     changes_as_events,
     lww_pick,
@@ -92,7 +90,7 @@ def _register_version(
     register = new_schema if (changes or sv > snap["schema_version"]) else None
     if register is not None:
         taken = snap["schemas"].get(str(sv))
-        if taken is not None and taken != _schema_to_json(register):
+        if taken is not None and taken != register.json():
             sv = max(int(k) for k in snap["schemas"]) + 1
     return sv, register
 

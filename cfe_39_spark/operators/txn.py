@@ -39,11 +39,8 @@ import time
 import uuid
 
 from ..sources import fs
-from ..sources.table import (
-    BranchHandle,
-    CommitConflictError,
-    SequenceTable,
-)
+from ..sources.meta import CommitConflictError
+from ..sources.table import BranchHandle, SequenceTable
 from .cdc import cherry_pick
 
 

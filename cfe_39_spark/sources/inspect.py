@@ -246,7 +246,8 @@ def schemas_df(
     """Every registered schema version of one snapshot, one row per
     column, with its Iceberg-style field id (column identity across
     rename/drop/re-add).  Metadata-only: one descriptor read."""
-    from .table import _backfill_field_ids, _schema_from_json
+    from .meta import _backfill_field_ids
+    from .table import _schema_from_json
 
     snap = table.snapshot(at)
     reg = _backfill_field_ids(snap["schemas"], snap.get("field_ids"))

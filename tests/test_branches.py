@@ -11,7 +11,8 @@ import pytest
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import PARENT_FILES, BranchHandle, SequenceTable
+from cfe_39_spark.sources.meta import PARENT_FILES
+from cfe_39_spark.sources.table import BranchHandle, SequenceTable
 
 from .util import assert_state_equal
 
@@ -166,6 +167,88 @@ def test_drop_branch_keeps_marker_of_detached_fork(tmp_path, fork_tagged):
     assert t._read_marker("__create__") == 1
     assert t.find_batch("__create__") == 1
     assert t._read_marker("c0") is None
+
+
+def test_drop_bare_int_branch_keeps_marker_of_tagged_fork(tmp_path):
+    """Regression (Spark-free): a legacy bare-int branch ref records no
+    fork.  With a tag keeping the fork's descriptor alive off the main
+    chain, the drop walk reached the fork as if it were staged work and
+    erased ``__create__``'s marker.  The walk must stop at the first
+    snapshot another ref reaches; the branch's own commit is still
+    forgotten."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    t.tag("base", 1)
+    t.create_branch("a")
+    t.branch("a").commit("c0", [], PARENT_FILES)
+    t.commit("m0", [], PARENT_FILES)
+    refs = t._read_refs()
+    fs.write_json_atomic(t._refs_path(), dict(refs, branches={"a": t.branches()["a"]}))
+    t.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
+    t.drop_branch("a")
+    assert t._read_marker("__create__") is not None
+    assert t._read_marker("c0") is None
+
+
+def _main_chain_with_staged_head(tmp_path, tag_root: bool):
+    """Main 1 -> 2 -> 3 -> 5 -> 6 and branch ``a`` = 3 -> 4; after
+    ``expire_snapshots(keep_last=1)`` only 6, the staged head 4 (and 1
+    when tagged) keep their descriptors, so a walk down from 4 meets the
+    expired 3."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    if tag_root:
+        t.tag("base", 1)
+    t.commit("m0", [], PARENT_FILES)
+    t.commit("m1", [], PARENT_FILES)
+    t.create_branch("a")
+    assert t.branch("a").commit("c0", [], PARENT_FILES) == 4
+    t.commit("m2", [], PARENT_FILES)
+    t.commit("m3", [], PARENT_FILES)
+    t.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
+    assert not fs.exists(t._snap_path(3)) and fs.exists(t._snap_path(4))
+    return t
+
+
+@pytest.mark.parametrize("tag_root", [False, True])
+def test_change_span_across_expired_descriptor(tmp_path, tag_root):
+    """Pin (Spark-free) of the walk ``cherry_pick`` takes: a span whose
+    lower bound is the expired parent of a readable snapshot resolves; a
+    span that must walk through the expired descriptor is an expired
+    cursor, whether the bound below it is readable or not."""
+    t = _main_chain_with_staged_head(tmp_path, tag_root)
+    target, span = t.change_span(3, "a")
+    assert target["snapshot_id"] == 4
+    assert [s["snapshot_id"] for s in span] == [4]
+    for frm in (0, 1, 2):
+        with pytest.raises(ValueError, match="have expired"):
+            t.change_span(frm, "a")
+    with pytest.raises(ValueError, match="not an ancestor"):
+        t.change_span(5, 6)
+
+
+@pytest.mark.parametrize("head,resolved", [(3, True), (1, False)])
+def test_publish_intent_resolution_stops_at_missing_descriptor(tmp_path, head, resolved):
+    """Pin (Spark-free): a pending publish intent completes only when its
+    head is reachable from the main tip.  Descriptor 2 is gone (an expiry
+    that crashed before reparenting the oldest survivor), so the walk
+    down from 4 reaches 3 but never 1."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    t.create_branch("a")
+    for b in ("m0", "m1", "m2"):
+        t.commit(b, [], PARENT_FILES)
+    fs.unlink(t._snap_path(2))
+    fs.write_json_atomic(
+        t._publish_intent_path(), {"branch": "a", "head": head, "span": [head]}
+    )
+    t._resolve_publish_intent()
+    assert fs.exists(t._publish_intent_path()) != resolved
+    ref = t._read_refs()["branches"]["a"]
+    assert (ref["sid"], ref["fork"]) == ((head, head) if resolved else (1, 1))
 
 
 def test_refs_share_one_namespace_and_handle_guards(spark, tmp_path):

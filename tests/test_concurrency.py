@@ -12,7 +12,8 @@ import pytest
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import CommitConflictError, SequenceTable
+from cfe_39_spark.sources.meta import CommitConflictError
+from cfe_39_spark.sources.table import SequenceTable
 
 from .util import assert_state_equal
 

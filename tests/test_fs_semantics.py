@@ -27,7 +27,8 @@ import threading
 import pytest
 
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import CommitConflictError, SequenceTable
+from cfe_39_spark.sources.meta import CommitConflictError
+from cfe_39_spark.sources.table import SequenceTable
 
 
 def _hdfs_rename(src: str, dst: str) -> None:

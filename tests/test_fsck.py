@@ -78,7 +78,7 @@ def test_deep_rows_mismatch_detected(spark, tmp_path):
     snap = t.snapshot()
     # doctor the manifest's rows stamp for one file (out-of-band
     # corruption, so also drop the in-process manifest cache)
-    from cfe_39_spark.sources.table import _MANIFEST_CACHE
+    from cfe_39_spark.sources.meta import _MANIFEST_CACHE
 
     mpath = os.path.join(t.meta_dir, snap["manifests"][0]["path"])
     m = json.load(open(mpath))
@@ -213,7 +213,7 @@ def test_missing_change_file_detected(spark, tmp_path):
     """A deleted change file breaks read_changes / the streaming feed at
     read time; fsck must flag it with its own code (a data-only probe
     passes the table clean)."""
-    from cfe_39_spark.sources.table import _MANIFEST_CACHE
+    from cfe_39_spark.sources.meta import _MANIFEST_CACHE
 
     t = _mk(spark, tmp_path)
     # a change file that is not also a data file (on MOR the delta files
@@ -234,7 +234,7 @@ def test_missing_change_file_detected(spark, tmp_path):
 def test_deep_change_file_rows_mismatch_detected(spark, tmp_path):
     """deep=True footer pass covers changelog entries too."""
     from cfe_39_spark.operators.cdc import apply_batch
-    from cfe_39_spark.sources.table import _MANIFEST_CACHE
+    from cfe_39_spark.sources.meta import _MANIFEST_CACHE
 
     t = _mk(spark, tmp_path)
     ev = _events(spark)
@@ -268,3 +268,23 @@ def test_missing_historical_change_file_detected(spark, tmp_path):
     rep = check_table(t)
     assert "change_file_missing" in _codes(rep)
     assert "file_missing" not in _codes(rep)
+
+
+def test_shared_missing_change_file_names_oldest_snapshot(tmp_path):
+    """Two retained snapshots list the same lost change file: the finding
+    names the older one, the start of the ``read_changes`` span it breaks
+    (Spark-free: a metadata-only table)."""
+    from cfe_39_spark.sources.meta import PARENT_FILES
+
+    t = SequenceTable.create(None, str(tmp_path / "t"), n_buckets=4)
+    stray = {"path": "data/no-such-dir/_bucket=0/part-0.parquet", "bucket": 0,
+             "rows": 1, "schema_version": 1, "kind": "delta"}
+    older = t.commit("c1", [], PARENT_FILES, change_files=[stray])
+    t.commit("c2", [], PARENT_FILES, change_files=[stray])
+    t.commit("c3", [], PARENT_FILES)
+    missing = [f.message for f in check_table(t).findings
+               if f.code == "change_file_missing"]
+    assert missing == [
+        f"snapshot {older} references missing changelog file {stray['path']}"
+        " — read_changes / the streaming change feed break on this span"
+    ]

@@ -12,11 +12,10 @@ from pyspark.sql import functions as F
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.schema import EVENT_SCHEMA_V1, SEQUENCE_SCHEMA_V1
+from cfe_39_spark.sources.meta import _xxh64, bucket_of
 from cfe_39_spark.sources.table import (
     SequenceTable,
-    _xxh64,
     bucket_expr,
-    bucket_of,
     lww_resolve,
 )
 
@@ -88,7 +87,7 @@ def test_lookup_prunes_manifest_segments(spark, tmp_path, monkeypatch):
     loads only segments that can hold the key's bucket — O(matching
     segments), not O(live files) driver work (Iceberg manifest-list
     pruning role)."""
-    from cfe_39_spark.sources import table as table_mod
+    from cfe_39_spark.sources import meta as table_mod
 
     fx, t = _setup(spark, tmp_path, n_buckets=8)
     live = sorted(r["doc_id"] for r in t.read(spark).select("doc_id").collect())

@@ -20,8 +20,9 @@ import os
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources import table as table_mod
-from cfe_39_spark.sources.table import PARENT_FILES, SequenceTable
+from cfe_39_spark.sources import meta as table_mod
+from cfe_39_spark.sources.meta import PARENT_FILES
+from cfe_39_spark.sources.table import SequenceTable
 
 
 def _entry(i: int, bucket: int, kind: str) -> dict:

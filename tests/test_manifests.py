@@ -15,8 +15,9 @@ from cfe_39_spark import fixtures
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources import table as table_mod
-from cfe_39_spark.sources.table import PARENT_FILES, SequenceTable
+from cfe_39_spark.sources import meta as table_mod
+from cfe_39_spark.sources.meta import PARENT_FILES
+from cfe_39_spark.sources.table import SequenceTable
 
 from .util import assert_state_equal
 

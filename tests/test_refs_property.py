@@ -16,7 +16,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import PARENT_FILES, SequenceTable
+from cfe_39_spark.sources.meta import PARENT_FILES, TableMeta as SequenceTable
 
 SCHEMA = T.StructType([T.StructField("doc_id", T.StringType())])
 

@@ -15,7 +15,8 @@ import pyarrow.parquet as pq
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.sources import fs
-from cfe_39_spark.sources.table import SequenceTable, _LRUCache
+from cfe_39_spark.sources.meta import _LRUCache
+from cfe_39_spark.sources.table import SequenceTable
 
 from .util import assert_state_equal
 

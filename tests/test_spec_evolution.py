@@ -319,7 +319,7 @@ def test_evolve_racing_inflight_apply_commits_seamlessly(spark, tmp_path, monkey
 
 
 def test_incompatible_rebucket_mid_apply_still_raises(spark, tmp_path, monkeypatch):
-    from cfe_39_spark.sources.table import CommitConflictError
+    from cfe_39_spark.sources.meta import CommitConflictError
 
     fx = _fixture(tmp_path)
     segs = _segments(tmp_path)

@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 from cfe_39_spark.fixtures import GenConfig, write_fixture
 from cfe_39_spark.operators.cdc import apply_batch
 from cfe_39_spark.operators.txn import MultiTableTransaction
-from cfe_39_spark.sources.table import CommitConflictError, SequenceTable
+from cfe_39_spark.sources.meta import CommitConflictError
+from cfe_39_spark.sources.table import SequenceTable
 
 
 def _table(spark, tmp_path, name, seed):

@@ -6,8 +6,12 @@ and order-insensitive values.  Usage:
 
 Wall-clock budgeted (CFE39_CONTRACT_BUDGET_S, default 1500): queries run
 in registry order; once the budget is spent, the remaining names are
-reported as SKIPPED (exit stays 0 if nothing failed) — the tool can never
-eat an entire driver window the way an unbudgeted loop could.
+reported as SKIPPED — the tool can never eat an entire driver window the
+way an unbudgeted loop could.
+
+Exit status: 0 when every selected query passed, 1 when any failed, 2
+when none failed but the budget skipped some (a partial pass, so a gate
+reading only the exit code cannot mistake it for a full one).
 """
 
 from __future__ import annotations
@@ -53,7 +57,7 @@ def main(prefixes: list[str]) -> int:
     for name, q in sorted(REGISTRY.items()):
         if prefixes and not any(name.startswith(p) for p in prefixes):
             continue
-        if time.monotonic() - t_start > budget_s:
+        if time.monotonic() - t_start >= budget_s:
             skipped.append(name)
             continue
         try:
@@ -113,7 +117,7 @@ def main(prefixes: list[str]) -> int:
         print(f"SKIPPED (budget {budget_s:.0f}s spent): {', '.join(skipped)}")
     print(f"\n{failures} failures / {len(REGISTRY)} registered"
           + (f" ({len(skipped)} skipped by budget)" if skipped else ""))
-    return 1 if failures else 0
+    return 1 if failures else 2 if skipped else 0
 
 
 if __name__ == "__main__":
