@@ -42,11 +42,6 @@ def tokens_valid_expr(tokens: str = "tokens", vocab_size: int = 50257) -> Column
     )
 
 
-def tokens_equal_expr(a: Column, b: Column) -> Column:
-    """Null-safe element-wise token-array equality (C9 verifier core)."""
-    return a.eqNullSafe(b)
-
-
 def token_sum_expr(tokens: str = "tokens") -> Column:
     """Checksum of a token array via higher-order aggregate (JVM-side)."""
     return F.aggregate(
@@ -103,23 +98,6 @@ def validate_tokens_arrow(df, vocab_size: int = 50257, tokens_col: str = "tokens
 # --------------------------------------------------------------------- #
 # Arrow-batched pandas kernels — only where built-ins can't express it
 # --------------------------------------------------------------------- #
-@pandas_udf(T.ArrayType(T.IntegerType()))
-def normalize_tokens(tokens: pd.Series) -> pd.Series:
-    """Clip token ids into int32 range and pin dtype int32.
-
-    Demonstrates the mandated Arrow path: the Series arrives as numpy
-    arrays per row; we operate array-at-a-time, never python-int-at-a-time.
-    """
-    def _norm(arr):
-        if arr is None:
-            return None
-        a = np.asarray(arr)
-        if a.dtype != np.int32:
-            a = np.clip(a, np.iinfo(np.int32).min, np.iinfo(np.int32).max).astype(np.int32)
-        return a
-    return tokens.map(_norm)
-
-
 @pandas_udf(T.LongType())
 def token_fingerprint(tokens: pd.Series) -> pd.Series:
     """Order-sensitive 64-bit fingerprint of a token array, fully

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 import threading
 import time
@@ -150,6 +151,17 @@ class CommitConflictError(RuntimeError):
     Applies recover by re-planning the carried manifest (cheap — their
     delta files are parent-independent); group-scoped commits (compaction,
     DML) must redo their work against the new parent."""
+
+
+def _verify_lock(lock: "fs.mutex") -> None:
+    """Abort a metadata write whose commit mutex was stale-broken (we
+    overran the budget, or lost the break-restore race): a waiter may be
+    mid-commit, and writing under it would clobber its record.  Called
+    after the last read and before the first write of every mutation."""
+    try:
+        lock.verify()
+    except fs.LockLostError as e:
+        raise CommitConflictError(str(e)) from None
 
 
 _M64 = (1 << 64) - 1
@@ -428,7 +440,7 @@ class TableMeta:
         forever), so time-bound pins are the production default for
         anything not meant to outlive its consumer.  Default None = pinned
         until removed."""
-        with fs.mutex(os.path.join(self.meta_dir, "_LOCK")):
+        with fs.mutex(os.path.join(self.meta_dir, "_LOCK")) as lk:
             sid = (
                 int(snapshot_id)
                 if snapshot_id is not None
@@ -458,18 +470,20 @@ class TableMeta:
                     "max_age_s": float(max_age_s),
                 }
             )
+            _verify_lock(lk)
             self._write_refs(dict(refs, tags=traw))
             return sid
 
     def remove_tag(self, name: str) -> int:
         """Drop the tag; its snapshot re-enters normal retention on the
         next ``expire_snapshots`` pass.  Returns the unpinned id."""
-        with fs.mutex(os.path.join(self.meta_dir, "_LOCK")):
+        with fs.mutex(os.path.join(self.meta_dir, "_LOCK")) as lk:
             refs = self._read_refs()
             traw = dict(refs.get("tags", {}))
             if name not in traw:
                 raise KeyError(f"no tag named {name!r}")
             sid = self._ref_sid(traw.pop(name))
+            _verify_lock(lk)
             self._write_refs(dict(refs, tags=traw))
             return sid
 
@@ -513,10 +527,7 @@ class TableMeta:
             refs = self._read_refs()
             if name in refs.get("tags", {}) or name in refs.get("branches", {}):
                 raise ValueError(f"ref {name!r} already exists")
-            try:
-                lk.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lk)
             b = dict(refs.get("branches", {}))
             # the fork sid is part of the ref: it is the PRECISE lower
             # boundary of the staged suffix, needed when the fork ancestry
@@ -586,10 +597,7 @@ class TableMeta:
                     "only — drop the branch and replay its batches onto a "
                     "fresh one cut from the new main"
                 )
-            try:
-                lk.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lk)
             fs.write_json_atomic(
                 self._publish_intent_path(),
                 {
@@ -674,10 +682,7 @@ class TableMeta:
             # mutations below: abort first if our lock was stale-broken
             # (a waiter may be mid-commit; scrubbing the log or markers
             # under it would erase its commit record)
-            try:
-                lk.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lk)
             return self._drop_branch_locked(name)
 
     @staticmethod
@@ -766,8 +771,8 @@ class TableMeta:
             "n_rows": sum(int(e.get("rows", 0)) for e in entries),
             "delta_counts": dc,
             # distinct bucket specs in this segment (0 = legacy/unknown):
-            # lets _files_for_buckets translate wanted current-spec buckets
-            # into each spec's id space before the disjointness test
+            # lets _select_files match a segment's buckets under each
+            # spec without loading its body
             "specs": sorted({int(e.get("spec_nb") or 0) for e in entries}),
             "buckets": sorted({int(e["bucket"]) for e in entries}),
             "min_doc_id": min(mins) if known else None,
@@ -798,8 +803,9 @@ class TableMeta:
     #
     # Invariant: every live spec s divides the current n_buckets B
     # (evolve only multiplies; create/rebucket/compact write single-spec),
-    # so a key's bucket under s is its bucket under B taken mod s — every
-    # pruning site below translates current-spec bucket ids with one mod.
+    # so a key's bucket under s is its bucket under B taken mod s: bucket
+    # groups (``_min_live_spec``) are one mod, and ``_select_files``
+    # matches buckets of any two specs through their gcd.
     # ------------------------------------------------------------------ #
     def _entry_spec(self, snap: dict, e: dict) -> int:
         """The n_buckets a file entry's bucket id was computed under."""
@@ -824,87 +830,79 @@ class TableMeta:
                     mn = s
         return mn
 
-    def _files_for_buckets(
+    def _select_files(
         self,
         snap: dict,
-        wanted: set[int],
-        lo: str | None = None,
-        hi: str | None = None,
+        keys: "dict[tuple[int, int], list[tuple[str | None, str | None]]] | None" = None,
+        min_event_time: int | None = None,
     ) -> list[dict]:
-        """Candidate file entries for the given buckets (and, optionally,
-        doc_id range [lo, hi]) — Iceberg's manifest-list pruning: a segment
-        whose reference-level bucket set misses ``wanted``, or whose key
-        range is disjoint from [lo, hi], is skipped WITHOUT loading its
-        body.  Point lookups touch O(segments-with-the-key) metadata, not
-        O(live files).  Refs lacking the aggregates (pre-upgrade) and v1
-        inline descriptors degrade to the full scan — superset-safe.
+        """The file entries of ``snap`` that can hold a sought key and a
+        row with ``_last_event_time >= min_event_time`` (epoch micros):
+        the one file-pruning rule every keyed or time-bounded read plans
+        through, driver-side metadata only.  ``None`` leaves that side
+        unfiltered.
 
-        ``wanted`` holds CURRENT-spec bucket ids; files written under an
-        older (coarser) spec match through the divisibility rule: a
-        spec-s file can hold a wanted key iff its bucket equals some
-        ``b % s``."""
-        legacy = self._parent_legacy_spec(snap)
-        nb = snap["n_buckets"]
-        per_spec: dict[int, set[int]] = {nb: set(wanted)}
+        ``keys`` maps ``(spec, bucket)`` to ``(lo, hi)`` doc_id intervals
+        (``None`` = unbounded): keys in those intervals that hash into
+        ``bucket`` under ``spec`` buckets.  A file of spec ``s`` and bucket
+        ``b`` can hold one iff ``b ≡ bucket (mod gcd(s, spec))`` — both ids
+        are residues of the same hash — and an interval overlaps its
+        ``[min_doc_id, max_doc_id]``.  One rule thus covers same-spec
+        files, old-spec files mid ``evolve_bucket_spec`` and, with
+        ``spec`` 1, every bucket at once.
 
-        def wanted_under(s: int) -> set[int]:
-            got = per_spec.get(s)
-            if got is None:
-                got = {b % s for b in wanted}
-                per_spec[s] = got
-            return got
+        Iceberg's manifest-list pruning: a segment whose reference-level
+        ``specs``/``buckets``, key range or ``max_event_time`` ceiling
+        rules it out is skipped WITHOUT loading its body.  A missing stat
+        (pre-upgrade refs and entries, v1 inline descriptors) never
+        skips — correctness over skipping.  Entries come back in manifest
+        order, so a plan built from them is stable."""
+        legacy = self._parent_legacy_spec(snap) if keys is not None else 0
+        by_spec: dict[int, dict[int, list]] = {}
 
-        def entry_hit(e: dict) -> bool:
-            return e["bucket"] in wanted_under(e.get("spec_nb") or legacy)
+        def wanted(s: int) -> dict[int, list]:
+            """bucket under spec ``s`` -> the intervals a file there may hold"""
+            w = by_spec.get(s)
+            if w is None:
+                w = by_spec[s] = {}
+                for (q, bq), ivs in keys.items():
+                    g = math.gcd(s, q)
+                    for b in range(bq % g, s, g):
+                        w.setdefault(b, []).extend(ivs)
+            return w
+
+        def overlaps(ivs: list, lo: "str | None", hi: "str | None") -> bool:
+            if lo is None or hi is None:
+                return bool(ivs)
+            return any((a is None or a <= hi) and (z is None or z >= lo) for a, z in ivs)
+
+        def hit(e: dict) -> bool:
+            if min_event_time is not None:
+                ceil = e.get("max_event_time")
+                if ceil is not None and ceil < min_event_time:
+                    return False
+            if keys is None:
+                return True
+            ivs = wanted(e.get("spec_nb") or legacy).get(e["bucket"])
+            return ivs is not None and overlaps(ivs, e.get("min_doc_id"), e.get("max_doc_id"))
 
         if "manifests" not in snap:
-            return [e for e in snap["files"] if entry_hit(e)]
-        out: list[dict] = []
-        for ref in snap["manifests"]:
-            bs = ref.get("buckets")
-            if bs is not None:
-                ref_specs = {s or legacy for s in (ref.get("specs") or [0])}
-                if all(wanted_under(s).isdisjoint(bs) for s in ref_specs):
-                    continue
-            rmin, rmax = ref.get("min_doc_id"), ref.get("max_doc_id")
-            if (
-                lo is not None
-                and rmin is not None
-                and rmax is not None
-                and (rmax < lo or rmin > hi)
-            ):
-                continue
-            out.extend(e for e in self._load_manifest(ref) if entry_hit(e))
-        return out
-
-    def _files_min_event_time(self, snap: dict, micros: int) -> list[dict]:
-        """File entries that can hold a row with ``_last_event_time >=
-        micros`` — manifest-level time skipping for recent-state reads.
-
-        Two stages, both driver-side metadata only: a manifest segment
-        whose reference-level ``max_event_time`` ceiling is below the
-        bound is skipped WITHOUT loading its body; surviving segments'
-        entries are kept unless their per-file ceiling is below the
-        bound.  Entries or refs lacking the stat (written before the
-        stats landed) are kept — correctness over skipping."""
-        if "manifests" not in snap:
-            return [
-                e
-                for e in snap["files"]
-                if e.get("max_event_time") is None
-                or e["max_event_time"] >= micros
-            ]
+            return [e for e in snap["files"] if hit(e)]
         out: list[dict] = []
         for ref in snap["manifests"]:
             ceil = ref.get("max_event_time")
-            if ceil is not None and ceil < micros:
+            if min_event_time is not None and ceil is not None and ceil < min_event_time:
                 continue
-            out.extend(
-                e
-                for e in self._load_manifest(ref)
-                if e.get("max_event_time") is None
-                or e["max_event_time"] >= micros
-            )
+            bs = ref.get("buckets")
+            if keys is not None and bs is not None:
+                lo, hi = ref.get("min_doc_id"), ref.get("max_doc_id")
+                if not any(
+                    b in w and overlaps(w[b], lo, hi)
+                    for w in (wanted(s or legacy) for s in ref.get("specs") or [0])
+                    for b in bs
+                ):
+                    continue
+            out.extend(e for e in self._load_manifest(ref) if hit(e))
         return out
 
     def _parent_legacy_spec(self, parent: dict) -> int:
@@ -1388,10 +1386,7 @@ class TableMeta:
             # stale-broken (we overran the budget, or lost the break-restore
             # race), another writer may already be past the probe — abort;
             # the descriptor above is an orphan (never reused, expiry-cleaned)
-            try:
-                lock.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lock)
         self._advance_tip(str(batch_id), sid)
         self._write_marker(str(batch_id), sid)
         return sid
@@ -1500,10 +1495,7 @@ class TableMeta:
             fs.write_json_atomic(self._snap_path(new_sid), snap)
             # log rewrite + pointer swap mutate shared state: abort first
             # if our lock was stale-broken (see commit())
-            try:
-                lk.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lk)
             # forget rolled-back batch ids BEFORE the pointer swap: once
             # the new tip is visible, find_batch must already say "never
             # applied" for them (crash between the two writes leaves the
@@ -1578,15 +1570,20 @@ class TableMeta:
             # the walk stopped short of the cursor.  At an expired
             # descriptor, the consumer's cursor fell behind retention; at
             # the root (expire_snapshots reparents the oldest retained
-            # snapshot to None), the span was expired away or the cursor
-            # never existed.  Tell the consumer which, with a clear
-            # re-bootstrap signal (Iceberg's dedicated error here).
-            retained = self._retained_ids()
-            if end is not None or (retained and from_snapshot_id < retained[0]):
+            # snapshot to None), a cursor below it with no descriptor left
+            # was expired away, while a readable one (a detached tag, a
+            # branch's staged snapshot) or a higher id is off the chain.
+            # Tell the consumer which, with a clear re-bootstrap signal
+            # (Iceberg's dedicated error here) naming the oldest snapshot
+            # the walk still reaches.
+            oldest = span[-1]["snapshot_id"] if span else to_sid
+            if end is not None or (
+                from_snapshot_id < oldest
+                and not fs.exists(self._snap_path(from_snapshot_id))
+            ):
                 raise ValueError(
                     f"changes from snapshot {from_snapshot_id} have expired "
-                    f"(oldest retained snapshot is "
-                    f"{retained[0] if retained else 'none'}); re-bootstrap "
+                    f"(oldest retained snapshot is {oldest}); re-bootstrap "
                     "from a full table read"
                 )
             raise ValueError(
@@ -1800,10 +1797,7 @@ class TableMeta:
         # (a waiter may be mid-commit; deleting metadata or scrubbing the
         # log under it would erase its commit record)
         if lock is not None:
-            try:
-                lock.verify()
-            except fs.LockLostError as e:
-                raise CommitConflictError(str(e)) from None
+            _verify_lock(lock)
         # finish a crashed-but-completed publish while chain ancestry is
         # still intact: after this pass detaches the published head, the
         # completed/crashed ambiguity becomes undecidable and a stale fork

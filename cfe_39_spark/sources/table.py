@@ -940,7 +940,7 @@ class SequenceTable(TableMeta):
         returns only live rows whose winning event is at or after the
         bound — ``read().filter(_last_event_time >= X)`` semantics — at
         file-skipping cost: files whose footer event-time ceiling is
-        below the bound are never planned (``_files_min_event_time``).
+        below the bound are never planned (``_select_files``).
         This is the dominant 100 TB query ("state touched in the last
         day") and the skip is SOUND under MOR: resolve-then-filter over
         the kept subset equals resolve-then-filter over all files —
@@ -966,7 +966,7 @@ class SequenceTable(TableMeta):
         # the bound is on the WINNER's event time, so it filters after
         # resolution; a group whose deltas were all time-pruned streams
         # its kept base rows unresolved (``_resolve``)
-        state = self._resolve(spark, snap, self._files_min_event_time(snap, micros))
+        state = self._resolve(spark, snap, self._select_files(snap, min_event_time=micros))
         return _live_rows(
             state.filter(f"_last_event_time >= timestamp_micros({micros})"), user_cols
         )
@@ -976,7 +976,7 @@ class SequenceTable(TableMeta):
     ) -> DataFrame:
         """Point reads by key, at file-skipping cost: O(files that can hold
         the keys), never O(table).  Two pruning stages, both driver-side
-        metadata only:
+        metadata only (``_select_files``):
 
         1. **bucket pruning** — a key lives in exactly one bucket; the
            bucket ids are computed on the driver by ``bucket_of``, the
@@ -1009,26 +1009,12 @@ class SequenceTable(TableMeta):
                 [f.name for f in self.user_schema(snap).fields]
             )
         nb = snap["n_buckets"]
-        key_bucket = {d: bucket_of(d, nb) for d in set(doc_ids)}
-        wanted = set(key_bucket.values())
-        keep = []
-        ids = sorted(key_bucket)
-        # segment-level pruning first (bucket set + key range on the refs),
-        # then per-file min/max against the exact keys that hash into the
-        # file's bucket UNDER THE FILE'S OWN SPEC (an old-spec file during
-        # a lazy spec evolution matches keys via current-bucket % spec)
-        by_spec_bucket: dict[tuple[int, int], list[str]] = {}
-        for e in self._files_for_buckets(snap, wanted, ids[0], ids[-1]):
-            s = self._entry_spec(snap, e)
-            cand = by_spec_bucket.get((s, e["bucket"]))
-            if cand is None:
-                cand = [d for d, b in key_bucket.items() if b % s == e["bucket"]]
-                by_spec_bucket[(s, e["bucket"])] = cand
-            if e["min_doc_id"] is None or e["max_doc_id"] is None:
-                keep.append(e)
-                continue
-            if any(e["min_doc_id"] <= d <= e["max_doc_id"] for d in cand):
-                keep.append(e)
+        ids = sorted(set(doc_ids))
+        # one point interval per key, in the key's current-spec bucket
+        keys: dict[tuple[int, int], list] = {}
+        for d in ids:
+            keys.setdefault((nb, bucket_of(d, nb)), []).append((d, d))
+        keep = self._select_files(snap, keys)
         user_cols = [f.name for f in self.user_schema(snap).fields]
         in_keys = f"doc_id IN ({', '.join(map(sql_str, ids))})"
         return _live_rows(self._resolve(spark, snap, keep, in_keys), user_cols)
@@ -1059,13 +1045,8 @@ class SequenceTable(TableMeta):
         if lo > hi:
             raise ValueError(f"empty range: {lo!r} > {hi!r}")
         snap = self.snapshot(snapshot_id)
-        kept = [
-            e
-            for e in snap["files"]
-            if e.get("min_doc_id") is None
-            or e.get("max_doc_id") is None
-            or not (e["max_doc_id"] < lo or e["min_doc_id"] > hi)
-        ]
+        # under spec 1 every key is in bucket 0: no bucket pruning
+        kept = self._select_files(snap, {(1, 0): [(lo, hi)]})
         in_range = f"doc_id BETWEEN {sql_str(lo)} AND {sql_str(hi)}"
         user_cols = [f.name for f in self.user_schema(snap).fields]
         return _live_rows(self._resolve(spark, snap, kept, in_range), user_cols)
@@ -1163,14 +1144,15 @@ class SequenceTable(TableMeta):
         unchanged) emit nothing — exactly the rows a downstream
         ``SUM``-maintainer must NOT double-count.
 
-        Scale: the changed-key set comes from the span's change files
-        (O(delta), never table state); both endpoint images come from
-        bucket- and min/max-PRUNED endpoint reads (O(touched buckets) —
-        at 10^10 rows / 1024 buckets a 3-key span reads ~3 buckets'
-        files); the driver holds only per-bucket key bounds
-        (<= n_buckets rows per endpoint).  Output: ``doc_id`` + user
-        columns (reconciled to the *to* schema) + the LWW ordering
-        triple + ``_change_type``.
+        Scale: the changed-key set comes from one scan of the span's
+        change files (O(delta), never table state); both endpoint images
+        come from bucket- and min/max-PRUNED endpoint reads (O(touched
+        buckets) — at 10^10 rows / 1024 buckets a 3-key span reads ~3
+        buckets' files).  The pruning bounds are the change files'
+        manifest entries (spec, bucket, min/max ``doc_id``), a superset of
+        the changed keys read on the driver, so planning starts no Spark
+        job.  Output: ``doc_id`` + user columns (reconciled to the *to*
+        schema) + the LWW ordering triple + ``_change_type``.
         """
         if isinstance(from_snapshot_id, str):
             from_snapshot_id = self.resolve_ref(from_snapshot_id)
@@ -1202,60 +1184,24 @@ class SequenceTable(TableMeta):
                 *[F.col(c) for c in ord_cols],
                 F.lit("insert").alias("_change_type"),
             )
-        # the raw span feed is validation + key discovery only — O(delta)
-        keys = self.read_changes(spark, from_snapshot_id, to_sid).select("doc_id")
-        stats_by_nb: dict[int, list] = {}  # one span scan per DISTINCT
-        # bucket count — endpoints share it unless a rebucket hit the span
+        # the span's change files hold every changed key: their manifest
+        # entries give each endpoint read its pruning intervals on the
+        # driver, and one scan of them gives the key set — O(delta)
+        _, span = self.change_span(from_snapshot_id, to_sid)
+        changed = [(s, e) for s in reversed(span) for e in s.get("change_files") or []]
+        bounds: dict[tuple[int, int], list] = {}
+        for s, e in changed:
+            bounds.setdefault((self._entry_spec(s, e), e["bucket"]), []).append(
+                (e.get("min_doc_id"), e.get("max_doc_id"))
+            )
+        keys = self._read_files(spark, snap_to, [e for _, e in changed], user).select("doc_id")
 
         def endpoint(sid: int) -> "DataFrame | None":
             """LWW-resolved image of the changed keys at snapshot ``sid``,
-            via bucket + min/max file pruning (the ``lookup`` strategy,
-            but with the key set staying DISTRIBUTED: the driver collects
-            only per-bucket bounds)."""
+            reading only the files ``_select_files`` keeps for them (the
+            ``lookup`` strategy, with the key set staying distributed)."""
             snap = self.snapshot(sid)
-            nb = snap["n_buckets"]
-            if nb not in stats_by_nb:
-                stats_by_nb[nb] = (
-                    keys.groupBy(bucket_expr("doc_id", nb).alias("_b"))
-                    .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-                    .collect()  # <= n_buckets rows: metadata-scale
-                )
-            stats = stats_by_nb[nb]
-            if not stats:
-                return None
-            bounds = {r["_b"]: (r["lo"], r["hi"]) for r in stats}
-            lo = min(b[0] for b in bounds.values())
-            hi = max(b[1] for b in bounds.values())
-            # per-file bound: an old-spec file (mid spec evolution) maps
-            # to every wanted current-spec bucket congruent to it, so its
-            # range check uses the union of those buckets' key bounds
-            spec_bounds: dict[tuple[int, int], "tuple[str, str] | None"] = {}
-
-            def file_bounds(e: dict) -> "tuple[str, str] | None":
-                s = self._entry_spec(snap, e)
-                key = (s, e["bucket"])
-                if key not in spec_bounds:
-                    hits = [
-                        bounds[b] for b in bounds if b % s == e["bucket"]
-                    ]
-                    spec_bounds[key] = (
-                        (min(h[0] for h in hits), max(h[1] for h in hits))
-                        if hits
-                        else None
-                    )
-                return spec_bounds[key]
-
-            files = []
-            for e in self._files_for_buckets(snap, set(bounds), lo, hi):
-                fb = file_bounds(e)
-                if fb is None:
-                    continue
-                if (
-                    e.get("min_doc_id") is None
-                    or e.get("max_doc_id") is None
-                    or not (e["max_doc_id"] < fb[0] or e["min_doc_id"] > fb[1])
-                ):
-                    files.append(e)
+            files = self._select_files(snap, bounds)
             if not files:
                 return None
             # the semi-join goes BELOW the resolution (every version of a

@@ -6,12 +6,12 @@ the consumer loop that keeps a downstream table continuously in sync:
 
     src table --read_changes--> changes_as_events --apply_batch--> dst table
 
-PySpark cannot define a custom Structured Streaming source (DSv2 is
-JVM-only), and the change feed is metadata-driven (per-snapshot
-``change_files`` lists, not a watchable directory), so the idiomatic
-equivalent is a micro-batch driver loop with a durable cursor — the same
-shape Spark's own availableNow file source runs under the hood: discover
-new input, process it as one deterministic batch, persist progress.
+The change feed is metadata-driven (per-snapshot ``change_files`` lists,
+not a watchable directory).  ``sources/datasource.py`` exposes it as a
+Python Structured Streaming source; this loop is the plain-driver
+alternative with a durable cursor and no streaming query — the same shape
+Spark's availableNow file source runs under the hood: discover new input,
+process it as one deterministic batch, persist progress.
 
 Exactly-once is the engine's layered rule (SURVEY.md §4.3), applied once
 more:
@@ -93,18 +93,18 @@ def mirror_once(
     latest = src.latest_snapshot_id()
     if latest <= cursor:
         return None
-    feed = src.read_changes(spark, cursor, latest)
-    events = changes_as_events(feed)
-    batch_id = f"mirror-{cursor}-{latest}"
-    n = events.count()
+    # the span's change-file row stamps count the feed: no Spark job
+    _, span = src.change_span(cursor, latest)
+    n = sum(e["rows"] for s in span for e in s.get("change_files") or [])
     applied = False
     if n > 0:
+        events = changes_as_events(src.read_changes(spark, cursor, latest))
         hint = (
             known_partitions
             if known_partitions is not None
             else src.span_src_partitions(cursor, latest)
         )
-        apply_batch(spark, dst, events, batch_id=batch_id,
+        apply_batch(spark, dst, events, batch_id=f"mirror-{cursor}-{latest}",
                     known_partitions=hint)
         applied = True
     # advance the cursor only after the dst commit is durable; the commit

@@ -217,7 +217,10 @@ def test_change_span_across_expired_descriptor(tmp_path, tag_root):
     """Pin (Spark-free) of the walk ``cherry_pick`` takes: a span whose
     lower bound is the expired parent of a readable snapshot resolves; a
     span that must walk through the expired descriptor is an expired
-    cursor, whether the bound below it is readable or not."""
+    cursor, whether the bound below it is readable or not.  Below main's
+    reparented root, a cursor with no descriptor left (5, the root's
+    expired parent) is expired, while the readable staged head 4 is not
+    an ancestor."""
     t = _main_chain_with_staged_head(tmp_path, tag_root)
     target, span = t.change_span(3, "a")
     assert target["snapshot_id"] == 4
@@ -225,7 +228,20 @@ def test_change_span_across_expired_descriptor(tmp_path, tag_root):
     for frm in (0, 1, 2):
         with pytest.raises(ValueError, match="have expired"):
             t.change_span(frm, "a")
+    with pytest.raises(ValueError, match="have expired"):
+        t.change_span(5, 6)
     with pytest.raises(ValueError, match="not an ancestor"):
+        t.change_span(4, 6)
+
+
+def test_change_span_expired_error_names_oldest_reached_snapshot(tmp_path):
+    """The re-bootstrap hint names the oldest snapshot the walk reached,
+    not the oldest descriptor on disk: here the tag keeps 1's descriptor
+    (the cursor itself) while the walk from 4 stops at the expired 3."""
+    t = _main_chain_with_staged_head(tmp_path, tag_root=True)
+    with pytest.raises(ValueError, match="oldest retained snapshot is 4"):
+        t.change_span(1, "a")
+    with pytest.raises(ValueError, match="oldest retained snapshot is 6"):
         t.change_span(5, 6)
 
 

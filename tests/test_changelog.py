@@ -187,12 +187,18 @@ def _check_diff(got_rows, expected):
             assert r["source"] == img["source"], k
 
 
-@pytest.mark.parametrize("mode", list(APPLY_MODES))
-def test_read_changelog_matches_fold_diff(spark, tmp_path, mode):
+@pytest.mark.parametrize(
+    "mode,reshape",
+    [("mor", None), ("mor_compacted", None), ("mor", "rebucket"), ("mor", "evolve")],
+    ids=["mor", "mor_compacted", "mor-rebucket6", "mor-evolve8"],
+)
+def test_read_changelog_matches_fold_diff(spark, tmp_path, mode, reshape):
     """Net-diff classification (insert / update pair / delete with before
     image) must equal a pandas two-point fold diff under the exact LWW
     triple rule, with and without per-trigger compaction, with hot keys, redeliveries and
-    deletes in the span."""
+    deletes in the span.  Two spans cross bucket specs without changing a
+    logical row: a ``rebucket`` 4 -> 6 (non-divisible) and an
+    ``evolve_bucket_spec`` 4 -> 8, each after the span's first batch."""
     cfg = GenConfig(n_docs_initial=30, n_events=200, n_segments=6, dup_rate=0.2,
                     key_dist="hot", shuffle_within_segments=True, seed=91)
     fx = write_fixture(str(tmp_path / "fx"), cfg)
@@ -207,6 +213,10 @@ def test_read_changelog_matches_fold_diff(spark, tmp_path, mode):
     for i, seg in enumerate(segs[cut:], start=cut):
         apply_batch(spark, t, spark.read.parquet(seg), batch_id=i,
                     **APPLY_MODES[mode])
+        if i == cut and reshape == "rebucket":
+            assert t.rebucket(spark, 6) is not None
+        elif i == cut and reshape == "evolve":
+            assert t.evolve_bucket_spec(8) is not None
     got = t.read_changelog(spark, from_sid).collect()
     _check_diff(got, _fold_diff(fx, tmp_path, cut))
 

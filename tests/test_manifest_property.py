@@ -120,7 +120,7 @@ def test_manifest_planner_invariants(tmp_path_factory, steps, target):
             # for every bucket, it returns exactly the files of that bucket
             for b in range(4):
                 got_b = sorted(
-                    _key(e) for e in t._files_for_buckets(snap, {b})
+                    _key(e) for e in t._select_files(snap, {(4, b): [(None, None)]})
                 )
                 want_b = sorted(_key(e) for e in expect if e["bucket"] == b)
                 assert got_b == want_b

@@ -8,9 +8,9 @@ footers, so two things must hold:
   commits carries exactly the column names and Spark types registered for
   its ``schema_version`` (a drift would read a column as null, or fail
   the scan, where footer inference used to paper over it);
-* the payoff: ``lookup``, ``read``, ``scan_range`` and ``read_changes``
-  start no Spark job before the caller's action, and planning a lookup
-  costs a bounded number of py4j round trips.
+* the payoff: ``lookup``, ``read``, ``scan_range``, ``read_changes`` and
+  ``read_changelog`` start no Spark job before the caller's action, and
+  planning a lookup costs a bounded number of py4j round trips.
 """
 
 import glob
@@ -122,6 +122,7 @@ def test_reads_plan_without_spark_jobs(spark, tmp_path):
         ("read_state", lambda: t.read_state(spark)),
         ("scan_range", lambda: t.scan_range(spark, keys[0], keys[-1])),
         ("read_changes", lambda: t.read_changes(spark, from_snapshot_id=first)),
+        ("read_changelog", lambda: t.read_changelog(spark, first)),
     ]:
         df, jobs = jobs_started(spark, plan)
         assert jobs == 0, (name, jobs)

@@ -82,3 +82,34 @@ def test_tagged_snapshot_survives_expiry(spark, tmp_path):
     table.expire_snapshots(keep_last=1, orphan_grace_s=0.0)
     assert not fs.exists(table._snap_path(pinned_sid))
     assert_state_equal(table.read(spark), fx["expected"])
+
+
+def test_tag_writes_abort_when_lock_stale_broken(tmp_path, monkeypatch):
+    """Spark-free: ``tag`` and ``remove_tag`` verify the commit mutex
+    before rewriting ``refs.json``, like every other metadata write.  A
+    lock stale-broken mid-section raises ``CommitConflictError`` and
+    leaves the refs untouched."""
+    import os
+
+    from cfe_39_spark.sources.meta import CommitConflictError
+
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    t.tag("keep", 1)
+    before = fs.read_text(t._refs_path())
+    lockp = os.path.join(t.meta_dir, "_LOCK")
+    real_verify = fs.mutex.verify
+
+    def sabotage(self):
+        # the lock broken and taken between acquisition and the write
+        with open(self.path, "wb") as f:
+            f.write(b"thief:token")
+        return real_verify(self)
+
+    monkeypatch.setattr(fs.mutex, "verify", sabotage)
+    for call in (lambda: t.tag("new", 1), lambda: t.remove_tag("keep")):
+        with pytest.raises(CommitConflictError):
+            call()
+        os.unlink(lockp)  # the thief releases its lock
+    assert fs.read_text(t._refs_path()) == before

@@ -92,11 +92,11 @@ def test_pruning_actually_skips_files(spark, tmp_path):
     snap = t.snapshot()
     all_files = snap["files"]
     assert all(e.get("max_event_time") is not None for e in all_files)
-    kept = t._files_min_event_time(snap, _bound_micros(_ts(5)))
+    kept = t._select_files(snap, min_event_time=_bound_micros(_ts(5)))
     assert kept and len(kept) < len(all_files)
     assert all(e["max_event_time"] >= _bound_micros(_ts(5)) for e in kept)
     # a bound above every event plans NOTHING and still answers correctly
-    assert t._files_min_event_time(snap, _bound_micros(_ts(99))) == []
+    assert t._select_files(snap, min_event_time=_bound_micros(_ts(99))) == []
     assert t.read(spark, min_event_time=_ts(99)).count() == 0
     # ... and the pruned read's ANSWER is right, not just smaller
     got = _rows(t.read(spark, min_event_time=_ts(5)))
@@ -122,7 +122,7 @@ def test_cross_file_trap_stale_version_in_kept_file(spark, tmp_path):
             [_row("A", [1, 1], "mid", "U", 3, _ts(5))], SCHEMA),
         batch_id=1, compact_threshold=None)
     snap = t.snapshot()
-    kept = t._files_min_event_time(snap, _bound_micros(_ts(10)))
+    kept = t._select_files(snap, min_event_time=_bound_micros(_ts(10)))
     assert len(kept) < len(snap["files"]), "batch-1 file must be pruned"
     assert _rows(t.read(spark, min_event_time=_ts(10))) == [("B", (2,), "new")]
     # unbounded read still serves A's true winner
@@ -143,7 +143,7 @@ def test_entries_without_stats_are_never_skipped(spark, tmp_path):
         ]
     }
     t = SequenceTable.create(spark, str(tmp_path / "t"), n_buckets=2)
-    kept = t._files_min_event_time(snap, _bound_micros(_ts(5)))
+    kept = t._select_files(snap, min_event_time=_bound_micros(_ts(5)))
     assert [e["bucket"] for e in kept] == [0, 2]
     # manifest-reference branch: a ref with no ceiling loads its body;
     # one with a known too-low ceiling is skipped without loading
@@ -154,7 +154,7 @@ def test_entries_without_stats_are_never_skipped(spark, tmp_path):
               "max_event_time": _bound_micros(_ts(1))}])
     assert low["max_event_time"] == _bound_micros(_ts(1))
     snap2 = {"manifests": [legacy, low]}
-    kept2 = t._files_min_event_time(snap2, _bound_micros(_ts(5)))
+    kept2 = t._select_files(snap2, min_event_time=_bound_micros(_ts(5)))
     assert [e["bucket"] for e in kept2] == [0]
 
 
@@ -217,7 +217,7 @@ def test_property_random_history_random_bound(spark, tmp_path):
                 _expected_recent(spark, t, bound)
             ), f"seed={seed} q={q}"
             mic = _bound_micros(bound.replace(tzinfo=datetime.timezone.utc))
-            kept = t._files_min_event_time(snap, mic)
+            kept = t._select_files(snap, min_event_time=mic)
             assert all(
                 e.get("max_event_time") is None or e["max_event_time"] >= mic
                 for e in kept

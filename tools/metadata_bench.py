@@ -78,7 +78,7 @@ def main() -> None:
         # recent-read time planner: last ~8 commits' window.  Must stay
         # flat as live files grow — old segments skip off the ref ceiling
         t0 = time.perf_counter()
-        kept = t._files_min_event_time(t.snapshot(), max(i - 7, 0) * 1_000_000)
+        kept = t._select_files(t.snapshot(), min_event_time=max(i - 7, 0) * 1_000_000)
         assert len(kept) <= 16 * FILES_PER_COMMIT
         win_tplan.append(time.perf_counter() - t0)
         if (i + 1) % CHECKPOINT_EVERY == 0:

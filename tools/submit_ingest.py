@@ -422,7 +422,7 @@ def cmd_show(spark, args):
             spark, sid, min_event_time=args.min_event_time
         ).count()
         out["recent_files_planned"] = len(
-            t._files_min_event_time(snap, _bound_micros(args.min_event_time))
+            t._select_files(snap, min_event_time=_bound_micros(args.min_event_time))
         )
     return out
 
