@@ -1566,6 +1566,11 @@ class TableMeta:
             takewhile(lambda s: s["snapshot_id"] != from_snapshot_id, self._ancestors(to_sid))
         )
         end = span[-1]["parent_id"] if span else to_sid
+        # at main's reparented root, its expired parent (recorded by
+        # ``expire_snapshots``) is a readable cursor: the span needs only
+        # retained change files
+        if end is None and span and from_snapshot_id == span[-1].get("expired_parent_id"):
+            end = from_snapshot_id
         if end != from_snapshot_id and not (end is None and from_snapshot_id == 0):
             # the walk stopped short of the cursor.  At an expired
             # descriptor, the consumer's cursor fell behind retention; at
@@ -1938,11 +1943,13 @@ class TableMeta:
             if rel not in live_manifests:
                 fs.unlink(os.path.join(mdir, f))
                 _MANIFEST_CACHE.pop(os.path.join(self.meta_dir, rel), None)
-        # keep_last snapshots now form the full chain; reparent the oldest
+        # keep_last snapshots now form the full chain; reparent the oldest,
+        # recording the cut parent so a cursor there still reads
+        # (``change_span``)
         if keep:
             oldest = keep[-1]
             if oldest["parent_id"] is not None:
-                oldest = dict(oldest, parent_id=None)
+                oldest = dict(oldest, parent_id=None, expired_parent_id=oldest["parent_id"])
                 fs.write_json_atomic(self._snap_path(oldest["snapshot_id"]), oldest)
         return {
             "removed_snapshots": removed_snaps,

@@ -851,6 +851,7 @@ class SequenceTable(TableMeta):
         where: "str | DataFrame | None" = None,
         user_schema: T.StructType | None = None,
         write_nb: int | None = None,
+        one_task: bool = False,
     ) -> DataFrame:
         """The state ``files`` hold: one row per key, bookkeeping and
         tombstones included — the one place merge-on-read resolution is
@@ -885,7 +886,17 @@ class SequenceTable(TableMeta):
         bucket count the result is written under.  The rows then carry
         that ``_bucket`` and are repartitioned on it before resolution,
         so the resolving aggregation and the bucketed write share one
-        shuffle (``lww_pick``).  Reads leave it unset."""
+        shuffle (``lww_pick``).  Reads leave it unset.
+
+        ``one_task`` is for ``lookup``, whose key ``In`` leaves at most
+        keys x versions rows: the dirty groups' filtered rows are gathered
+        into one partition (``coalesce(1)`` above the filter, so the
+        filter still reaches every scan), which satisfies the resolving
+        aggregate's distribution, and the read runs as one Spark job with
+        no ``Exchange``.  The trade: one task reads the keys' row groups
+        of every dirty file.  ``read``, ``read_state``, ``scan_range``,
+        compaction and DML keep the resolving shuffle, because their row
+        counts are unbounded."""
         s_min = self._min_live_spec(snap)
         dirty_groups = {
             e["bucket"] % s_min for e in files if e.get("kind", "base") == "delta"
@@ -902,9 +913,8 @@ class SequenceTable(TableMeta):
         clean = [e for e in files if e["bucket"] % s_min not in dirty_groups]
         if not dirty_groups:
             return rows(clean)
-        out = lww_resolve(
-            rows([e for e in files if e["bucket"] % s_min in dirty_groups])
-        )
+        dirty = rows([e for e in files if e["bucket"] % s_min in dirty_groups])
+        out = lww_resolve(dirty.coalesce(1) if one_task else dirty)
         if clean:
             out = out.unionByName(rows(clean))
         return out
@@ -994,14 +1004,16 @@ class SequenceTable(TableMeta):
         BEFORE resolution (every version of a key carries the same
         ``doc_id``, so pre-filtering picks the same winner as
         post-filtering): it reaches the parquet scan as a pushed ``In``
-        filter and only the keys' versions enter the resolving sort and
-        shuffle, not every row of the kept files.  Only bucket groups
-        holding a delta among the kept files are resolved at all
-        (``_resolve``): a lookup whose keys all hash to compacted buckets
-        is a plain filtered scan, no shuffle.  At 10^10 rows / 1024
-        buckets a 10-key lookup touches ~10 buckets' worth of files and
-        resolves only the keys' rows — the serving path a CDC validator
-        needs next to the scan path.
+        filter and only the keys' versions enter the resolving sort, not
+        every row of the kept files.  Those few rows are resolved in one
+        partition, so a lookup is one Spark job with no shuffle; the
+        trade is that one task reads the keys' row groups of every dirty
+        file (``_resolve``, ``one_task``).  Only bucket groups holding a
+        delta among the kept files are resolved at all: a lookup whose
+        keys all hash to compacted buckets is a plain filtered scan.  At
+        10^10 rows / 1024 buckets a 10-key lookup touches ~10 buckets'
+        worth of files and resolves only the keys' rows — the serving
+        path a CDC validator needs next to the scan path.
         """
         snap = self.snapshot(snapshot_id)
         if not doc_ids:
@@ -1017,7 +1029,9 @@ class SequenceTable(TableMeta):
         keep = self._select_files(snap, keys)
         user_cols = [f.name for f in self.user_schema(snap).fields]
         in_keys = f"doc_id IN ({', '.join(map(sql_str, ids))})"
-        return _live_rows(self._resolve(spark, snap, keep, in_keys), user_cols)
+        return _live_rows(
+            self._resolve(spark, snap, keep, in_keys, one_task=True), user_cols
+        )
 
     def scan_range(
         self,

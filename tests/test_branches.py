@@ -217,10 +217,10 @@ def test_change_span_across_expired_descriptor(tmp_path, tag_root):
     """Pin (Spark-free) of the walk ``cherry_pick`` takes: a span whose
     lower bound is the expired parent of a readable snapshot resolves; a
     span that must walk through the expired descriptor is an expired
-    cursor, whether the bound below it is readable or not.  Below main's
-    reparented root, a cursor with no descriptor left (5, the root's
-    expired parent) is expired, while the readable staged head 4 is not
-    an ancestor."""
+    cursor, whether the bound below it is readable or not.  Main's
+    reparented root 6 records its expired parent 5, so a cursor at 5
+    reads; below it, a cursor with no descriptor left (3) is expired,
+    while the readable staged head 4 is not an ancestor."""
     t = _main_chain_with_staged_head(tmp_path, tag_root)
     target, span = t.change_span(3, "a")
     assert target["snapshot_id"] == 4
@@ -228,8 +228,9 @@ def test_change_span_across_expired_descriptor(tmp_path, tag_root):
     for frm in (0, 1, 2):
         with pytest.raises(ValueError, match="have expired"):
             t.change_span(frm, "a")
+    assert [s["snapshot_id"] for s in t.change_span(5, 6)[1]] == [6]
     with pytest.raises(ValueError, match="have expired"):
-        t.change_span(5, 6)
+        t.change_span(3, 6)
     with pytest.raises(ValueError, match="not an ancestor"):
         t.change_span(4, 6)
 
@@ -242,7 +243,40 @@ def test_change_span_expired_error_names_oldest_reached_snapshot(tmp_path):
     with pytest.raises(ValueError, match="oldest retained snapshot is 4"):
         t.change_span(1, "a")
     with pytest.raises(ValueError, match="oldest retained snapshot is 6"):
-        t.change_span(5, 6)
+        t.change_span(3, 6)
+
+
+def test_change_span_from_the_roots_expired_parent(tmp_path):
+    """Regression (Spark-free): expiry reparents the oldest retained
+    snapshot to no parent, and the cut parent's id is kept on the root, so
+    a cursor AT that parent still reads: every change file its span needs
+    is retained.  A cursor further below stays expired, cursor 0 reads
+    the retained changelog (``startingSnapshotId=earliest``), and a root
+    descriptor written without the recorded cut keeps refusing."""
+    from .test_refs_property import _fresh_table
+
+    t = _fresh_table(str(tmp_path))
+    for b in ("m0", "m1", "m2", "m3"):
+        t.commit(b, [], PARENT_FILES)
+    t.expire_snapshots(keep_last=2, orphan_grace_s=0.0)
+    assert [s["snapshot_id"] for s in t.committed_chain()] == [5, 4]
+    assert [s["snapshot_id"] for s in t.change_span(3)[1]] == [5, 4]
+    assert [s["snapshot_id"] for s in t.change_span(3, 4)[1]] == [4]
+    assert [s["snapshot_id"] for s in t.change_span(0)[1]] == [5, 4]
+    with pytest.raises(ValueError, match="oldest retained snapshot is 4"):
+        t.change_span(2)
+    # a second pass cuts higher: the new root records its own parent
+    t.commit("m4", [], PARENT_FILES)
+    t.expire_snapshots(keep_last=2, orphan_grace_s=0.0)
+    assert [s["snapshot_id"] for s in t.change_span(4)[1]] == [6, 5]
+    with pytest.raises(ValueError, match="have expired"):
+        t.change_span(3)
+    # a root written before the cut was recorded decides as before
+    root = {k: v for k, v in fs.read_json(t._snap_path(5)).items()
+            if k != "expired_parent_id"}
+    fs.write_json_atomic(t._snap_path(5), root)
+    with pytest.raises(ValueError, match="oldest retained snapshot is 5"):
+        t.change_span(4)
 
 
 @pytest.mark.parametrize("head,resolved", [(3, True), (1, False)])

@@ -3,7 +3,6 @@ min/max file skipping, answers identical to a full read."""
 
 import datetime
 import glob
-import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -19,7 +18,13 @@ from cfe_39_spark.sources.table import (
     lww_resolve,
 )
 
-from .util import executed_plan, jobs_started
+from .util import (
+    assert_lookup_in_one_job,
+    executed_plan,
+    file_scans,
+    jobs_started,
+    pushed_filters,
+)
 
 
 def _setup(spark, tmp_path, n_buckets=8):
@@ -315,20 +320,10 @@ def test_scan_range_equals_filtered_read_property(spark, awkward_tables, data):
         assert got == [full[k] for k in sorted(full) if lo <= k <= hi], name
 
 
-def _file_scans(df):
-    """The ``FileScan`` lines of ``df``'s executed plan."""
-    return [ln for ln in executed_plan(df).splitlines() if "FileScan" in ln]
-
-
-def _pushed(scan: str) -> str:
-    m = re.search(r"PushedFilters: \[([^\]]*)", scan)
-    return m.group(1) if m else ""
-
-
 def test_key_predicates_reach_the_dirty_file_scans(spark, awkward_table):
     """Every bucket holds a delta, so every file is resolved: the key
     predicate must reach each of those scans (parquet row-group skipping,
-    and only the keys' versions enter the resolving shuffle), not sit
+    and only the keys' versions enter the resolving aggregate), not sit
     above the resolving aggregate."""
     t, full = awkward_table
     assert set(t.delta_file_counts()) == set(range(N_AWK_BUCKETS))
@@ -336,14 +331,14 @@ def test_key_predicates_reach_the_dirty_file_scans(spark, awkward_table):
     assert set(AWKWARD_KEYS) - set(full) == {AWKWARD_KEYS[1]}
     live = sorted(full)
     keys = live[::4][:10]
-    scans = _file_scans(t.lookup(spark, keys))
+    scans = file_scans(t.lookup(spark, keys))
     assert scans
     for scan in scans:
-        assert "In(doc_id," in _pushed(scan), scan
-    scans = _file_scans(t.scan_range(spark, live[5], live[20]))
+        assert "In(doc_id," in pushed_filters(scan), scan
+    scans = file_scans(t.scan_range(spark, live[5], live[20]))
     assert scans
     for scan in scans:
-        pushed = _pushed(scan)
+        pushed = pushed_filters(scan)
         assert "GreaterThanOrEqual(doc_id," in pushed, scan
         assert "LessThanOrEqual(doc_id," in pushed, scan
 
@@ -361,6 +356,20 @@ def test_lookup_on_clean_buckets_does_not_shuffle(spark, awkward_tables):
         assert jobs == 1, (name, jobs)
         plan = executed_plan(t.lookup(spark, keys))
         assert "SortAggregate" not in plan and "Exchange" not in plan, (name, plan)
+
+
+@pytest.mark.parametrize("name", ["all_dirty", "mixed_mid_evolution"])
+def test_dirty_lookup_resolves_in_one_job(spark, awkward_tables, name):
+    """A lookup's key filter leaves a few rows per key, so the dirty
+    groups resolve them in one partition: one Spark job, no ``Exchange``,
+    the key ``In`` still in every ``FileScan``, rows as the full read's.
+    The keys reach every bucket group (clean group 0 of the mix too), an
+    awkward key, a deleted key and a missing one."""
+    t, full = awkward_tables[name]
+    keys = [k for k in sorted(full) if k.startswith("doc-")][::5][:12]
+    keys += [AWKWARD_KEYS[1], "it's", "no-such-doc"]
+    assert {bucket_of(k, N_AWK_BUCKETS) for k in keys} == set(range(N_AWK_BUCKETS))
+    assert_lookup_in_one_job(spark, t, keys, full)
 
 
 # ---------------------------------------------------------------------- #

@@ -59,6 +59,34 @@ def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def file_scans(df) -> list[str]:
+    """The ``FileScan`` lines of ``df``'s executed plan."""
+    return [ln for ln in executed_plan(df).splitlines() if "FileScan" in ln]
+
+
+def pushed_filters(scan: str) -> str:
+    """The ``PushedFilters`` list of one ``FileScan`` line."""
+    m = re.search(r"PushedFilters: \[([^\]]*)", scan)
+    return m.group(1) if m else ""
+
+
+def assert_lookup_in_one_job(spark, table, keys, full) -> None:
+    """``table.lookup(keys)`` over dirty buckets returns the full read
+    ``full`` (``{doc_id: row}``) filtered to ``keys``, in one Spark job:
+    the resolving aggregate runs with no ``Exchange`` below it, and the
+    key ``In`` is pushed into every ``FileScan``."""
+    rows, jobs = jobs_started(spark, lambda: table.lookup(spark, keys).collect())
+    got = sorted((r.asDict() for r in rows), key=lambda r: r["doc_id"])
+    assert got == [full[k] for k in sorted(set(keys)) if k in full]
+    assert jobs == 1, jobs
+    plan = executed_plan(table.lookup(spark, keys))
+    assert "SortAggregate" in plan and "Exchange" not in plan, plan
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert scans
+    for scan in scans:
+        assert "In(doc_id," in pushed_filters(scan), scan
+
+
 def sql_plans(spark, fn):
     """``fn()`` and the final executed plan (text) of each SQL execution
     it ran, in order, read from the SQL status store.  Under adaptive
